@@ -33,12 +33,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  private def session(): SparkSession =
+    GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
 
   /** `fill` — repair plan over the blocks table (one line per chunked
     * fetch request, newest-first per chain). */

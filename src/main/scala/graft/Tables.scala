@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
 object Tables {
   /** `events.ts` has been written three ways across testdata generations:
     * TIMESTAMP(NANOS) (read as a long under
-    * `spark.sql.legacy.parquet.nanosAsLong` and floor-truncated to micros),
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[GraftSession]] sets on
+    * every session, and floor-truncated to micros),
     * micros with isAdjustedToUTC=false (Spark 4 infers TIMESTAMP_NTZ), and
     * instant micros (TimestampType directly). All three normalize to
     * session-UTC TimestampType carrying the same wall-clock micros, so the
@@ -62,14 +63,13 @@ object Tables {
 
   private def loadUncached(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case org.apache.spark.sql.types.TimestampNTZType =>
-          // session timezone is UTC everywhere (builder/Verify/Bench), so
-          // this cast is the identity on the underlying micros
+          // every session comes from GraftSession, whose timezone is UTC,
+          // so this cast is the identity on the underlying micros
           raw.withColumn("ts",
             col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
@@ -127,8 +127,6 @@ object Tables {
 
   def documentsWide(spark: SparkSession, dir: String): DataFrame =
     wide(spark, dir, "documents", "doc_id")
-  def embeddingsWide(spark: SparkSession, dir: String): DataFrame =
-    wide(spark, dir, "embeddings", "vec_id")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "orders")

@@ -326,7 +326,6 @@ object Corpus {
   /** Per-doc distinct shingle sets — the shared leaf of q67 and the
     * Bloom-prefiltered q100. */
   private[graft] def shingledDocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), call_function("graft_shingles", col("text")).as("sh"))
   }

@@ -67,7 +67,6 @@ object Dedup {
     * micro-batches through this, so stream and batch decisions share one
     * kernel by construction. */
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
     docs.select(
       col("doc_id"),
       call_function("graft_shingles", col("text")).as("sh"),
@@ -294,7 +293,6 @@ object Dedup {
     * shingle re-attach at all — the whole pipeline moves fixed-width
     * integers. */
   def q87SimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val sig = Tables.documentsWide(spark, dir)
       .select(col("doc_id"),
               call_function("graft_simhash", col("text")).as("simhash"))
@@ -339,7 +337,6 @@ object Dedup {
   /** q91's detected pairs (block-bucketed candidates at Hamming ≤ 3),
     * unordered — shared with the q234 referee. */
   private[graft] def simhash64Pairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val sig = Tables.documentsWide(spark, dir)
       .select(col("doc_id"),
               call_function("graft_simhash64", col("text")).as("simhash"))
@@ -405,7 +402,6 @@ object Dedup {
     * the token-hash array. [[q30SimhashDeclarative]] keeps the pure
     * column-program form; DedupSpec asserts kernel ≡ declarative. */
   def q30Simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
               call_function("graft_simhash", col("text")).as("simhash"))
@@ -483,7 +479,6 @@ object Dedup {
     * hot-label (one dominant language/domain) regime. */
   def embeddingNearDupOn(spark: SparkSession, dir: String,
                          maxBlock: Option[Long]): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // graft_dot: codegen'd native Expression (float arrays in, double out).
     def dot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
     // Both join sides read this relation; materialize the norm prep once.
@@ -853,7 +848,6 @@ object Dedup {
     * loud on pathological merging). Verify is the q82 counting join —
     * shingle arrays never shuffle. */
   def q96ClusterPrecision(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val clusters = q42DedupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id")).localCheckpoint()
     val cpairs = clusters.select(col("cluster_id"), col("doc_id").as("doc_a"))
@@ -913,7 +907,6 @@ object Dedup {
 
   /** Norm-prepped embedding relation shared by q109/q110 (the q31 prep). */
   private def semVecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
       .withColumn("nrm", call_function("graft_dot", col("v"), col("v")))
@@ -1583,7 +1576,6 @@ object Dedup {
     * suites are thousands of rows); shingle arrays re-attach only for
     * the candidate set. */
   def q173FuzzyDecontam(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val docs = Tables.documentsWide(spark, dir)
     val corpus = docs.select(col("doc_id"), col("source"),
       call_function("graft_shingles", col("text")).as("sh"),

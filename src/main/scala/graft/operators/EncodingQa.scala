@@ -158,7 +158,6 @@ object EncodingQa {
     * fingerprint of the normalized corpus (min/max — proves both engines
     * COMPOSED to identical bytes, not merely counted alike). */
   def q198NfcAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         concat(col("text"), nfcTail(col("doc_id"))).as("t"))

@@ -1441,7 +1441,6 @@ object Multimodal {
   private val AlignBottomK = 20
 
   def q254ClipAlignStub(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val imgs = imageTable(spark, dir).withColumnRenamed("doc_id", "img_id")
     val bits = ahashBits(imgs).select(col("img_id").as("doc_id"), col("bits"))
     val e = Tables.embeddings(spark, dir)

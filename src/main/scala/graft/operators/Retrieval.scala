@@ -351,7 +351,6 @@ object Retrieval {
 
   /** q239 — fused top-[[TopK]] per probe with both source ranks. */
   def q239HybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val goldRows = evalGold(spark, dir)
     val qids = goldRows.map(_._1)
     val termPairs = goldRows.flatMap { case (q, ts) => ts.map(t => (q, t)) }
@@ -1455,7 +1454,6 @@ object Retrieval {
 
   def q271HybridFromStores(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val goldRows = evalGold(spark, dir)
     val qids = goldRows.map(_._1)
     val termPairs = goldRows.flatMap { case (q, ts) => ts.map(t => (q, t)) }

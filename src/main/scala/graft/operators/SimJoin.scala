@@ -86,13 +86,8 @@ object SimJoin {
     jaccardJoinOn(docs(spark, dir), maxDf = Some(DefaultMaxDf),
                   leafKey = Some(s"simjoin_shingles:$dir"))
 
-  private def docs(spark: SparkSession, dir: String): DataFrame = {
-    // codegen'd shingle kernel, not the interpreted HOF form — same
-    // semantics (DedupSpec pins kernel ≡ declarative); the HOF tree is
-    // ~20× slower as the leaf of this many-consumer pipeline
-    graft.functions.VectorFunctions.ensureRegistered(spark)
+  private def docs(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-  }
 
   /** The rarest-first ranked posting relation (doc_id, s, df, pos, len)
     * the set-similarity operators share — q82/q92's PPJoin and q209's
@@ -109,10 +104,12 @@ object SimJoin {
   private def rankedShingles(documents: DataFrame,
                              leafKey: Option[String]): DataFrame = {
     val spark = documents.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     def leaf(part: String)(build: => DataFrame): DataFrame =
       graft.Leaves.sharedOpt(spark, leafKey.map(_ + ":" + part),
                              fanOutKey = Some("doc_id"))(build)
+    // codegen'd shingle kernel, not the interpreted HOF form — same
+    // semantics (DedupSpec pins kernel ≡ declarative); the HOF tree is
+    // ~20× slower as the leaf of this many-consumer pipeline
     val ex = leaf("postings") {
       documents.select(
         col("doc_id"),
@@ -287,7 +284,6 @@ object SimJoin {
   def weightedJaccardJoinOn(tf: DataFrame, TN: Int = WTN, TD: Int = WTD,
                             maxDf: Option[Long] = None,
                             leafKey: Option[String] = None): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(tf.sparkSession)
     val dfRel = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy(col("doc_id"))
     val ordW = wDoc.orderBy(col("df"), col("term"))
@@ -396,7 +392,6 @@ object SimJoin {
     * tf=10⁶ doc caps at its own weight); bands shuffle 3 small columns;
     * the verify join is bounded by the candidate set, not n². */
   def q97WeightedLshNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val tf = bigramTf(spark, dir)
     val elems = tf.select(col("doc_id"),
         explode(transform(sequence(lit(1), col("tf").cast("int")), i =>

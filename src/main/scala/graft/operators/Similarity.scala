@@ -29,7 +29,6 @@ object Similarity {
   private val TOP_K = 5
 
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     // Consumed twice per query (corpus side + query side): materialize the
     // norm prep once. graft_dot is the codegen'd native Expression
     // ([[graft.functions.DotProduct]]) — float arrays in, double out, so
@@ -645,7 +644,6 @@ object Similarity {
     * shuffle, no state; determinism means a re-run or a different
     * cluster produces byte-identical projections. */
   def q94JlProject(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v"))
     val ys = (0 until JlK).map { k =>
       round(dot(col("v"), typedLit(jlSigns(k))), 4).as(s"y$k")
@@ -668,7 +666,6 @@ object Similarity {
     * deployment measures whether its corpus is such a manifold before
     * trusting projected candidates. */
   def q95JlRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v"))
     val pv = array((0 until JlK).map(k =>
       round(dot(col("v"), typedLit(jlSigns(k))), 6)): _*)
@@ -722,7 +719,6 @@ object Similarity {
     * program — at 100 TB the stats pass is one partial-aggregated
     * (dim, min, max) rollup over the scan. */
   def q159Sq8Recall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -2054,7 +2050,6 @@ object Similarity {
     * bounded dimension control, the reference's schedule-loop shape. */
   private[graft] def topPcState(spark: SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]], Array[Double], Double) = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     val mu = new Array[Double](DIMS)
     e.select(posexplode(col("embedding")).as(Seq("i", "xi")))
@@ -2323,7 +2318,6 @@ object Similarity {
     * Exposed so other store-served paths (q271's dense leg) can read the
     * same persisted postings. Returns the store path. */
   private[graft] def buildIvfStore(spark: SparkSession, dir: String): String = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val e = vecs(spark, dir)
     val cent = e
       .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -2342,7 +2336,6 @@ object Similarity {
   }
 
   def q246IvfPersist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val store = buildIvfStore(spark, dir)
     // QUERY: persisted tables only
     val postings = spark.read.parquet(s"$store/postings")
@@ -2633,7 +2626,6 @@ object Similarity {
     * probed cell) served entirely from the MERGED postings — upserted
     * vectors appear as first-class candidates. */
   def q250IvfUpsertQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val store = buildUpsertStore(spark, dir)
     val postings = spark.read.parquet(s"$store/postings")
     val centroids = spark.read.parquet(s"$store/centroids")
@@ -2891,7 +2883,6 @@ object Similarity {
   private val DeleteResidue = 5L
 
   def q258IvfDeleteQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val store = buildUpsertStore(spark, dir, merges = 1)
     // tombstone append: ids only, postings untouched
     vecs(spark, dir)
@@ -3037,7 +3028,6 @@ object Similarity {
     * itself is clean. Oracle = q258's (the tombstone-visible enumeration):
     * equivalence of the two serving paths is the correctness claim. */
   def q259IvfCompactQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val store = buildCompactedStore(spark, dir)
     val postings = spark.read.parquet(s"$store/postings")
     val centroids = spark.read.parquet(s"$store/centroids")

@@ -257,7 +257,6 @@ object Sketches {
       .agg(min(coalesce(col("c"), lit(0L))).as("cms_estimate"))
 
   private def shingleOccurrences(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     Tables.documentsWide(spark, dir)
       .select(col("doc_id"),
               explode(call_function("graft_shingles", col("text"))).as("g"))

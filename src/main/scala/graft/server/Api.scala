@@ -2,7 +2,10 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.Tables
@@ -71,10 +74,15 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
   //     stand in for pool contention; budgets scale by the same factor.
   private val inFlight = new AtomicInteger(0)
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   // Concurrent executor so overlapping requests actually overlap (the JDK
   // default is a single-threaded dispatch, which would hide throttling).
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
+  // Its threads are non-daemon: [[stop]] must shut it down or the JVM
+  // cannot exit.
+  private[graft] val pool = Executors.newFixedThreadPool(16)
+  server.setExecutor(pool)
   server.createContext("/txs/search", (ex: HttpExchange) =>
     handle(ex)(p => searchTxs(p, boundedOf(ex))))
   server.createContext("/txs/events", (ex: HttpExchange) =>
@@ -95,7 +103,11 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     handle(ex)(_ => (Dto.openApiJson, Map.empty)))
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
   def boundPort: Int = server.getAddress.getPort
 
   /** CORS (Server.hs:91-96 `setCors`: simple CORS policy with the
@@ -143,13 +155,16 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
       ex.getResponseBody.write(bytes)
       ex.close()
     } catch {
-      case e: Throwable =>
-        val status = e match {
-          case Api.ApiError(s, _) => s
-          case _                  => 500
+      case NonFatal(e) =>
+        // client errors keep their message; anything else is logged here
+        // and answered with a fixed body, so no internal detail leaks
+        val (status, text) = e match {
+          case Api.ApiError(s, m) => (s, String.valueOf(m))
+          case _ =>
+            log.error(s"internal error serving ${ex.getRequestURI}", e)
+            (500, "internal error")
         }
-        val msg = s"""{"error":${Api.jstr(String.valueOf(e.getMessage))}}"""
-          .getBytes(StandardCharsets.UTF_8)
+        val msg = s"""{"error":${Api.jstr(text)}}""".getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(status, msg.length)
         ex.getResponseBody.write(msg)
         ex.close()

@@ -36,7 +36,6 @@ object NearDup {
     * the batch q29, so stream candidates are a subset of batch candidates
     * by construction. */
   def bands(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(docs.sparkSession)
     docs
       .withColumn("m", call_function("graft_minhash", col("text"), lit(8)))
       .select(col("doc_id"), col("ts"),

@@ -4,19 +4,11 @@ import java.nio.file.Files
 
 import graft.ingest.{Flatten, Upsert}
 import graft.operators.AccountHistory
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end flagship slice (SURVEY §7.1.4): ingest fixture → 6 tables →
   * account history with ordering, decoration, and x-chain resolution. */
-class AccountHistorySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AccountHistorySpec extends AnyFunSuite with SparkSpec {
 
   test("alice's coin history: ordering, block time, x-chain target") {
     import spark.implicits._

@@ -4,7 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.server.Api
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture rows for the account-endpoint contract tests (top level so the
@@ -22,14 +21,7 @@ case class AcctBlk(hash: String, creationtime: java.sql.Timestamp)
   * params, orphan-fork-twin completeness (the round-9 cursor-uniqueness
   * contract applied to the transfers cursor), page-only extras decoration,
   * and the CORS middleware (Server.hs:91-96). */
-class ApiAccountSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApiAccountSpec extends AnyFunSuite with SparkSpec {
 
   private val client = HttpClient.newHttpClient()
   private def get(url: String): HttpResponse[String] =

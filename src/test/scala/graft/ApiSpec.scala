@@ -4,22 +4,13 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.server.Api
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Serving-layer contract: paging /txs/events with the Graft-Next
   * continuation header enumerates exactly the unbounded ordered result —
   * the reference's Chainweb-Next behavior (Server.hs:239-246,484-491). */
-class ApiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApiSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
   private val client = HttpClient.newHttpClient()
@@ -431,5 +422,27 @@ class ApiSpec extends AnyFunSuite {
       // several part files), so the committed count strictly grows
       assert(count1 > count0)
     } finally api.stop()
+  }
+
+  test("an internal failure is a 500 with a fixed body that echoes no " +
+       "exception text") {
+    val missing = "/nonexistent/graft-api-data"
+    val text = intercept[Exception](Tables.events(spark, missing)).getMessage
+    val api = new Api(spark, missing, 0)
+    api.start()
+    try {
+      val r = get(s"http://localhost:${api.boundPort}/txs/events?search=click")
+      assert(r.statusCode() === 500)
+      assert(r.body() === """{"error":"internal error"}""")
+      assert(!r.body().contains(text) && !r.body().contains(missing))
+    } finally api.stop()
+  }
+
+  test("stop() terminates the request thread pool") {
+    val api = new Api(spark, sf, 0)
+    api.start()
+    try assert(get(s"http://localhost:${api.boundPort}/txs/recent").statusCode() === 200)
+    finally api.stop()
+    assert(api.pool.isTerminated)
   }
 }

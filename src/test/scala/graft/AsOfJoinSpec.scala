@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,14 +10,7 @@ import scala.util.Random
 /** The distributed big-big as-of join: equivalence against the obvious
   * (non-scalable) per-key union-window construction on adversarial random
   * data, plus the plan shapes that make it survive 100 TB. */
-class AsOfJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
 
   /** Reference implementation: union both sides, one window per key —
     * correct by construction, serializes per key (the plan [[AsOfJoin

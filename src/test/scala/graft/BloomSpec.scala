@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Bloom, Corpus}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * negatives (so the prefiltered exact join is IDENTICAL to q67), and the
   * codegen'd `graft_bloom_test` kernel agrees with a declarative
   * bit-membership re-expression on every probe. */
-class BloomSpec extends AnyFunSuite {
+class BloomSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q100 output is row-for-row identical to q67") {
     val plain = Corpus.q67Decontaminate(spark, dir).collect().toSeq

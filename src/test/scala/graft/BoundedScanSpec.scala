@@ -2,22 +2,13 @@ package graft
 
 import graft.plans.BoundedScan
 import graft.plans.BoundedScan.{Continuation, CursorSpec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The core correctness contract of the pagination engine
   * (chainweb-data BoundedScan.hs:175-254): paging through with ANY scan
   * budget must enumerate exactly the unbounded ordered result. */
-class BoundedScanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BoundedScanSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
   private val spec = CursorSpec(Seq("user_id" -> true, "event_id" -> true))

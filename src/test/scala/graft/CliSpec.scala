@@ -2,21 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI dispatch parity (exec/Main.hs:51-105): every subcommand handler is
   * exercised on fixture tables — fill, single, fill-events,
   * backfill-transfers, migrate run/check. `Main.main` itself only wires
   * stdout/exit codes around these handlers. */
-class CliSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CliSpec extends AnyFunSuite with SparkSpec {
 
   private def tmpTables(): String =
     Files.createTempDirectory("graft-cli").toString

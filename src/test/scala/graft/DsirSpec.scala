@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.Corpus
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSIR importance-weighting (q111/q112) properties: score positivity,
   * the weighted-mean identity tying doc scores back to the bucket table,
   * the discrimination readout (target language on top), and the
   * broadcast plan shape that keeps the weight table corpus-size-free. */
-class DsirSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DsirSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-dump tool (test scope). Two modes:
   *  - default: print SimpleMode plans for a few audit queries (historic use)
@@ -7,18 +6,13 @@ import org.apache.spark.sql.SparkSession
   *    `<dir>/<query>_<suffix>.txt` with explain("formatted") for each query
   *    in AUDIT_QUERIES — the optimization-round deliverable
   *    (plans/r13/<query>_{before,after}.txt).
-  * Session config mirrors graft.Bench (extensions, shuffle partitions,
-  * UTC, nanosAsLong) so the dumped plan is the benched plan.
+  * The session comes from GraftSession, as graft.Bench's does, so the
+  * dumped plan is the benched plan.
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftSession(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = sys.env.get("AUDIT_QUERIES").map(_.split(",").toSeq).getOrElse(

@@ -7,21 +7,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.ingest.{Fetch, Flatten, Upsert}
 import graft.plans.{Gaps, RangePlan}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end batch repair (S2/S3): a mock chainweb node serving
   * `blocksBetween` (Lookups.hs:102-139 URL + response contract), a blocks
   * table with a deliberate hole, and `Fetch.fill` running the full
   * plan → fetch → flatten → merge lifecycle until the gap query is empty. */
-class FetchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FetchSpec extends AnyFunSuite with SparkSpec {
 
   /** Mock node: GET /chainweb/0.0/test/chain/{cid}/block?minheight&maxheight
     * answers from the parametrized fixtures; also records request URLs and

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.ingest.{Flatten, Upsert}
 import graft.streaming.Listen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * coinbase 'cb' sentinel, qualname namespace composition, TRANSFER shape
   * filter, amount cascade, signer×sig zip, exec/cont + good/bad splits,
   * and idempotent PK merge (replay = no-op). */
-class IngestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IngestSpec extends AnyFunSuite with SparkSpec {
 
   private def flattened = {
     import spark.implicits._

@@ -3,20 +3,13 @@ package graft
 import java.sql.DriverManager
 
 import graft.operators.RichList
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S7 — JDBC richlist source against embedded Derby databases (one per
   * chain, like the reference's per-chain sqlite files): the
   * latest-row-per-key SQL is pushed down, chains union, and topBalances
   * produces the reference's aggregate-across-chains result. */
-class JdbcRichListSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JdbcRichListSpec extends AnyFunSuite with SparkSpec {
 
   private val Table = "\"coin_coin-table\""
 

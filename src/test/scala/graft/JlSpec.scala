@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q94 JL-projection properties: the sign matrix is deterministic and
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that catches any drift between the kernel path and the sign matrix
   * (projection of a sum = sum of projections, exactly, because every
   * op is ±1·x with double accumulation in index order). */
-class JlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JlSpec extends AnyFunSuite with SparkSpec {
 
   test("sign matrix: deterministic, ±1 only, no constant rows") {
     val s = Similarity.jlSigns
@@ -35,7 +28,6 @@ class JlSpec extends AnyFunSuite {
     val a = Array.fill(64)(rnd.nextInt(9).toFloat - 4)
     val b = Array.fill(64)(rnd.nextInt(9).toFloat - 4)
     val ab = a.zip(b).map { case (x, y) => x + y }
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val df = Seq((0L, a.toSeq), (1L, b.toSeq), (2L, ab.toSeq))
       .toDF("vec_id", "v")
     val rows = (0 until 16).foldLeft(df) { (d, k) =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,26 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * built through BoundedScan.resumePredicate) must gain the implied
   * leading-column bound — visible as a parquet PushedFilter — without
   * changing results. */
-class KeysetRuleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // sbt runs every suite in one JVM: if another suite's getOrCreate won
-    // the race, the static `spark.sql.extensions` conf above was ignored.
-    // Attach the rule through the public experimental hook too — it is a
-    // fixpoint, so being registered twice cannot stack duplicate bounds,
-    // and the spec becomes suite-order-independent.
-    if (!s.experimental.extraOptimizations.contains(graft.plans.KeysetBoundRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.KeysetBoundRule
-    s
-  }
+class KeysetRuleSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

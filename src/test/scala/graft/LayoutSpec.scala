@@ -3,19 +3,12 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Layout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The partition layout must actually prune: a height-range read over the
   * clustered table may only touch the matching (chain, bucket) leaves. */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LayoutSpec extends AnyFunSuite with SparkSpec {
 
   test("height-clustered write prunes partitions on range reads") {
     import spark.implicits._

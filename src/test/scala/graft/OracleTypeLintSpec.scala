@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,16 +25,9 @@ import scala.sys.process._
   * Requires the driver toolchain's python3+duckdb; if absent the suite
   * cancels (it cannot weaken into a green pass).
   */
-class OracleTypeLintSpec extends AnyFunSuite {
+class OracleTypeLintSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val duckAvailable: Boolean =
     try Seq("python3", "-c", "import duckdb").! == 0

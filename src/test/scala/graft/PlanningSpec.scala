@@ -3,20 +3,13 @@ package graft
 import graft.operators.RichList
 import graft.plans.{Gaps, RangePlan}
 import graft.plans.RangePlan.Range
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports of the reference's own unit fixtures (SURVEY §5:
   * test/Chainweb/Data/Test/Backfill.hs — 10-chain plans, 20-chain
   * pre-fork consistency, genesis clamping at the 852_054 transition) plus
   * gap detection and the richlist pipeline. */
-class PlanningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanningSpec extends AnyFunSuite with SparkSpec {
 
   // mainnet01-shaped graph: chains 0-9 from genesis 0, chains 10-19 fork
   // in at 852_054 (the reference's fixture heights).

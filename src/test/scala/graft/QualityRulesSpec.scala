@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.TextOps
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q113 rule-report consistency: the 'any' row must bracket the
   * individual rules (max ≤ any ≤ sum), every rule must actually fire on
   * the fixture (a rule nothing can fail measures nothing), and the
   * report's denominators agree. */
-class QualityRulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityRulesSpec extends AnyFunSuite with SparkSpec {
 
   test("q113 report is internally consistent and every rule fires") {
     val rows = TextOps.q113QualityRules(spark, "/root/testdata/sf0.001")

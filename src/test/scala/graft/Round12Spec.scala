@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-vacuous engagement), the text-index build's stats-from-TF single
   * pass, the q264 build/serve bench split, and the function-registry
   * re-entry guard. */
-class Round12Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round12Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -70,16 +62,16 @@ class Round12Spec extends AnyFunSuite {
     assert(rows.nonEmpty && rows === full)
   }
 
-  test("ensureRegistered is re-entry-guarded: the second call is a no-op " +
-       "and graft_* functions still resolve") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val reg = spark.sessionState.functionRegistry
-    val before = reg.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val after = reg.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet
-    assert(before === after && before.contains("graft_gram"))
+  test("every GraftFunctions entry resolves and KeysetBoundRule runs") {
+    // on the shared GraftSession session: the table is registered once,
+    // by GraftExtensions, and the optimizer carries the keyset rule
+    val missing = graft.functions.GraftFunctions.all.map(_._1)
+      .filterNot(spark.sessionState.functionRegistry.functionExists)
+    assert(missing.isEmpty, s"unregistered: $missing")
     val d = spark.sql("SELECT graft_dot(array(1.0D,2.0D), array(3.0D,4.0D))")
-      .first().getDouble(0)
-    assert(d === 11.0)
+    assert(d.first().getDouble(0) === 11.0)
+    val qe = d.queryExecution
+    qe.optimizedPlan
+    assert(qe.tracker.rules.contains(graft.plans.KeysetBoundRule.ruleName))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * store existence (ADVICE r12). The grid-vs-ungridded EQUALITY pin
   * lives in Round12Spec (unchanged and now exercising fast-vs-grid); the
   * replica-scale equivalence audit is graft.ScaleEquiv, wired into
-  * tools/round13_measure.sh. */
-class Round13Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  * tools/measure.sh. */
+class Round13Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,14 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     size(slice(t, cs+1, L)) = least(L, size(t) − cs) for every
   *     chunk_start the stride sequence generates (0 ≤ cs < size(t)).
   */
-class Round13bSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round13bSpec extends AnyFunSuite with SparkSpec {
 
   test("term_ppm long decomposition equals the DECIMAL(38,0) form across " +
        "the tfn saturation range and the idf int64 magnitude sweep") {

@@ -1,22 +1,13 @@
 package graft
 
 import graft.operators.{Corpus, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-3 operators: TF-IDF, k-means iteration, hyperplane-LSH ANN,
   * bigram LM. Correctness is oracle-checked by the driver; these tests pin
   * the INVARIANTS and the plan shapes that make the operators scale. */
-class Round3Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round3Spec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

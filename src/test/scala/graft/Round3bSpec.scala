@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Corpus, Dedup, RangeJoin, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import scala.util.Random
 /** Round-3 additions beyond the as-of join: range join, boilerplate
   * ratio, chunking, stop-strip, incremental dedup. Oracle-checked by the
   * driver; these tests pin invariants, equivalences, and plan shapes. */
-class Round3bSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round3bSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{SimJoin, TextOps, TrainPrep}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the training-prep trio (epoch shuffle, int8 quantization, padding
   * waste). Oracle-checked by the driver; these tests pin the lossless-
   * filtering property, determinism, and value-range invariants. */
-class Round3cSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round3cSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 
@@ -124,7 +115,6 @@ class Round3cSpec extends AnyFunSuite {
   test("q87 pigeonhole pairing ≡ naive all-pairs popcount") {
     val fast = graft.operators.Dedup.q87SimhashPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val sig = Tables.documents(spark, dir)
       .select(col("doc_id"), call_function("graft_simhash", col("text")).as("s"))
     val naive = sig.select(col("doc_id").as("a"), col("s").as("sa"))
@@ -140,7 +130,6 @@ class Round3cSpec extends AnyFunSuite {
   test("q91 64-bit pigeonhole pairing ≡ naive popcount (incl. sign bit)") {
     val fast = graft.operators.Dedup.q91Simhash64Pairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val sig = Tables.documents(spark, dir)
       .select(col("doc_id"), call_function("graft_simhash64", col("text")).as("s"))
     // fingerprints with the sign bit set must round-trip the block split

@@ -1,23 +1,15 @@
 package graft
 
 import graft.operators.{Corpus, Sketches}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-4 property tests: the histogram-median sketch's by-construction
   * error bound and the hash-priority sample's reproducibility/extension
   * contracts. */
-class Round4Spec extends AnyFunSuite {
+class Round4Spec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("histogram median bin always contains the exact median") {
     val rows = Sketches.q102HistMedian(spark, dir).collect()

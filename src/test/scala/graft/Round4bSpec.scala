@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Corpus, Dedup, Sketches, Snapshot, TrainPrep}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the sample-quantile sketch's exactness/prefix/merge contracts, the
   * novelty-curve conservation law, water-filling invariants, and the
   * dup-burden consistency with the verified pair set. */
-class Round4bSpec extends AnyFunSuite {
+class Round4bSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- q120 snapshot diff ------------------------------------------------
 

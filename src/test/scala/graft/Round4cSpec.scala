@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Corpus, TrainPrep}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * boundary rule (q131), the temperature-quota conservation and
   * flattening laws (q132), and the epoch-plan repeat-cap accounting
   * (q133). */
-class Round4cSpec extends AnyFunSuite {
+class Round4cSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- q131 perplexity buckets ------------------------------------------
 

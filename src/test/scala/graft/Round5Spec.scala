@@ -1,24 +1,15 @@
 package graft
 
 import graft.operators.{Bpe, Pii}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 property tests: the BPE merge-pass fixpoint claim (q146), PII
   * detector specificity / redaction completeness and idempotence
   * (q144/q145), and the one-exchange plan shape of the PII aggregates. */
-class Round5Spec extends AnyFunSuite {
+class Round5Spec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- q146 BPE ----------------------------------------------------------
 

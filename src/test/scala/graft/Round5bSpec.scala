@@ -1,23 +1,15 @@
 package graft
 
 import graft.operators.{Dedup, EncodingQa, TextOps, UrlOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 second-half property tests: PageRank mass conservation (q152),
   * encoding-QA detector specificity (q153), and canonical-selection keeper
   * invariants against a driver-side naive recomputation (q154). */
-class Round5bSpec extends AnyFunSuite {
+class Round5bSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- q152 PageRank -----------------------------------------------------
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Corpus, Similarity, Sketches, TextOps, TrainPrep, UrlOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * segment-dedup rewrite equivalence against a driver-side naive
   * recomputation (q161), and the refine-dominates-ADC recall invariant
   * (q162). */
-class Round5cSpec extends AnyFunSuite {
+class Round5cSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- q160 KMV set operations ------------------------------------------
 

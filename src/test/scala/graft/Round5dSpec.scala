@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Lexicon
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Mann–Whitney U statistic (q167), and the hashed classifier's
   * structural + above-chance-learning invariants (q168), plus the
   * integer-division-parity pin the Lexicon scaladoc claims. */
-class Round5dSpec extends AnyFunSuite {
+class Round5dSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- division-semantics pin (used by q167/q168 oracles) ---------------
 

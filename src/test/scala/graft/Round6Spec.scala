@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 codec-surface tests: the GIF leg of the real image path (q182)
@@ -9,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * codec — runs through the same real encode → decode → resample path
   * with its loss bounded (the reason it is pinned here instead of an
   * exact DuckDB oracle). */
-class Round6Spec extends AnyFunSuite {
+class Round6Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q182 GIF decode emits exactly q140's pixel features " +
        "(same formulas, third lossless codec)") {

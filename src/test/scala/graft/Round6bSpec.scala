@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.SimJoin
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared-leaf (persisted-postings) mode: under `spark.graft.shareLeaves`
@@ -10,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * BIT-IDENTICAL results — the flag moves where a deterministic relation
   * lives (parquet vs per-call localCheckpoint), never what it contains —
   * plus actual reuse (the second consumer must not rebuild). */
-class Round6bSpec extends AnyFunSuite {
+class Round6bSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

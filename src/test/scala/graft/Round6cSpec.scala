@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Dedup, Integrity, Releases, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition both releases with closed-form counts, kappa replays from the
   * confusion matrix, and the LSH sweep's configs order the way banding
   * theory says they must. */
-class Round6cSpec extends AnyFunSuite {
+class Round6cSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q188 integrity: clean corpus proves zero violations; every " +
        "corruption class fires on a corrupted copy") {

@@ -1,23 +1,15 @@
 package graft
 
 import graft.operators.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 distributional audits: the percentile gate's bounds/counts and
   * the Simpson concentration numbers replay exactly from driver-side
   * brute force over the collected corpus. */
-class Round6dSpec extends AnyFunSuite {
+class Round6dSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val docs: Seq[(String, String)] =
     Tables.documents(spark, dir).select(col("source"), lower(col("text")))

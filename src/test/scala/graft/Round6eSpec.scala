@@ -1,22 +1,14 @@
 package graft
 
 import graft.operators.{Corpus, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 third batch: hubness conservation laws and a full driver-side
   * replay of the memorization probe. */
-class Round6eSpec extends AnyFunSuite {
+class Round6eSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q196 hubness: histogram conserves the corpus and the retrieval " +
        "mass; 0-bucket present") {

@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.{Multimodal, TrainPrep}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 fourth batch: audio segmentation and span-corruption replays. */
-class Round6fSpec extends AnyFunSuite {
+class Round6fSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q204 audio segments replay from the sample formula; both " +
        "activity classes occur; run bounds hold") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,17 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * leaf, q184's verified ⊆ truth invariant under the integer criterion,
   * and the streaming incremental-dedup screen (micro-batches vs persisted
   * MinHash state, replay no-op). */
-class Round7Spec extends AnyFunSuite {
+class Round7Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("Leaves evicts stale-application entries on first shared access") {
     val stale = "app-died-long-ago:some_leaf"

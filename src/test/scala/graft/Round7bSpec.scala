@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,17 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * routing, centroid affinity, content-defined chunking, margin mining —
   * invariant pins + the scale plan shapes (two-phase rank, bounded
   * broadcasts, no cartesian pair generators). */
-class Round7bSpec extends AnyFunSuite {
+class Round7bSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---------------------------------------------------------------- q219
 

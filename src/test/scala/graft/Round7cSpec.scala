@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 third batch pins: the `graft_gram` TypedImperativeAggregate
   * (kernel ≡ exploded spelling, no Generate in the plan) and the q228
   * projection audit's centering/consistency invariants. */
-class Round7cSpec extends AnyFunSuite {
+class Round7cSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def r6(x: Double): Double =
     java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
@@ -25,7 +16,6 @@ class Round7cSpec extends AnyFunSuite {
 
   test("graft_gram folds the same Gram matrix as the exploded outer-product " +
        "spelling, cell for cell at the 6dp contract") {
-    functions.VectorFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, dir)
     val mu = Array.fill(64)(0.25) // arbitrary non-zero center exercises μ
     val flat = e
@@ -51,7 +41,6 @@ class Round7cSpec extends AnyFunSuite {
 
   test("the Gram job is one custom aggregate over the scan — no Generate " +
        "explode, partial + final graft_gram in the plan") {
-    functions.VectorFunctions.ensureRegistered(spark)
     val df = Tables.embeddings(spark, dir)
       .agg(call_function("graft_gram", col("embedding"),
         typedLit(Array.fill(64)(0.0).toSeq)))

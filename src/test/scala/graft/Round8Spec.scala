@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * applied to the funnel's contaminated-id set) and the q42 driver-cap
   * override that lets the scale curve exercise the distributed
   * pointer-jumping CC branch. */
-class Round8Spec extends AnyFunSuite {
+class Round8Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("idProbe broadcasts under the cap and falls back to a shuffle " +
        "anti-join above it, with identical results") {

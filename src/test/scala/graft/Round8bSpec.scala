@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,17 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * q248 packer must respect its budget and rank-prefix contract, and
   * q237's pHash must be invariant to the encoding codec (the property
   * that makes perceptual hashing useful at all). */
-class Round8bSpec extends AnyFunSuite {
+class Round8bSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q242's fixed-point S-curve is monotone in s with exact endpoints " +
        "per banding config") {

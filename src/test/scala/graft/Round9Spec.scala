@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,17 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * haskell-src/exec/Chainweb/Gaps.hs, re-running a repair is a no-op),
   * and the retrieval-eval cap discipline driven AT the cap boundary
   * (VERDICT r8 item 5 — the q196/q104 treatment for evalGold). */
-class Round9Spec extends AnyFunSuite {
+class Round9Spec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def storedAssignment(store: String): Seq[(Long, Long)] =
     spark.read.parquet(s"$store/postings")

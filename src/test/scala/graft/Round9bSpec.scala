@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,17 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * must make that effectively-once — the stored index after streaming
   * ingest (including a replayed batch) must be bit-identical to the
   * one-shot build over base ∪ batch. */
-class Round9bSpec extends AnyFunSuite {
+class Round9bSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streaming IVF upsert: MemoryStream micro-batches with a replayed " +
        "batch converge to the one-shot index") {

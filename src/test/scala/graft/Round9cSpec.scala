@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,17 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bounds (NDCG ≤ 1, grounding ≤ 1, Hamming ≤ 64), detector soundness on
   * the raw fixture (q255: prose carries zero license markers), and
   * closed-form fixture arithmetic (q255 carrier counts = moduli math). */
-class Round9cSpec extends AnyFunSuite {
+class Round9cSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q251: Hamming within [0,64], ranks dense 1..k per query, and the " +
        "embedded exact audit agrees with q32's brute-force top-k") {

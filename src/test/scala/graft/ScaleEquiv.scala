@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-equivalence audit (round 13, VERDICT r12 item 1): the one hole
   * in the verification lattice was that the 272-query DuckDB oracle runs
@@ -28,23 +28,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   q109[grid] ≡ q109[maxCell=∞]   (grid decomposition is exact)
   *
   * Emits one JSON line (`{"scale_equiv":...}`) the measurement chain
-  * records as SCALE_EQUIV_r{N}.json; exit 1 on any violation. Wired into
-  * tools/round13_measure.sh after the replicas generate.
+  * records as SCALE_EQUIV_<tag>.json; exit 1 on any violation. Wired into
+  * tools/measure.sh after the replicas generate.
   */
 object ScaleEquiv {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("scaledata/sf03")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // share the ranked-posting leaves across the cut/uncut twins — the
-      // same relation both consume in production; results are
-      // bit-identical either way (the flag only persists the leaf)
-      .config("spark.graft.shareLeaves", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // share the ranked-posting leaves across the cut/uncut twins — the
+    // same relation both consume in production; results are
+    // bit-identical either way (the flag only persists the leaf)
+    val spark = GraftSession(s"local[$cpus]", shareLeaves = true)
     spark.sparkContext.setLogLevel("WARN")
 
     // Materialize each side once (localCheckpoint) so the two exceptAll

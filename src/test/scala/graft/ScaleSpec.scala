@@ -4,20 +4,12 @@ import java.nio.file.Files
 
 import graft.operators.Skew
 import graft.sources.Bucketing
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale strategies must be provable locally: bucketed joins plan without
   * exchanges; salted aggregation equals the direct aggregation. */
-class ScaleSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleSpec extends AnyFunSuite with SparkSpec {
 
   test("bucketed co-located join plans with zero shuffle exchanges") {
     val dir = "/root/testdata/sf0.001"
@@ -92,7 +84,6 @@ class ScaleSpec extends AnyFunSuite {
     val jl = graft.Tables.embeddings(spark, dir)
       .select(org.apache.spark.sql.functions.col("vec_id"),
               org.apache.spark.sql.functions.col("embedding").as("v"))
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val proj = jl.select(
       org.apache.spark.sql.functions.col("vec_id"),
       org.apache.spark.sql.functions.call_function("graft_dot",

@@ -1,13 +1,10 @@
 package graft
 import graft.operators.Dedup
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.extensions","graft.functions.GraftExtensions")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftSession("local[32]")
     spark.sparkContext.setLogLevel("WARN")
     val base = Tables.documents(spark, "/root/testdata/sf0.1")
     // 20x corpus (100k docs); each copy gets a distinct trailing token so

@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic-dedup (q109/q110) properties: Spark-side naive equivalence of
   * the label-blocked prune, audit-count sanity, and the plan shapes the
   * 100 TB story rests on (no cartesian in the apply; broadcast sample in
   * the audit). */
-class SemDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemDedupSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -2,20 +2,13 @@ package graft
 
 import graft.streaming.Sessions
 import graft.streaming.Sessions.{Ev, SessionRow}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful streaming sessionization: sessions close exactly at the gap
   * boundary, across micro-batches, with one open session per key in
   * state. */
-class SessionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionsSpec extends AnyFunSuite with SparkSpec {
 
   private val hourUs = 3600L * 1000000L
 
@@ -169,7 +162,6 @@ class SessionsSpec extends AnyFunSuite {
     val priorProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val dir = "/root/testdata/sf0.001"
     val occ = graft.operators.Sketches
       .q98CmsDfTopk(spark, dir) // just for probes: top exact-df shingles

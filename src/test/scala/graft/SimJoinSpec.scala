@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.SimJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stop-shingle, the cut index must (a) never emit a non-qualifying pair,
   * (b) find EVERY qualifying pair whose docs contain no shingle above the
   * cut, and (c) degenerate to the exact join when the cut doesn't bite. */
-class SimJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimJoinSpec extends AnyFunSuite with SparkSpec {
 
   /** Adversarial corpus: a boilerplate banner shared by EVERY doc (its
     * shingles' df = corpus size), plus clean near-dup pairs and clean
@@ -178,7 +170,6 @@ class SimJoinSpec extends AnyFunSuite {
     // brute-force the naive join AND per-doc max df; every qualifying
     // pair where BOTH docs are entirely below the cut must be in the cut
     // output (the formal guarantee, stronger than the planted case above)
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val docs = corpus()
     val cutVal = 10L
     val sh = docs.select(col("doc_id"),
@@ -211,7 +202,6 @@ class SimJoinSpec extends AnyFunSuite {
     // below their (over-)estimated df, and check the cut join still finds
     // every clean qualifying pair. CMS overestimates ONLY, so cutting at
     // "estimate >= cut" can never let a true stop-shingle through.
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import graft.operators.Sketches
     val docs = corpus()
     val sh = docs.select(col("doc_id"),

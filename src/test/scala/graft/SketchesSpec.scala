@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Sketches
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tighten-with-m property on the same data. The q86/q90 m = 64
   * configuration is oracle-checked by the driver; this spec is what
   * justifies turning the `bucketBits` knob at 100 TB. */
-class SketchesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchesSpec extends AnyFunSuite with SparkSpec {
 
   test("alphaM matches Flajolet's table and closed form") {
     assert(Sketches.alphaM(4) == 0.673)
@@ -86,7 +78,6 @@ class SketchesSpec extends AnyFunSuite {
   test("CMS estimate >= exact for EVERY key, and within the eN band " +
        "for every fixture shingle") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val occ = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(explode(call_function("graft_shingles", col("text"))).as("g"))
     val n = occ.count()
@@ -172,7 +163,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("CMS cells are linear: per-source sketches summed == global sketch") {
     import spark.implicits._
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("source"),
               explode(call_function("graft_shingles", col("text"))).as("g"))

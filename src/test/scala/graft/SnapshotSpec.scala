@@ -6,20 +6,13 @@ import graft.ingest.Upsert
 import graft.plans.BoundedScan
 import graft.plans.BoundedScan.CursorSpec
 import graft.sources.Snapshots
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Version-pinned snapshot isolation (Server.hs:600 REPEATABLE READ
   * parity): a paged bounded scan pinned to one manifest enumerates exactly
   * that version's unbounded result even while concurrent merges append. */
-class SnapshotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotSpec extends AnyFunSuite with SparkSpec {
 
   private def rows(ids: Seq[Long]) = {
     import spark.implicits._
