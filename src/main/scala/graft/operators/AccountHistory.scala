@@ -23,7 +23,8 @@ object AccountHistory {
 
   /** Bounded-scan SOURCE for `/txs/account` (Queries.hs:246-269
     * `transfersSearchSource`): the union of the two indexed account scans
-    * (each prunes on its own account clustering), height-range guarded.
+    * (each prunes on its own account clustering), height-range guarded
+    * ([[ChainTime.heightRange]]).
     * Token/chain conditions are deliberately NOT here — they are the
     * filter-mark predicate ([[predicate]]), so scanned-but-unmatched rows
     * still consume scan budget exactly like the reference's
@@ -31,12 +32,9 @@ object AccountHistory {
   def source(spark: SparkSession, tableDir: String, account: String,
              minHeight: Option[Long] = None,
              maxHeight: Option[Long] = None): DataFrame = {
-    val transfers = graft.sources.Snapshots
-      .readPinned(spark, s"$tableDir/transfers")
-    val ranged = Seq(
-      minHeight.map(h => col("height") >= h),
-      maxHeight.map(h => col("height") <= h)
-    ).flatten.foldLeft(transfers)(_ filter _)
+    val ranged = ChainTime.heightRange(
+      graft.sources.Snapshots.readPinned(spark, s"$tableDir/transfers"),
+      minHeight, maxHeight)
     ranged.filter(col("from_acct") === account)
       .unionAll(ranged.filter(col("to_acct") === account))
   }

@@ -2,6 +2,9 @@ package graft.operators
 
 import java.time.Instant
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
 /** Height ↔ time conversion (SURVEY §2.8 F9 — chainweb-data
   * exec/Chainweb/Coins.hs:162-176 `dateToHeight`/`heightToDate`: the chain
   * produces one block per 30s per chain, so height is an affine clock).
@@ -17,4 +20,11 @@ object ChainTime {
 
   def dateToHeight(t: Instant): Long =
     math.max(0L, (t.getEpochSecond - Genesis.getEpochSecond) / BlockIntervalSeconds)
+
+  /** Optional height-range guard (P2 — Queries.hs:52-60) of every search
+    * source: `minHeight <= height <= maxHeight`, each bound optional. */
+  def heightRange(df: DataFrame, minHeight: Option[Long], maxHeight: Option[Long]): DataFrame =
+    Seq(minHeight.map(h => col("height") >= h),
+        maxHeight.map(h => col("height") <= h))
+      .flatten.foldLeft(df)(_ filter _)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Continuation (pact) history — the reference's recursive-CTE join
@@ -11,208 +11,90 @@ import org.apache.spark.sql.functions._
   * Spark has no recursive CTE; pact chains are short (multi-step defpacts,
   * ≤ ~10), so a bounded iterative join with per-iteration checkpoints is
   * faithful and scale-safe (SURVEY §7.3.1) — each step is one equi-join
-  * on requestkey, and the frontier only shrinks.
+  * on the node id, and the frontier only shrinks. [[resolveCode]] is the
+  * one walk; [[chains]] runs it over the ingested transactions and q63
+  * ([[TxSearch.q63SearchChainCode]]) over the synthetic events.
   */
 object ContHistory {
 
   /** For every continuation tx: the ancestor chain (self first, root
-    * last) and the chain's code (first non-null walking up). */
+    * last) and the chain's code (first non-null walking up). The walk runs
+    * over ONE node per request key: orphan fork twins carry the same
+    * request key (and so the same command), and a node per copy would
+    * multiply every chain through a twin. */
   def chains(spark: SparkSession, tableDir: String, maxDepth: Int = 25): DataFrame = {
-    val tx = spark.read.parquet(s"$tableDir/transactions")
-      .select(col("requestkey"), col("pactid"), col("code"))
-      .localCheckpoint()
-
-    // One checkpoint (= one eager job) per round, on `stepped` only: the
-    // terminal rows and the next frontier are LAZY filters over that
-    // materialized round, and the `done` accumulator is a lazy union of
-    // those filters — halving the per-round scheduling round-trips (which
-    // dominate this latency-sensitive loop on a real cluster too).
-    var frontier = tx.filter(col("pactid").isNotNull)
-      .select(col("requestkey").as("seed"),
-              array(struct(lit(0L).as("depth"), col("requestkey").as("rk"))).as("chain"),
-              col("code").as("chain_code"),
-              col("pactid").as("next"))
-    var done = frontier.filter(lit(false))
-
-    // ONE job per round: the checkpoint is LAZY and the frontier-count
-    // aggregate is the action that materializes it — the count both drives
-    // the loop exit and pays for the lineage cut, so no separate
-    // `isEmpty`/checkpoint jobs remain.
-    // frontierLive starts true without an isEmpty probe: a first round over
-    // an empty frontier costs what the probe itself would (a near-empty
-    // join job), so the probe is pure overhead.
-    var d = 1
-    var frontierLive = true
-    while (d <= maxDepth && frontierLive) {
-      val stepped = frontier
-        .join(tx.select(col("requestkey").as("next"), col("pactid").as("p2"),
-                        col("code").as("c2")),
-              Seq("next"), "left")
-        .select(col("seed"),
-                when(col("c2").isNotNull || col("p2").isNotNull,
-                  array_union(col("chain"),
-                    array(struct(lit(d.toLong).as("depth"), col("next").as("rk")))))
-                  .otherwise(col("chain")).as("chain"),
-                coalesce(col("chain_code"), col("c2")).as("chain_code"),
-                col("p2").as("next"),
-                (col("c2").isNotNull || col("p2").isNotNull).as("found"))
-        .localCheckpoint(eager = false)
-      val nFrontier = stepped.filter(col("next").isNotNull).count()
-      done = done.select(col("seed"), col("chain"), col("chain_code"), col("next"))
-        .unionByName(stepped.filter(col("next").isNull)
-          .select(col("seed"), col("chain"), col("chain_code"), col("next")))
-      frontier = stepped.filter(col("next").isNotNull)
-        .select(col("seed"), col("chain"), col("chain_code"), col("next"))
-      frontierLive = nFrontier > 0
-      d += 1
-    }
-    done.unionByName(frontier) // any chain deeper than maxDepth, truncated
-      .select(col("seed").as("requestkey"),
-              transform(col("chain"), _.getField("rk")).as("chain"),
-              col("chain_code"))
+    val tx = graft.sources.Snapshots.readPinned(spark, s"$tableDir/transactions")
+      .select(col("requestkey").as("id"), col("pactid").as("parent"), col("code"))
+      .dropDuplicates("id")
+    resolveCode(tx, maxDepth)
+      .select(col("seed").as("requestkey"), col("chain"), col("chain_code"))
       .orderBy(col("requestkey"))
   }
 
-  /** Generic first-non-null-code ancestor walk over ANY edge relation
-    * `nodes(id, parent, code)` — the abstract shape of the reference's
-    * recursive continuation CTE (Queries.hs:112-137): from every node with a
-    * null code and a parent, follow parent links until a node with code (or
-    * a root) is reached; return `(id, chain_code)` — one row per seed,
-    * with a null `chain_code` when the walk ends unresolved (root,
-    * dangling parent, or the `maxDepth` cap). In the real schema the
-    * walk self-terminates because exec txs have no `pactid` — the loop here
-    * terminates the same way (a resolved or parentless frontier row leaves
-    * the frontier), with per-iteration `localCheckpoint` lineage cuts. */
+  /** First-non-null-code ancestor walk over an edge relation
+    * `nodes(id, parent, code)` with one row per id — the abstract shape of
+    * the reference's recursive continuation CTE (Queries.hs:112-137). Every
+    * node with a parent is a seed; its walk starts at itself and follows
+    * parent links until a node with a code, a root, a dangling parent or
+    * the `maxDepth`-hop cap. Returns `(seed, chain, chain_code)`, one row
+    * per seed: `chain` lists the visited node ids (seed first), and
+    * `chain_code` is the code the walk stopped at — null when it ended at
+    * a root, a dangling parent or the cap.
+    *
+    * One Spark job per round: only `stepped` is checkpointed (lazily, and
+    * materialized by the frontier count that also drives the loop exit);
+    * the frontier and the resolved accumulator are lazy views over it. Two
+    * ancestor hops fuse into each round (two in-plan joins, one scheduled
+    * job): the loop is latency-bound by scheduling round-trips, not data,
+    * so halving the rounds halves its cost. An odd `maxDepth` tail runs a
+    * 1-hop round, so the depth cap is exact. */
   def resolveCode(nodes: DataFrame, maxDepth: Int = 25): DataFrame = {
     val n = nodes.select(col("id"), col("parent"), col("code")).localCheckpoint()
-    // Same one-job-per-round discipline as [[chains]]: only `stepped` is
-    // checkpointed; frontier and the resolved accumulator are lazy views.
-    var frontier = n.filter(col("code").isNull && col("parent").isNotNull)
-      .select(col("id").as("seed"), col("parent").as("cur"))
-    var resolved = frontier.filter(lit(false))
-      .select(col("seed"), lit(null).cast("string").as("chain_code"))
-    // Same one-JOB-per-round fusion as [[chains]]: lazy checkpoint,
-    // materialized by the frontier-count action. TWO ancestor hops fuse
-    // into each round (two in-plan joins, one scheduled job): the loop is
-    // latency-bound by scheduling round-trips, not data, so halving the
-    // rounds halves its cost while keeping the shrinking-frontier cost
-    // model (contrast [[resolveCodeDoubling]], which walks the full node
-    // set to get log-depth). An odd maxDepth tail runs a 1-hop round, so
-    // the depth-cutoff contract is unchanged.
+    def hop(cur: String, parent: String, code: String, hit: String) =
+      n.select(col("id").as(cur), col("parent").as(parent), col("code").as(code),
+               lit(true).as(hit))
+    // a join hit appends the visited node; a miss (dangling parent) ends
+    // the walk without it
+    def visit(chain: Column, hit: String, node: String) =
+      when(col(hit), concat(chain, array(col(node)))).otherwise(chain)
+    val seeds = n.filter(col("parent").isNotNull)
+      .select(col("id").as("seed"), array(col("id")).as("chain"),
+              col("code").as("chain_code"), col("parent").as("cur"))
+    var resolved = seeds.filter(col("chain_code").isNotNull)
+      .select(col("seed"), col("chain"), col("chain_code"))
+    var frontier = seeds.filter(col("chain_code").isNull)
+      .select(col("seed"), col("chain"), col("cur"))
     var d = 0
-    var frontierLive = true // see [[chains]]: no isEmpty probe
+    // no isEmpty probe: a first round over an empty frontier costs what
+    // the probe itself would
+    var frontierLive = true
     while (d < maxDepth && frontierLive) {
       val hops = math.min(2, maxDepth - d)
-      val hop1 = frontier
-        .join(n.select(col("id").as("cur"), col("parent").as("p2"),
-                       col("code").as("c2")),
-              Seq("cur"), "left")
+      val hop1 = frontier.join(hop("cur", "p2", "c2", "h2"), Seq("cur"), "left")
       val stepped = (if (hops == 2)
-        hop1.join(n.select(col("id").as("p2"), col("parent").as("p3"),
-                           col("code").as("c3")),
-                  Seq("p2"), "left")
+        hop1.join(hop("p2", "p3", "c3", "h3"), Seq("p2"), "left")
       else
         hop1.withColumn("p3", lit(null).cast(hop1.schema("p2").dataType))
-            .withColumn("c3", lit(null).cast("string")))
+            .withColumn("c3", lit(null).cast("string"))
+            .withColumn("h3", lit(null).cast("boolean")))
         .localCheckpoint(eager = false)
       val cont1 = col("c2").isNull && col("p2").isNotNull // hop1 didn't end it
       val cont2 = col("c3").isNull && col("p3").isNotNull // hop2 didn't either
-      val nFrontier = stepped
-        .filter(if (hops == 2) cont1 && cont2 else cont1).count()
-      // terminal: found a code, or hit a root / dangling parent — at
-      // either hop (c2/c3 is null in the root/dangling case, matching the
-      // single-hop semantics exactly)
-      resolved =
-        if (hops == 2) resolved
-          .unionByName(stepped.filter(!cont1)
-            .select(col("seed"), col("c2").as("chain_code")))
-          .unionByName(stepped.filter(cont1 && !cont2)
-            .select(col("seed"), col("c3").as("chain_code")))
-        else resolved
-          .unionByName(stepped.filter(!cont1)
-            .select(col("seed"), col("c2").as("chain_code")))
-      frontier =
-        if (hops == 2) stepped.filter(cont1 && cont2)
-          .select(col("seed"), col("p3").as("cur"))
-        else stepped.filter(cont1)
-          .select(col("seed"), col("p2").as("cur"))
+      val live = if (hops == 2) cont1 && cont2 else cont1
+      val chain1 = visit(col("chain"), "h2", "cur")
+      val chain2 = visit(chain1, "h3", "p2") // chain1 after a 1-hop round
+      val nFrontier = stepped.filter(live).count()
+      resolved = resolved.unionByName(stepped.filter(!cont1)
+        .select(col("seed"), chain1.as("chain"), col("c2").as("chain_code")))
+      if (hops == 2) resolved = resolved.unionByName(stepped.filter(cont1 && !cont2)
+        .select(col("seed"), chain2.as("chain"), col("c3").as("chain_code")))
+      frontier = stepped.filter(live)
+        .select(col("seed"), chain2.as("chain"), col(if (hops == 2) "p3" else "p2").as("cur"))
       frontierLive = nFrontier > 0
       d += hops
     }
-    // cap-truncated seeds (still walking at maxDepth) emit as unresolved —
-    // ONE row per seed, null chain_code, the same total contract the
-    // doubling variant's left join produces (Round3cSpec compares the
-    // FULL row sets of both variants, nulls included)
+    // seeds still walking at the cap end unresolved: one row per seed
     resolved.unionByName(
-      frontier.select(col("seed"), lit(null).cast("string").as("chain_code")))
-  }
-
-  /** [[resolveCode]] by POINTER DOUBLING — identical contract (same
-    * `maxDepth` cutoff semantics, proven equivalent in Round3cSpec), but
-    * rounds scale with log2(chain length) instead of chain length: every
-    * node carries a segment summary `(ptr, acc, dist, foundd)` — jump
-    * target, first non-null code in the examined segment, segment length,
-    * and the 1-based distance the code was found at — and each round
-    * composes a node's summary with its jump target's (the associative
-    * combine of the parallel list-ranking formulation). ⌈log2(maxDepth)⌉
-    * rounds always suffice: a segment either ends, finds a code, or grows
-    * to 2^r ≥ maxDepth, after which the depth filter decides. Per round:
-    * one self-join shuffle on node id over the narrow state relation; the
-    * count that drives the exit also materializes the round's lazy
-    * checkpoint (the [[chains]] one-job-per-round discipline).
-    *
-    * The loop variant's cost model wins when chains are short (pact
-    * multi-steps: ≤ ~10) and walkers are a minority — its frontier
-    * shrinks per round while this walks ALL nodes every round; measured
-    * at the fixture scale the loop is ~20% faster, so it stays the
-    * default (q63). Doubling is the escape hatch the loop lacks: chain
-    * length enters only as log2, so a pathological deep-chain workload
-    * (or a latency budget counted in scheduling round-trips on a busy
-    * cluster) flips the choice. */
-  def resolveCodeDoubling(nodes: DataFrame, maxDepth: Int = 25): DataFrame = {
-    val n = nodes.select(col("id"), col("parent"), col("code")).localCheckpoint()
-    // state(u) summarizes the segment of ancestors (u exclusive] … [ptr
-    // exclusive): acc = first code among them, foundd = its distance from
-    // u (parent = 1), dist = segment length, ptr = next unexamined node.
-    // Init = the one-step segment {parent}… realized lazily: state over
-    // ALL nodes with the self-segment {u}, consumed via the parent join at
-    // the end (seed's answer = its parent's state).
-    var state = n.select(
-      col("id"),
-      when(col("code").isNull, col("parent")).as("ptr"), // found ⇒ stop
-      col("code").as("acc"),
-      lit(1L).as("dist"),
-      when(col("code").isNotNull, lit(1L)).as("foundd"))
-    var r = 0
-    var live = 1L
-    val rounds = math.max(1, 32 - Integer.numberOfLeadingZeros(maxDepth - 1)) // ⌈log2⌉
-    while (r < rounds && live > 0) {
-      val hop = state.select(col("id").as("ptr"), col("acc").as("acc2"),
-                             col("dist").as("dist2"), col("foundd").as("foundd2"),
-                             col("ptr").as("ptr2"))
-      val stepped = state.join(hop, Seq("ptr"), "left")
-        .select(
-          col("id"),
-          // join miss (dangling parent / end of relation) ⇒ path ends
-          when(col("acc").isNull && col("dist2").isNotNull, col("ptr2")).as("ptr"),
-          coalesce(col("acc"), col("acc2")).as("acc"),
-          when(col("dist2").isNotNull, col("dist") + col("dist2"))
-            .otherwise(col("dist")).as("dist"),
-          coalesce(col("foundd"),
-                   col("dist") + col("foundd2")).as("foundd"))
-        .localCheckpoint(eager = false)
-      live = stepped.filter(col("ptr").isNotNull && col("acc").isNull
-                            && col("dist") < maxDepth).count()
-      state = stepped
-      r += 1
-    }
-    // a seed's walk starts at its parent; distances beyond maxDepth are
-    // invisible to the bounded walk (reference recursion cap)
-    n.filter(col("code").isNull && col("parent").isNotNull)
-      .select(col("id").as("seed"), col("parent"))
-      .join(state.select(col("id").as("parent"),
-                         when(col("foundd") <= maxDepth, col("acc")).as("chain_code")),
-            Seq("parent"), "left")
-      .select(col("seed"), col("chain_code"))
+      frontier.select(col("seed"), col("chain"), lit(null).cast("string").as("chain_code")))
   }
 }

@@ -29,7 +29,7 @@ object EventSearch {
 
   /** Searchable source: the ingested events columns the reference's
     * EventDetail carries (Server.hs:604-617), cursor-ordered by the
-    * bounded scan. Height-range guard = P2. */
+    * bounded scan, height-range guarded ([[ChainTime.heightRange]]). */
   def source(spark: SparkSession, tableDir: String,
              minHeight: Option[Long] = None,
              maxHeight: Option[Long] = None): DataFrame = {
@@ -40,8 +40,6 @@ object EventSearch {
       .select(col("block"), col("chainid"), col("height"), col("requestkey"),
               col("idx"), col("qualname"), col("module"), col("modulehash"),
               col("paramtext"))
-    Seq(minHeight.map(h => col("height") >= h),
-        maxHeight.map(h => col("height") <= h))
-      .flatten.foldLeft(ev)((d, p) => d.filter(p))
+    ChainTime.heightRange(ev, minHeight, maxHeight)
   }
 }

@@ -44,12 +44,6 @@ object TxSearch {
   def matchCol(search: String): Column =
     coalesce(col("code_merged"), lit("")).contains(search)
 
-  /** Optional height-range guard (P2 — Queries.hs:52-60). */
-  def heightRange(df: DataFrame, minHeight: Option[Long], maxHeight: Option[Long]): DataFrame =
-    Seq(minHeight.map(h => col("height") >= h),
-        maxHeight.map(h => col("height") <= h))
-      .flatten.foldLeft(df)((d, p) => d.filter(p))
-
   // --- q63: the same search-through-continuations shape on the synthetic
   //     tables, oracle-checked. "Transactions" := events; an event is a
   //     "continuation" iff event_type = 'purchase' (code NULL, parent = the

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * Spark-first design (SURVEY.md §7.3.2): the reference's windows run
   * `ORDER BY cursor` with no PARTITION BY, which in a naive port would
   * serialize the whole table through one task. Instead we:
-  *   1. apply the keyset resume predicate FIRST — a leading-column range
-  *      filter that prunes files/row-groups at the scan (deep pages never
-  *      re-read earlier pages);
+  *   1. apply the keyset resume predicate FIRST — its leading-column
+  *      range bound ([[KeysetBoundRule]]) prunes files/row-groups at the
+  *      scan (deep pages never re-read earlier pages);
   *   2. take `limit(scanLimit)` on the cursor-ordered residue — Spark's
   *      global limit short-circuits per partition (TakeOrderedAndProject:
   *      each task produces ≤ scanLimit candidates, one small merge);
@@ -57,25 +57,19 @@ object BoundedScan {
   /** Strictly-after-cursor keyset predicate (O2 — BoundedScan.hs:256-280
     * `cursorCmp`/`tupleCmp`): row-value comparison with DESC columns
     * swapped side-wise, expanded to the composite boolean
-    * `(c1 < v1) OR (c1 = v1 AND c2 < v2) OR …` that Catalyst pushes down. */
+    * `(c1 < v1) OR (c1 = v1 AND c2 < v2) OR …`. Parquet stats cannot
+    * prune on the disjunction; the leading-column range bound they do
+    * prune on (`c1 <= v1`) is derived from it by [[KeysetBoundRule]], which
+    * every session's optimizer runs. */
   def resumePredicate(spec: CursorSpec, cursor: Seq[Column]): Column = {
     require(cursor.length == spec.cols.length, "cursor arity mismatch")
-    val orChain = spec.cols.zipWithIndex.map { case ((name, desc), i) =>
+    spec.cols.zipWithIndex.map { case ((name, desc), i) =>
       val eqPrefix = spec.cols.take(i).zipWithIndex
         .map { case ((pn, _), j) => col(pn) === cursor(j) }
         .foldLeft(lit(true))(_ && _)
       val strict = if (desc) col(name) < cursor(i) else col(name) > cursor(i)
       eqPrefix && strict
     }.reduce(_ || _)
-    // Redundant leading-column bound (implied by the OR-chain): a simple
-    // range predicate that parquet min/max stats prune on directly, so deep
-    // pages skip earlier row groups even when the full row-value OR is too
-    // complex for stats-based skipping (SURVEY §7.2's cursor rewrite, done
-    // at construction instead of a Rule).
-    val (leadName, leadDesc) = spec.cols.head
-    val leadBound = if (leadDesc) col(leadName) <= cursor.head
-                    else col(leadName) >= cursor.head
-    orChain && leadBound
   }
 
   /** The cursor-ordered, cursor-resumed, scan-budgeted residue with the

@@ -22,10 +22,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * that attribute — the bound is added as a new conjunct. Adding an implied
   * predicate never changes query results; it only enables pushdown.
   *
-  * [[BoundedScan.resumePredicate]] adds this bound manually at
-  * construction; the rule generalizes the optimization to ANY user-written
-  * keyset filter (`spark.sql` included), and is a fixpoint: once the bound
-  * is present it is never re-added.
+  * This rule is the only place the bound is made: it serves
+  * [[BoundedScan.resumePredicate]] (whose cursor values arrive as cast
+  * string literals, folded to plain literals by constant folding in the
+  * same optimizer batch) and any user-written keyset filter (`spark.sql`
+  * included) alike. It is a fixpoint: once the bound is present it is
+  * never re-added.
   */
 object KeysetBoundRule extends Rule[LogicalPlan] {
 

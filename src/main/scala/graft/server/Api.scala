@@ -9,20 +9,23 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.Tables
-import graft.operators.{Coins, TxSearch}
+import graft.operators.{AccountHistory, ChainTime, Coins, EventSearch, TxSearch}
 import graft.plans.BoundedScan
 import graft.plans.BoundedScan.{Continuation, CursorSpec}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Query-serving layer — the reference's `server` mode
   * (chainweb-data exec/Chainweb/Server.hs) over the Spark engine:
-  * search endpoints run [[BoundedScan.performBoundedScan]] with the
-  * reference's per-request budgets (scanLimit 50 000, resultLimit ≤ 250,
-  * default 10 — Server.hs:317-319), LOAD-ADAPTIVELY throttled
-  * (Server.hs:123-150: budgets scale by 1/max(1, inflight/3)), and hand
-  * back a resumable continuation in the `Graft-Next` response header (the
-  * `Chainweb-Next` contract, Server.hs:239-246).
+  * every search endpoint goes through one paging path ([[page]]) that runs
+  * [[BoundedScan.performBoundedScan]] with the reference's per-request
+  * budgets (scanLimit 50 000, resultLimit ≤ 250, default 10 —
+  * Server.hs:317-319), LOAD-ADAPTIVELY throttled (Server.hs:123-150:
+  * budgets scale by 1/max(1, inflight/3)), and hands back a resumable
+  * continuation in the `Graft-Next` response header (the `Chainweb-Next`
+  * contract, Server.hs:239-246). Client errors (bad parameters, tokens or
+  * percent-encoding, a missing search string, an unwritten richlist) are
+  * 4xx; only server faults are 500s.
   *
   * Zero dependencies: JDK `com.sun.net.httpserver` + hand-rolled JSON —
   * the serving tier is deliberately thin; all query semantics live in the
@@ -43,7 +46,8 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
           maintDir: Option[String] = None,
           debugHoldMs: Long = 0) {
 
-  private val spec = CursorSpec(Seq("user_id" -> true, "event_id" -> true))
+  /** Cursor of the synthetic-events demo source. */
+  private val demoSpec = CursorSpec(Seq("user_id" -> true, "event_id" -> true))
   private def events = Tables.events(spark, dataDir)
     .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
 
@@ -53,9 +57,10 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     * (`localCheckpoint` also materializes the continuation-chain join so
     * requests don't re-run the iterative resolver.) */
   private lazy val txSearchSrc: DataFrame =
-    TxSearch.source(spark, tablesDir.getOrElse(
-      throw new IllegalStateException("no ingested tables configured")))
-      .localCheckpoint()
+    TxSearch.source(spark, tables).localCheckpoint()
+
+  private def tables: String = tablesDir.getOrElse(
+    throw new IllegalStateException("no ingested tables configured"))
 
   /** Tx cursor: the reference's (height DESC, reqkey DESC) TxCursor
     * (Queries.hs:78-81) PLUS a block-hash tiebreak. Orphan fork copies
@@ -69,6 +74,14 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     * property pins this. */
   private val txSpec = CursorSpec(
     Seq("height" -> true, "requestkey" -> true, "block" -> true))
+
+  /** Events and transfers cursor: the reference's EventCursor
+    * (Queries.hs:190-194, 201-205) and `toAccountsSearchCursor`
+    * (Queries.hs:238-242) are both (height DESC, requestkey DESC, idx ASC);
+    * plus the block-hash tiebreak, because orphan fork copies share that
+    * whole tuple — see txSpec. */
+  private val idxSpec = CursorSpec(
+    Seq("height" -> true, "requestkey" -> true, "idx" -> false, "block" -> true))
 
   // --- Load-adaptive throttling (Server.hs:123-132): in-flight requests
   //     stand in for pool contention; budgets scale by the same factor.
@@ -140,7 +153,7 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
         .split("&").filter(_.contains("="))
         .map { kv =>
           val Array(k, v) = kv.split("=", 2)
-          k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
+          k -> decode(v)
         }.toMap
       if (debugHoldMs > 0) Thread.sleep(debugHoldMs) // test-only overlap window
       if (params.contains("next") && params.contains("offset"))
@@ -194,6 +207,12 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     (math.ceil(Api.BaseScanLimit * f).toInt, math.ceil(Api.BaseMaxLimit * f).toInt)
   }
 
+  /** Percent-decoding of client text: a malformed escape is a 400. */
+  private def decode(s: String): String =
+    try java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
+    catch { case _: IllegalArgumentException =>
+      throw Api.ApiError(400, s"malformed percent-encoding: $s") }
+
   /** Numeric query params are CLIENT input: a garbage `chain=zzz` must be
     * a 400, not a NumberFormatException 500 — the same contract as the
     * garbled-token path in [[continuation]]. */
@@ -234,60 +253,53 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
         c
       }
 
+  /** The one paging path of every search endpoint (the reference's
+    * handlers all call `performBoundedScan`, Server.hs:313/512/592): reads
+    * the throttled budgets, clamps the limit, validates the client's token
+    * BEFORE any source work, runs the `Bounded` or `Unbounded` strategy and
+    * builds the `Graft-Scan-Limit`/`Graft-Next` headers. `source` gives the
+    * relation and its filter-mark predicate; `render` turns the result
+    * page into JSON values. */
+  private def page(p: Map[String, String], bounded: Boolean, spec: CursorSpec)
+                  (source: => (DataFrame, Column))
+                  (render: Seq[Row] => Seq[String]): (String, Map[String, String]) = {
+    val (scanLimit, maxLimit) = budgets()
+    val limit = math.min(intParam(p, "limit").getOrElse(Api.DefaultLimit), maxLimit)
+    val cont = continuation(p, spec)
+    val (src, pred) = source
+    val (rows, next) =
+      if (bounded) BoundedScan.performBoundedScan(src, spec, pred, scanLimit, limit, cont)
+      else BoundedScan.performUnbounded(src, spec, pred, limit, cont)
+    (render(rows).mkString("[", ",", "]"),
+     (if (bounded) Map("Graft-Scan-Limit" -> scanLimit.toString)
+      else Map.empty[String, String]) ++
+       next.map(c => "Graft-Next" -> BoundedScan.encodeToken(c)))
+  }
+
   /** `/txs/search` — the reference's flagship search (Server.hs:295-332):
-    * LIKE over `coalesce(tx.code, contHistory.code)`, bounded-scan paging,
-    * `Graft-Next` continuation. */
+    * LIKE over `coalesce(tx.code, contHistory.code)`, height-range guarded;
+    * no search string is the reference's 404 (Server.hs:308 `throw404`). */
   private def searchTxs(p: Map[String, String], bounded: Boolean)
       : (String, Map[String, String]) = {
     val search = p.getOrElse("search",
-      throw new IllegalArgumentException("You must specify a search string"))
-    val (scanLimit, maxLimit) = budgets()
-    val limit = math.min(intParam(p, "limit").getOrElse(Api.DefaultLimit), maxLimit)
-    val src = TxSearch.heightRange(txSearchSrc,
-      longParam(p, "minheight"), longParam(p, "maxheight"))
-    val (rows, next) =
-      if (bounded)
-        BoundedScan.performBoundedScan(
-          src, txSpec, TxSearch.matchCol(search), scanLimit, limit,
-          continuation(p, txSpec))
-      else
-        BoundedScan.performUnbounded(
-          src, txSpec, TxSearch.matchCol(search), limit, continuation(p, txSpec))
-    val body = rows.map(Dto.txSummary).mkString("[", ",", "]")
-    (body, (if (bounded) Map("Graft-Scan-Limit" -> scanLimit.toString)
-            else Map.empty[String, String]) ++
-           next.map(c => "Graft-Next" -> BoundedScan.encodeToken(c)))
+      throw Api.ApiError(404, "You must specify a search string"))
+    page(p, bounded, txSpec)(
+      (ChainTime.heightRange(txSearchSrc, longParam(p, "minheight"), longParam(p, "maxheight")),
+       TxSearch.matchCol(search)))(_.map(Dto.txSummary))
   }
 
-  /** Bounded event search with keyset continuation (Server.hs:568-619's
-    * evHandler). With ingested tables configured this is the reference
-    * contract — P4's optional predicates (search/qualname/param/
-    * modulename), P2 height bounds, events cursor (height DESC,
-    * requestkey DESC, idx ASC); without them it demos the same engine on
-    * the synthetic events table. */
-  private val evSpec = CursorSpec(
-    Seq("height" -> true, "requestkey" -> true, "idx" -> false,
-        // block-hash tiebreak: orphan fork copies share the reference's
-        // whole (height, reqkey, idx) EventCursor (Queries.hs:190-194);
-        // uniqueness is what makes keyset resumption lossless — see txSpec
-        "block" -> true))
-
+  /** Event search (Server.hs:568-619's evHandler). With ingested tables
+    * configured this is the reference contract — P4's optional predicates
+    * (search/qualname/param/modulename), P2 height bounds, the events
+    * cursor; without them it demos the same engine on the synthetic
+    * events table. */
   private def searchEvents(p: Map[String, String], bounded: Boolean)
-      : (String, Map[String, String]) = {
-    val (scanLimit, maxLimit) = budgets()
-    val limit = math.min(intParam(p, "limit").getOrElse(Api.DefaultLimit), maxLimit)
-    def scan(src: DataFrame, spec: CursorSpec, pred: org.apache.spark.sql.Column) =
-      if (bounded) BoundedScan.performBoundedScan(src, spec, pred,
-        scanLimit, limit, continuation(p, spec))
-      else BoundedScan.performUnbounded(src, spec, pred, limit, continuation(p, spec))
-    val (body, next) = tablesDir match {
-      case Some(dir) =>
-        continuation(p, evSpec) // validate the client's token BEFORE any source work
-        val src = graft.operators.EventSearch.source(spark, dir,
-          longParam(p, "minheight"), longParam(p, "maxheight"))
-        val pred = graft.operators.EventSearch.predicate(
-          p.get("search"), p.get("qualname"), p.get("param"), p.get("modulename"))
-        val (rows, nxt) = scan(src, evSpec, pred)
+      : (String, Map[String, String]) = tablesDir match {
+    case Some(dir) =>
+      page(p, bounded, idxSpec)(
+        (EventSearch.source(spark, dir, longParam(p, "minheight"), longParam(p, "maxheight")),
+         EventSearch.predicate(
+           p.get("search"), p.get("qualname"), p.get("param"), p.get("modulename")))) { rows =>
         // block-time extras for the RESULT PAGE only, like the reference's
         // eventSearchExtras follow-up query (Server.hs:592-603)
         val hashes = rows.map(_.getAs[String]("block")).distinct
@@ -297,60 +309,28 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
             .filter(col("hash").isin(hashes: _*))
             .select(col("hash"), col("creationtime")).collect()
             .map(r => r.getString(0) -> r.get(1)).toMap
-        (rows.map(r => Dto.eventDetail(r,
-           times.getOrElse(r.getAs[String]("block"), null)))
-           .mkString("[", ",", "]"),
-         nxt)
-      case None =>
-        val (rows, nxt) = scan(events, spec,
-          col("event_type").contains(p.getOrElse("search", "")))
-        (rows.map(rowJson).mkString("[", ",", "]"), nxt)
-    }
-    (body, (if (bounded) Map("Graft-Scan-Limit" -> scanLimit.toString)
-            else Map.empty[String, String]) ++
-           next.map(c => "Graft-Next" -> BoundedScan.encodeToken(c)))
+        rows.map(r => Dto.eventDetail(r, times.getOrElse(r.getAs[String]("block"), null)))
+      }
+    case None =>
+      page(p, bounded, demoSpec)(
+        (events, col("event_type").contains(p.getOrElse("search", ""))))(_.map(Dto.jsonValue))
   }
 
-  /** Transfers cursor (Queries.hs:238-242 `toAccountsSearchCursor`:
-    * height DESC, requestkey DESC, idx ASC) + the block-hash tiebreak —
-    * orphan fork twins share the reference's whole cursor, see txSpec. */
-  private val acctSpec = CursorSpec(
-    Seq("height" -> true, "requestkey" -> true, "idx" -> false,
-        "block" -> true))
-
   /** `/txs/account/<acct>` — the marquee endpoint (Server.hs:493-546
-    * `accountHandler`): a full bounded-scan citizen. `token` (default
-    * "coin"), `chain`, `minheight`/`maxheight`, `limit`, `offset`/`next`
-    * params; the scan walks the account's transfer relation under the
-    * throttled scan budget with token/chain as the filter-mark predicate
-    * (Queries.hs:246-269), returns a `Graft-Next` continuation, and
+    * `accountHandler`): `token` (default "coin", Server.hs:507), `chain`,
+    * `minheight`/`maxheight`, `limit`, `offset`/`next` params; the scan
+    * walks the account's transfer relation under the throttled scan budget
+    * with token/chain as the filter-mark predicate (Queries.hs:246-269) and
     * decorates only the RESULT PAGE with block time + x-chain resolution
     * (`transferSearchExtras`). */
   private def accountHistory(path: String, bounded: Boolean)
                             (p: Map[String, String]): (String, Map[String, String]) = {
-    val dir = tablesDir.getOrElse(
-      throw new IllegalStateException("no ingested tables configured"))
-    val acct = java.net.URLDecoder.decode(
-      path.stripPrefix("/txs/account/"), StandardCharsets.UTF_8)
-    val token = p.getOrElse("token", "coin") // Server.hs:507 usedCoinType
-    val chain = longParam(p, "chain")
-    val (scanLimit, maxLimit) = budgets()
-    val limit = math.min(intParam(p, "limit").getOrElse(Api.DefaultLimit), maxLimit)
-    val src = graft.operators.AccountHistory.source(spark, dir, acct,
-      longParam(p, "minheight"), longParam(p, "maxheight"))
-    val pred = graft.operators.AccountHistory.predicate(token, chain)
-    val (rows, next) =
-      if (bounded)
-        BoundedScan.performBoundedScan(src, acctSpec, pred,
-          scanLimit, limit, continuation(p, acctSpec))
-      else
-        BoundedScan.performUnbounded(src, acctSpec, pred, limit,
-          continuation(p, acctSpec))
-    val page = graft.operators.AccountHistory.decoratePage(spark, dir, rows)
-    (page.map(Dto.transferDetail).mkString("[", ",", "]"),
-     (if (bounded) Map("Graft-Scan-Limit" -> scanLimit.toString)
-      else Map.empty[String, String]) ++
-       next.map(c => "Graft-Next" -> BoundedScan.encodeToken(c)))
+    val acct = decode(path.stripPrefix("/txs/account/"))
+    val dir = tables
+    page(p, bounded, idxSpec)(
+      (AccountHistory.source(spark, dir, acct, longParam(p, "minheight"), longParam(p, "maxheight")),
+       AccountHistory.predicate(p.getOrElse("token", "coin"), longParam(p, "chain"))))(
+      rows => AccountHistory.decoratePage(spark, dir, rows).map(Dto.transferDetail))
   }
 
   /** `/txs/tx/<rk>` (one row, success-first pick — Server.hs:449-460) and
@@ -358,10 +338,8 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     * Server.hs:462-482). */
   private def txDetail(path: String, prefix: String, one: Boolean)
                       (p: Map[String, String]): (String, Map[String, String]) = {
-    val dir = tablesDir.getOrElse(
-      throw new IllegalStateException("no ingested tables configured"))
-    val rk = java.net.URLDecoder.decode(
-      path.stripPrefix(prefix), StandardCharsets.UTF_8)
+    val rk = decode(path.stripPrefix(prefix))
+    val dir = tables
     val rows =
       (if (one) graft.operators.TxDetail.lookupOne(spark, dir, rk)
        else graft.operators.TxDetail.lookup(spark, dir, rk)).collect()
@@ -385,18 +363,16 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
          Map.empty)
       case None =>
         (events.orderBy(col("event_id").desc).limit(10).collect()
-           .map(rowJson).mkString("[", ",", "]"),
+           .map(Dto.jsonValue).mkString("[", ",", "]"),
          Map.empty)
     }
 
   /** `/richlist` — serves the CSV the maintenance pass wrote
     * (Server.hs:212-218: read the file, 404 when absent). */
   private def richlist(p: Map[String, String]): (String, Map[String, String]) = {
-    val dir = maintDir.getOrElse(
-      throw new IllegalStateException("no maintenance output configured"))
-    val files = Option(new java.io.File(s"$dir/richlist").listFiles())
+    val files = maintDir.flatMap(dir => Option(new java.io.File(s"$dir/richlist").listFiles()))
       .getOrElse(Array.empty).filter(_.getName.endsWith(".csv"))
-    require(files.nonEmpty, "richlist not generated yet")
+    if (files.isEmpty) throw Api.ApiError(404, "richlist not generated yet")
     val csv = files.sortBy(_.getName).map { f =>
       new String(java.nio.file.Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
     }.mkString
@@ -408,10 +384,9 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     * current max block height + allocations as of NOW, from the real
     * embedded schedules. */
   private def coins(p: Map[String, String]): (String, Map[String, String]) = {
-    val h = maxHeight()
-    val now = p.get("asof").map(_.toLong) // pin for tests; default wall clock
+    val now = longParam(p, "asof") // pin for tests; default wall clock
       .getOrElse(System.currentTimeMillis() / 1000)
-    (Coins.circulatingCoins(h, now).toString, Map.empty)
+    (Coins.circulatingCoins(maxHeight(), now).toString, Map.empty)
   }
 
   /** Snapshot-pinned, footer-memoized blocks handle for the request path
@@ -456,21 +431,6 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
         (s"""{"transactionCount":$n,"coinsInCirculation":$circ}""", Map.empty)
     }
   }
-
-  private def valueJson(v: Any): String = v match {
-    case null                          => "null"
-    case s: String                     => Api.jstr(s)
-    case b: Boolean                    => b.toString
-    case n: java.lang.Number           => n.toString
-    case r: Row                        => rowJson(r)
-    case xs: scala.collection.Seq[_]   => xs.map(valueJson).mkString("[", ",", "]")
-    case other                         => Api.jstr(String.valueOf(other))
-  }
-
-  private def rowJson(r: Row): String =
-    r.schema.fields.zipWithIndex.map { case (f, i) =>
-      s"${Api.jstr(f.name)}:${valueJson(r.get(i))}"
-    }.mkString("{", ",", "}")
 }
 
 object Api {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ingest.{Flatten, Upsert}
 import graft.operators.AccountHistory
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AccountHistorySpec extends AnyFunSuite with SparkSpec {
 
   test("alice's coin history: ordering, block time, x-chain target") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_hist").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
 
     val hist = AccountHistory.transfersOf(spark, dir, "alice").collect()
     // coin-module rows touching alice: rk1 alice→bob 1.5, rk3 x-chain 4.5
@@ -55,11 +49,7 @@ class AccountHistorySpec extends AnyFunSuite with SparkSpec {
 
   test("inbound x-chain receive resolves sender via pact.X_RESUME") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_xresume").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1, Fixtures.header2).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1, Fixtures.payload2).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1, Fixtures.header2 -> Fixtures.payload2)
 
     // eve's history: only the inbound receive — the outbound leg (rk3,
     // to_acct='') indexes under ALICE, exactly like the reference's
@@ -96,12 +86,7 @@ class AccountHistorySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("schema check + maintenance pass over ingested tables") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_maint").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
 
     // check-schema parity: derived contract matches what was written
     assert(graft.ingest.Schemas.check(spark, dir) === Map.empty)

@@ -115,13 +115,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("/txs/search pages a code search over ingested tables to completion") {
-    import spark.implicits._
-    import graft.ingest.{Flatten, Upsert}
-    val dir = java.nio.file.Files.createTempDirectory("graft_api_search").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1, Fixtures.header2).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1, Fixtures.payload2).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1, Fixtures.header2 -> Fixtures.payload2)
 
     val api = new Api(spark, sf, 0, tablesDir = Some(dir))
     api.start()
@@ -163,7 +157,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
         .map(_.group(1)).toSet === Set("rk4"))
 
       // missing search string → error (Server.hs:308 throw404)
-      assert(get(s"$base/txs/search?limit=5").statusCode() === 500)
+      assert(get(s"$base/txs/search?limit=5").statusCode() === 404)
 
       // unbounded strategy on the tx path: limit=1 paging enumerates the
       // SAME keys in the same order as the bounded engine above
@@ -183,6 +177,73 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
         } else udone = true
       }
       assert(ukeys.toSeq === keys.toSeq)
+    } finally api.stop()
+  }
+
+  test("/txs/search returns one row per block copy when a continuation " +
+       "and its block's orphan twin share request keys") {
+    // blk1t: an orphan twin of blk1 at the same height carrying the same
+    // txs — rk1 (exec), rk2 (its continuation) and rk3
+    def twin(json: String) = json.replace("\"hash\":\"blk1\"", "\"hash\":\"blk1t\"")
+      .replace("\"payloadHash\":\"ph1\"", "\"payloadHash\":\"ph1t\"")
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1,
+      twin(Fixtures.header1) -> twin(Fixtures.payload1))
+    val chains = graft.operators.ContHistory.chains(spark, dir).collect()
+      .map(r => r.getAs[String]("requestkey") -> r.getAs[scala.collection.Seq[String]]("chain").toSeq)
+    assert(chains.toSeq === Seq("rk2" -> Seq("rk2", "rk1")))
+
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      val rowRe = """"blockHash":"([^"]+)","creationTime":[^,]*,"requestKey":"([^"]+)"""".r
+      val rows = scala.collection.mutable.ArrayBuffer[(String, String)]()
+      var url = s"$base/txs/search?search=coin.transfer&limit=2"
+      var done = false
+      while (!done) {
+        val resp = get(url)
+        assert(resp.statusCode() === 200)
+        rowRe.findAllMatchIn(resp.body()).foreach(m => rows += (m.group(2) -> m.group(1)))
+        val next = resp.headers().firstValue("Graft-Next")
+        if (next.isPresent) {
+          url = s"$base/txs/search?search=coin.transfer&limit=2&next=${next.get}"
+          assert(rows.length < 40, "runaway pagination")
+        } else done = true
+      }
+      // cursor order: height DESC, requestkey DESC, block DESC
+      assert(rows.toSeq === (for (rk <- Seq("rk3", "rk2", "rk1");
+                                  blk <- Seq("blk1t", "blk1")) yield rk -> blk))
+    } finally api.stop()
+  }
+
+  /** Status line of a raw request, for targets `java.net.URI` refuses. */
+  private def rawStatus(port: Int, target: String): Int = {
+    val sock = new java.net.Socket("localhost", port)
+    try {
+      sock.getOutputStream.write(
+        s"GET $target HTTP/1.1\r\nHost: localhost\r\nConnection: close\r\n\r\n"
+          .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream))
+        .readLine().split(" ")(1).toInt
+    } finally sock.close()
+  }
+
+  test("client errors are 4xx: no search string, a bad asof, malformed " +
+       "percent-encoding, an unwritten richlist") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val maint = java.nio.file.Files.createTempDirectory("graft_api_nomaint").toString
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir), maintDir = Some(maint))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      assert(get(s"$base/txs/search?limit=5").statusCode() === 404) // throw404
+      assert(get(s"$base/coins?asof=zzz").statusCode() === 400)
+      // the server decodes "%25zz" to "%zz", which is no valid escape
+      assert(get(s"$base/txs/account/%25zz").statusCode() === 400)
+      assert(get(s"$base/txs/tx/%25zz").statusCode() === 400)
+      // a malformed escape in the query is refused before any handler runs
+      assert(rawStatus(api.boundPort, "/txs/events?search=%zz") === 400)
+      assert(get(s"$base/richlist").statusCode() === 404) // Server.hs:212-218
     } finally api.stop()
   }
 
@@ -218,14 +279,8 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("/richlist, /coins and cached /stats serve maintenance outputs") {
-    import spark.implicits._
-    import graft.ingest.{Flatten, Upsert}
-    val dir = java.nio.file.Files.createTempDirectory("graft_api_maint").toString
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
     val out = java.nio.file.Files.createTempDirectory("graft_api_maint_out").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
     val rep = graft.plans.Maintenance.run(spark, dir, out, genesis = Map(0L -> 100L))
     assert(rep.txCount === 3L)
     assert(rep.maxHeight === 100L)
@@ -260,13 +315,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("account history endpoint serves ingested tables with x-chain resolution") {
-    import spark.implicits._
-    import graft.ingest.{Flatten, Upsert}
-    val dir = java.nio.file.Files.createTempDirectory("graft_api_tables").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
 
     val api = new Api(spark, sf, 0, tablesDir = Some(dir))
     api.start()
@@ -311,13 +360,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
 
   test("DTO field sets match the chainweb-api shapes exactly; /cwd-spec " +
        "serves them") {
-    import spark.implicits._
-    import graft.ingest.{Flatten, Upsert}
-    val dir = java.nio.file.Files.createTempDirectory("graft_api_dto").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
     val api = new Api(spark, sf, 0, tablesDir = Some(dir))
     api.start()
     try {
@@ -375,13 +418,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
 
   test("request-path reads are snapshot-pinned: uncommitted table files are " +
        "invisible to every endpoint until a commit publishes them") {
-    import spark.implicits._
-    import graft.ingest.{Flatten, Upsert}
-    val dir = java.nio.file.Files.createTempDirectory("graft_api_pin").toString
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    Upsert.mergeAll(spark, dir, Flatten.allTables(hp))
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
     val api = new Api(spark, sf, 0, tablesDir = Some(dir))
     api.start()
     try {

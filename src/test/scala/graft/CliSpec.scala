@@ -25,15 +25,9 @@ class CliSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fill --node=<url>: CLI-invoked repair of a holed table end-to-end") {
-    import spark.implicits._
-    val dir = tmpTables()
     // Seed a real multi-table store with a hole: chain 0 has {100, 103}.
-    val hp = ingest.Flatten.joined(
-      ingest.Flatten.parseHeaders(
-        Seq((0L, 100L), (0L, 103L)).map { case (c, h) => Fixtures.mkHeader(c, h) }.toDF("value")),
-      ingest.Flatten.parsePayloads(
-        Seq((0L, 100L), (0L, 103L)).map { case (c, h) => Fixtures.mkPayload(c, h) }.toDF("value")))
-    ingest.Upsert.mergeAll(spark, dir, ingest.Flatten.allTables(hp)): Unit
+    val dir = Fixtures.ingest(spark, Seq(100L, 103L).map(h =>
+      Fixtures.mkHeader(0L, h) -> Fixtures.mkPayload(0L, h)): _*)
 
     // Mock node answering the blocksBetween contract (Lookups.hs:102-139).
     val server = com.sun.net.httpserver.HttpServer.create(
@@ -231,14 +225,9 @@ class CliSpec extends AnyFunSuite with SparkSpec {
 
   test("maintain: sequences richlist + gaps + vacuum + index compaction " +
        "in one pass; the immediate re-run is a no-op on the stores") {
-    import spark.implicits._
-    val dir = tmpTables()
     // header1/payload1: the full fixture block (user txs included), so the
     // maintenance pass finds blocks + transfers + transactions
-    val hp = ingest.Flatten.joined(
-      ingest.Flatten.parseHeaders(Seq(Fixtures.header1).toDF("value")),
-      ingest.Flatten.parsePayloads(Seq(Fixtures.payload1).toDF("value")))
-    ingest.Upsert.mergeAll(spark, dir, ingest.Flatten.allTables(hp)): Unit
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
     val out = Files.createTempDirectory("graft-maint").toString
     // seed a text store with pending tombstones so the compaction arm works
     operators.Retrieval.textDeletedStore(spark, "/root/testdata/sf0.001"): Unit

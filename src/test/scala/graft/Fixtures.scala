@@ -1,9 +1,22 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Shared hand-built wire fixture (shapes per chainweb-data
   * exec/Chainweb/Lookups.hs:141-160): one block, three txs (exec success,
   * cont failure, x-chain send), coinbase. */
 object Fixtures {
+
+  /** Ingests (header, payload) wire pairs into a fresh temporary table
+    * directory through [[graft.streaming.Listen.ingestBatch]], the
+    * production ingest path; returns the directory. */
+  def ingest(spark: SparkSession, blocks: (String, String)*): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables").toString
+    graft.streaming.Listen.ingestBatch(spark,
+      blocks.map { case (h, p) => s"""{"header":$h,"payload":$p}""" }.toDF("value"), dir)
+    dir
+  }
 
   val header1 =
     """{"chainId":0,"height":100,"hash":"blk1","parent":"blk0",

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[graft.plans.KeysetBoundRule]]: a USER-written keyset OR-chain (not
-  * built through BoundedScan.resumePredicate) must gain the implied
-  * leading-column bound — visible as a parquet PushedFilter — without
-  * changing results. */
+/** [[graft.plans.KeysetBoundRule]]: a keyset OR-chain, user-written or
+  * built by BoundedScan.resumePredicate, must gain the implied
+  * leading-column bound — visible as a parquet PushedFilter — once, and
+  * without changing results. */
 class KeysetRuleSpec extends AnyFunSuite with SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
@@ -43,14 +43,21 @@ class KeysetRuleSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("rule is a fixpoint on BoundedScan's own predicates (no duplicate bounds)") {
-    // resumePredicate already conjoins the manual bound; the rule must not
-    // stack another copy (idempotence) — count occurrences in the filter
-    val spec = graft.plans.BoundedScan.CursorSpec(Seq(("o_orderkey", true)))
-    val df = Tables.orders(spark, dir)
-      .filter(graft.plans.BoundedScan.resumePredicate(spec, Seq(lit(5000L))))
-    val optimized = df.queryExecution.optimizedPlan.toString
-    val occurrences = "<= 5000".r.findAllIn(optimized).length
-    assert(occurrences === 1, s"expected exactly one bound conjunct:\n$optimized")
+    import graft.plans.BoundedScan.{CursorSpec, resumePredicate}
+    // a one-column cursor is its own range bound: nothing is added
+    val one = Tables.orders(spark, dir)
+      .filter(resumePredicate(CursorSpec(Seq(("o_orderkey", true))), Seq(lit(5000L))))
+    val optimized = one.queryExecution.optimizedPlan.toString
+    assert("5000".r.findAllIn(optimized).length === 1,
+      s"expected exactly one bound conjunct:\n$optimized")
+    // the cursor as performBoundedScan passes it (cast string literals):
+    // the rule derives the leading bound exactly once
+    val two = Tables.orders(spark, dir).filter(resumePredicate(
+      CursorSpec(Seq("o_orderkey" -> true, "o_custkey" -> true)),
+      Seq(lit("5000").cast("long"), lit("100").cast("long"))))
+    val pushed = pushedFilters(two)
+    assert("LessThanOrEqual\\(o_orderkey,5000\\)".r.findAllIn(pushed).length === 1,
+      s"expected the derived o_orderkey bound once in PushedFilters: $pushed")
   }
 
   test("ascending chains derive a >= bound") {

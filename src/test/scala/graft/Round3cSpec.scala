@@ -70,11 +70,14 @@ class Round3cSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  // the name predates the removal of the doubling variant; the loop is now
+  // checked against a plain-Scala reference walk
   test("resolveCodeDoubling ≡ resolveCode loop, incl. beyond-cap chains") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    // random forest: long parent chains (some > the 25-depth cap), sparse
-    // codes, dangling parents, roots — every terminal case of the walk
+    // random forest: long parent chains, sparse codes, dangling parents,
+    // roots, and a chain longer than the 25-depth cap — every terminal
+    // case of the walk
     val nodes = (0 until 400).map { i =>
       val parent: java.lang.Long =
         if (i == 0 || rnd.nextInt(10) == 0) null          // root
@@ -83,17 +86,35 @@ class Round3cSpec extends AnyFunSuite with SparkSpec {
       val code: String =
         if (rnd.nextInt(30) == 0) s"code$i" else null     // sparse ⇒ deep walks
       (i.toLong, parent, code)
+    } ++ (400 until 440).map { i => // one code-free 40-node chain: the cap
+      (i.toLong, if (i == 400) null else java.lang.Long.valueOf(i - 1L), null: String)
     }
-    val df = nodes.toDF("id", "parent", "code")
-    // FULL row-set compare, nulls included: both variants must emit one
-    // row per seed, null chain_code when unresolved (root/dangling/cap)
-    def canon(out: org.apache.spark.sql.DataFrame): Map[Long, String] = out
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1)))
-      .toMap
-    val loop = canon(graft.operators.ContHistory.resolveCode(df))
-    val dbl = canon(graft.operators.ContHistory.resolveCodeDoubling(df))
-    assert(loop == dbl,
-      s"only-loop=${(loop.toSet -- dbl.toSet).take(5)} only-dbl=${(dbl.toSet -- loop.toSet).take(5)}")
+    // reference: every node with a parent is a seed; walk from the seed
+    // itself until a code, a root, a dangling parent or 25 hops
+    val byId = nodes.map(n => n._1 -> n).toMap
+    val want: Map[Long, (Seq[Long], String)] = nodes.filter(_._2 != null).map {
+      case (id, parent, code) =>
+        var chain = Vector(id); var found = code; var cur = parent; var hops = 0
+        while (found == null && cur != null && hops < 25) {
+          hops += 1
+          byId.get(cur.longValue) match {
+            case Some((n, p, c)) => chain :+= n; found = c; cur = p
+            case None            => cur = null
+          }
+        }
+        id -> (chain, found)
+    }.toMap
+    val got = graft.operators.ContHistory.resolveCode(nodes.toDF("id", "parent", "code"))
+      .collect().map(r => r.getAs[Long]("seed") ->
+        (r.getAs[scala.collection.Seq[Long]]("chain").toSeq, r.getAs[String]("chain_code")))
+    assert(got.length === want.size, "not one row per seed")
+    assert(got.toMap == want,
+      s"only-spark=${(got.toSet -- want.toSet).take(5)} only-ref=${(want.toSet -- got.toSet).take(5)}")
+    // chain_code is null at each terminal case, and the forest has each
+    val unresolved = want.values.filter(_._2 == null).map(_._1)
+    assert(unresolved.exists(c => c.length < 26 && byId(c.last)._2 == null), "no root end")
+    assert(unresolved.exists(c => c.length < 26 && byId(c.last)._2 != null), "no dangling end")
+    assert(unresolved.exists(_.length == 26), "no cap end")
   }
 
   test("q82/q83 plan shapes: no cartesian, no single-partition window") {
