@@ -3,7 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent PK-keyed writer — the Spark analog of the reference's
   * `INSERT … ON CONFLICT (pk) DO NOTHING` fan-out
@@ -17,11 +17,25 @@ import org.apache.spark.sql.functions._
   * re-introductions are no-ops — the property that makes the whole ingest
   * effectively-once (SURVEY §2.9 T4).
   *
+  * The existing keys are read with the batch's own key schema, so the read
+  * infers nothing: schema inference over the table's footers is a Spark
+  * job of its own, and on a small micro-batch one job is a sizeable share
+  * of the merge.
+  *
+  * [[mergeAll]] merges a batch's tables concurrently, one thread per table.
+  * A micro-batch's table slices are tiny (a few tasks each), so a single
+  * merge leaves most cores idle and the batch's cost is the sum of the
+  * merges' fixed per-job costs; across tables those costs overlap. Each
+  * table path is written by one thread only, which keeps the single-writer
+  * rule of [[graft.sources.Snapshots.commit]] per table.
+  *
   * Scale: the anti-join shuffles only on PK columns; at 100 TB the target
   * would be partitioned by (chainid, height-bucket) so the join prunes to
   * the touched partitions — noted here because plain-parquet reads the full
   * key set. Batches are also self-deduped (a chain fork can repeat a key
-  * within one batch, Transaction.hs:74-78).
+  * within one batch, Transaction.hs:74-78). Table-level concurrency is
+  * bounded by the six tables; a batch large enough to fill the cluster on
+  * its own gains nothing from it and loses nothing either.
   */
 object Upsert {
 
@@ -32,28 +46,59 @@ object Upsert {
     val deduped = batch.dropDuplicates(pk)
     val fresh =
       if (Files.exists(Paths.get(path))) {
-        val existing = spark.read.parquet(path).select(pk.map(col): _*)
+        val existing = spark.read.schema(StructType(pk.map(batch.schema(_)))).parquet(path)
         deduped.join(existing, pk, "left_anti")
       } else deduped
     // Two-phase because the source of the append is the target itself:
     // stage the new rows, then append the staged copy.
     val staged = fresh.persist()
-    val n = staged.count()
-    if (n > 0) {
-      staged.write.mode("append").parquet(path)
-      // Version the new state: paged readers pin the pre-merge manifest and
-      // stay consistent while this append lands (Server.hs:600's REPEATABLE
-      // READ, re-expressed as copy-on-write snapshots — Snapshots scaladoc).
-      graft.sources.Snapshots.commit(spark, path): Unit
-    }
-    staged.unpersist()
-    n
+    try {
+      val n = staged.count()
+      if (n > 0) {
+        staged.write.mode("append").parquet(path)
+        // Version the new state: paged readers pin the pre-merge manifest and
+        // stay consistent while this append lands (Server.hs:600's REPEATABLE
+        // READ, re-expressed as copy-on-write snapshots — Snapshots scaladoc).
+        graft.sources.Snapshots.commit(spark, path): Unit
+      }
+      n
+    } finally staged.unpersist(): Unit
   }
 
-  /** Write a whole flattened batch (all six tables) idempotently. */
+  /** Write a whole flattened batch (all six tables) idempotently, one
+    * [[merge]] per table, all running at once.
+    *
+    * Every merge runs to its end before this returns or throws: the first
+    * failure (in the tables' order) is rethrown with any others attached
+    * as suppressed, and the tables whose merges succeeded stay committed —
+    * replaying the batch completes the rest and re-inserts nothing. The
+    * merge threads are started by the calling thread, so they inherit its
+    * Spark local properties (job group, description, interrupt-on-cancel,
+    * SQL execution id); a cancelled job group cancels every merge's jobs.
+    * An interrupt of the caller is passed on to the merge threads. */
   def mergeAll(spark: SparkSession, baseDir: String,
-               tables: Map[String, (DataFrame, Seq[String])]): Map[String, Long] =
-    tables.map { case (name, (df, pk)) =>
-      name -> merge(spark, s"$baseDir/$name", df, pk)
+               tables: Map[String, (DataFrame, Seq[String])]): Map[String, Long] = {
+    val named = tables.toSeq
+    val results = new Array[Either[Throwable, Long]](named.size)
+    val threads = named.zipWithIndex.map { case ((name, (df, pk)), i) =>
+      val t = new Thread(() =>
+        results(i) =
+          try Right(merge(spark, s"$baseDir/$name", df, pk))
+          catch { case e: Throwable => Left(e) }, // rethrown by the caller below
+        s"graft-upsert-$name")
+      t.setDaemon(true)
+      t.start()
+      t
     }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true; threads.foreach(_.interrupt()) }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failures = results.collect { case Left(e) => e }
+    failures.headOption.foreach { first => failures.tail.foreach(first.addSuppressed); throw first }
+    named.map(_._1).zip(results.collect { case Right(n) => n }).toMap
+  }
 }

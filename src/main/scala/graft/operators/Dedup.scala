@@ -28,10 +28,16 @@ object Dedup {
   private[operators] val K_HASHES = 8 // minhash signature width
   private[operators] val N_BANDS = 4  // LSH bands (2 rows each)
 
+  /** The exact-dedup key: md5 of the text lower-cased, with whitespace
+    * runs collapsed to one space and the ends trimmed. The oracle SQL
+    * spells it `md5(trim(regexp_replace(lower(t), '\s+', ' ', 'g')))`. */
+  private[operators] def normalizedTextKey(text: Column): Column =
+    md5(trim(regexp_replace(lower(text), "\\s+", " ")))
+
   /** q27 — exact dedup: whitespace-normalized content hash → keeper = min
     * doc_id per group. Emits the full keep/drop mapping. */
   def q27DedupExact(spark: SparkSession, dir: String): DataFrame = {
-    val key = md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
+    val key = normalizedTextKey(col("text"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("text_hash"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), key.as("text_hash"))

@@ -47,7 +47,7 @@ object TrainPrep {
     * probe, row-local gates, and one global sum for the pack count. */
   def q104CurationFunnel(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val key = md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
+    val key = Dedup.normalizedTextKey(col("text"))
     val w = Window.partitionBy(col("k"))
     val dd = docs.withColumn("k", key)
       .withColumn("keep", min(col("doc_id")).over(w))
@@ -309,8 +309,7 @@ object TrainPrep {
       .filter(!col("f_any")).select(col("doc_id"), lit(true).as("p1"))
     val dsel = Corpus.dsirScores(spark, dir)
       .filter(col("dsir_score") >= 1.0).select(col("doc_id"), lit(true).as("p2"))
-    val w = Window.partitionBy(
-      md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))))
+    val w = Window.partitionBy(Dedup.normalizedTextKey(col("text")))
     val rw = Window.partitionBy(col("lang"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     val flagged = docs
@@ -450,7 +449,7 @@ object TrainPrep {
     val r2 = r1.withColumn("rt", Pii.redact(col("ft")))
     val w = Window.partitionBy(col("k"))
     val dd = r2
-      .withColumn("k", md5(trim(regexp_replace(lower(col("rt")), "\\s+", " "))))
+      .withColumn("k", Dedup.normalizedTextKey(col("rt")))
       .withColumn("keep", min(d).over(w))
       .filter(d === col("keep")).drop("k", "keep")
     val rw = Window.partitionBy(col("lang"))
@@ -1005,8 +1004,7 @@ object TrainPrep {
       .select(col("doc_id"), col("lang"),
         concat(col("text"), Lexicon.lexTail(col("doc_id"))).as("ft"))
     val scored = Lexicon.allScored(spark, dir)
-    val w = Window.partitionBy(
-      md5(trim(regexp_replace(lower(col("ft")), "\\s+", " "))))
+    val w = Window.partitionBy(Dedup.normalizedTextKey(col("ft")))
     val rw = Window.partitionBy(col("lang"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     val flagged = docs

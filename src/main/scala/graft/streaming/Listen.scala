@@ -66,10 +66,6 @@ object Listen {
     Upsert.mergeAll(spark, tableDir, Flatten.allTables(Flatten.joined(headers, payloads)))
   }
 
-  /** Streaming windowed stats (tumbling day windows over event time with a
-    * watermark for state cleanup) — the streaming face of the batch
-    * tumbling-window query (SparkEntry q38); same grouping columns, so a
-    * backfill and the live stream produce union-compatible rows. */
   /** Stream-stream join: headers and payloads arriving as SEPARATE feeds
     * (the real network topology — the reference fetches the payload in a
     * second round trip, Listen.hs:62-83) paired on payloadHash inside a
@@ -103,6 +99,10 @@ object Listen {
     events.withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  /** Streaming windowed stats (tumbling day windows over event time with a
+    * watermark for state cleanup) — the streaming face of the batch
+    * tumbling-window query (SparkEntry q38); same grouping columns, so a
+    * backfill and the live stream produce union-compatible rows. */
   def windowedEventCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "2 days")

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.ingest.{Flatten, Upsert}
 import graft.streaming.Listen
 import org.apache.spark.sql.functions._
@@ -84,6 +86,74 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     val replay = Upsert.mergeAll(spark, dir, flattened)
     assert(replay.values.sum === 0)
     assert(spark.read.parquet(s"$dir/events").count() === 7)
+  }
+
+  private def twoBlocks = {
+    import spark.implicits._
+    Flatten.allTables(Flatten.joined(
+      Flatten.parseHeaders(Seq(Fixtures.header1, Fixtures.header2).toDF("value")),
+      Flatten.parsePayloads(Seq(Fixtures.payload1, Fixtures.payload2).toDF("value"))))
+  }
+
+  private def liveMergeThreads =
+    Thread.getAllStackTraces.keySet.asScala.filter(t => t.getName.startsWith("graft-upsert-") && t.isAlive)
+
+  test("mergeAll: one failed table merge leaves the other five committed, and a replay converges") {
+    val dir = Files.createTempDirectory("graft_upsert_fail")
+    Files.writeString(dir.resolve("events"), "not a table") // blocks the events path
+    intercept[Exception](Upsert.mergeAll(spark, dir.toString, twoBlocks))
+    assert(liveMergeThreads.isEmpty)
+    val others = twoBlocks.keySet - "events"
+    others.foreach { t =>
+      val manifests = dir.resolve(t).resolve("_manifests").toFile.list().filter(_.endsWith(".manifest"))
+      assert(manifests.length === 1, t)
+    }
+
+    Files.delete(dir.resolve("events"))
+    val replay = Upsert.mergeAll(spark, dir.toString, twoBlocks)
+    assert(replay("events") > 0 && others.forall(replay(_) === 0))
+    val clean = Files.createTempDirectory("graft_upsert_clean").toString
+    Upsert.mergeAll(spark, clean, twoBlocks): Unit
+    twoBlocks.foreach { case (t, (_, pk)) =>
+      val got = spark.read.parquet(s"$dir/$t")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(got) === rows(spark.read.parquet(s"$clean/$t")), t)
+      assert(got.select(pk.map(col): _*).distinct().count() === got.count(), t)
+    }
+  }
+
+  test("mergeAll: every merge job runs under the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = e.properties
+        groups.add((p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description"),
+                    p.getProperty("spark.job.interruptOnCancel")))
+      }
+    }
+    // A job under its own group marks each end of the window: the listener
+    // bus delivers job starts in order, so once the closing marker is seen
+    // every merge job before it has been seen too.
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      spark.range(1).count(): Unit
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.asScala.exists(_._1 == name) && System.nanoTime() < deadline) Thread.sleep(20)
+      sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("before")
+      sc.setJobGroup("g", "d", interruptOnCancel = true)
+      try Upsert.mergeAll(spark, Files.createTempDirectory("graft_upsert_group").toString, twoBlocks): Unit
+      finally sc.clearJobGroup()
+      marker("after")
+    } finally sc.removeSparkListener(listener)
+    val window = groups.asScala.toSeq.dropWhile(_._1 != "before").dropWhile(_._1 == "before")
+      .takeWhile(_._1 != "after")
+    assert(window.size >= 6)
+    assert(window.forall(_ == (("g", "d", "true"))), window)
   }
 
   test("streaming listen: drop-zone → 6 tables, effectively-once") {
