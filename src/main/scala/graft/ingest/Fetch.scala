@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   * parsed as `STRING` keep their raw JSON text), so everything after the
   * GET is whole-stage-codegen'd and nothing but the ≤chunk-sized bodies
   * ever exists per task: at a 100 TB backfill the plan is millions of
-  * ranges, but each task holds O(chunk) JSON in memory and the flattened
-  * rows stream straight into [[Upsert.mergeAll]]'s anti-join.
+  * ranges, but each task holds O(chunk) JSON in memory, and the parsed
+  * batch is cached once ([[graft.streaming.Listen.ingestBatch]], spilling
+  * to disk) for [[Upsert.mergeAll]]'s six anti-joins.
   *
   * Error semantics mirror `handleRequest`: HTTP 429/403 = rate-limiting
   * and 5xx = server error are retried with linear backoff; other 4xx is a
@@ -108,7 +109,9 @@ object Fetch {
   /** One-call batch repair: gap plan over the blocks table → distributed
     * fetch → flatten → idempotent merge. Returns the executed plan and the
     * per-table inserted-row counts; a second run over a repaired table
-    * returns an empty plan and all-zero counts (effectively-once, T4). */
+    * returns an empty plan and all-zero counts (effectively-once, T4).
+    * `ingestBatch` reads the fetched envelopes once, into its persisted
+    * parse, so each planned range is one node request. */
   def fill(spark: SparkSession, nodeBase: String, version: String,
            tableDir: String, genesis: Map[Long, Long],
            chunk: Int = RangePlan.ChunkSize,
@@ -117,17 +120,7 @@ object Fetch {
     val plan = Gaps.plan(spark.read.parquet(s"$tableDir/blocks"),
                          "chainid", "height", genesis, chunk)
     if (plan.isEmpty) (plan, Map.empty)
-    else {
-      // Materialize the fetched envelopes ONCE before the six-table merge
-      // fan-out: each merge re-evaluates its source lineage, which without
-      // the checkpoint re-runs the HTTP stage per table per action (the
-      // FetchSpec request counter caught 14 node hits for a 1-range plan).
-      // Bounded state: one fill's envelopes ≤ |plan|·chunk blocks.
-      val env = envelopes(
-        fetchBodies(spark, nodeBase, version, plan, maxAttempts, backoffMs))
-        .localCheckpoint(eager = true)
-      try (plan, graft.streaming.Listen.ingestBatch(spark, env, tableDir))
-      finally { env.unpersist(blocking = false): Unit }
-    }
+    else (plan, graft.streaming.Listen.ingestBatch(spark,
+      envelopes(fetchBodies(spark, nodeBase, version, plan, maxAttempts, backoffMs)), tableDir))
   }
 }

@@ -74,12 +74,33 @@ object Flatten {
   def parsePayloads(raw: DataFrame): DataFrame =
     raw.select(from_json(col("value"), payloadSchema).as("p")).select("p.*")
 
-  /** Joined header+payload rows, the input of every flattener below.
+  /** Joined header+payload rows, the input of every flattener below, for
+    * headers and payloads that arrive as separate relations (ingest
+    * envelopes carry both and go through [[parseEnvelopes]]).
     * Broadcast-free equi-join on payloadHash: both sides are the same
     * micro-batch (≤ 120-block chunks, Types.hs:110-111), so this is tiny;
     * in a backfill the join keys are co-partitioned by the fetch job. */
   def joined(headers: DataFrame, payloads: DataFrame): DataFrame =
     headers.join(payloads, "payloadHash")
+
+  /** Header+payload rows of ingest envelopes (a `value` column of
+    * `{"header":H,"payload":P}`, the drop-zone, SSE and fill shape), each
+    * header paired with the payload of its own envelope: the columns of
+    * [[joined]] over [[parseHeaders]] and [[parsePayloads]] of the two
+    * halves, made in one pass over the input, with no join and no shuffle.
+    * An envelope whose halves disagree on payloadHash gives no row. The
+    * join would also pair a header with an equal-hash payload of another
+    * envelope in the batch; a payload hash names one payload, so that adds
+    * only repeats of the same rows, which the merges' PK dedup drops. */
+  def parseEnvelopes(raw: DataFrame): DataFrame = {
+    def half(path: String, schema: StructType, as: String) =
+      from_json(get_json_object(col("value"), path), schema).as(as)
+    def rest(schema: StructType, as: String) =
+      schema.fieldNames.filterNot(_ == "payloadHash").map(f => col(s"$as.$f"))
+    raw.select(half("$.header", headerSchema, "h"), half("$.payload", payloadSchema, "p"))
+      .filter(col("h.payloadHash") === col("p.payloadHash"))
+      .select((col("h.payloadHash") +: (rest(headerSchema, "h") ++ rest(payloadSchema, "p"))).toSeq: _*)
+  }
 
   /** `blocks` — one row per header incl. orphans (Types.hs:52-67). */
   def blocks(hp: DataFrame): DataFrame = hp.select(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
   * (SURVEY §0: chainweb-data lib/ChainwebDb/Migration.hs:58-93 verifies the
   * ORM model against the live DB). Here the single source of truth is the
   * [[Flatten]] program itself: expected schemas are derived by running the
-  * flatteners over empty parsed inputs, so the check can never drift from
+  * flatteners over an empty parsed batch, so the check can never drift from
   * the code.
   */
 object Schemas {
@@ -15,10 +15,8 @@ object Schemas {
   /** Expected (name → schema) for the six tables. */
   def expected(spark: SparkSession): Map[String, StructType] = {
     import spark.implicits._
-    val hp = Flatten.joined(
-      Flatten.parseHeaders(Seq.empty[String].toDF("value")),
-      Flatten.parsePayloads(Seq.empty[String].toDF("value")))
-    Flatten.allTables(hp).map { case (n, (df, _)) => n -> df.schema }
+    Flatten.allTables(Flatten.parseEnvelopes(Seq.empty[String].toDF("value")))
+      .map { case (n, (df, _)) => n -> df.schema }
   }
 
   /** Nullability-insensitive field comparison (parquet round-trips relax

@@ -33,7 +33,7 @@ object Snapshots {
   final case class Snapshot(table: String, version: Long, files: Seq[String])
 
   private val ManifestDir = "_manifests"
-  private def fs(spark: SparkSession, path: String) =
+  private[graft] def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Data files of the table directory right now (recursive, parquet parts

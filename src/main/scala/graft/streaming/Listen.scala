@@ -57,13 +57,31 @@ object Listen {
       }
       .start()
 
-  /** One micro-batch: split the envelope, flatten to 6 tables, merge. */
+  /** One batch of envelopes: parse, flatten to the six tables, merge.
+    *
+    * The batch is parsed once: [[Flatten.parseEnvelopes]] is persisted and
+    * materialized by one `count()`, which reads `raw` once (an HTTP fetch
+    * or a drop-zone file is not re-read), and the six flatteners project
+    * and explode that one cached relation through
+    * [[Upsert.coalesceBySize]]. The cache is dropped when the merges end,
+    * whether they succeed or not.
+    *
+    * File count: a micro-batch's parse is a few KB, so the flatteners run
+    * over one partition and [[Upsert.merge]] writes one parquet file per
+    * table; a batch of many `spark.sql.files.maxPartitionBytes` keeps up
+    * to that many partitions and writes that many files per table in
+    * parallel.
+    *
+    * Scale: the cache holds the parsed batch in columnar form. A `listen`
+    * micro-batch is a few KB; a `fill` batch is its whole repair plan
+    * (≤ |plan|·chunk blocks) and spills to disk past memory (the default
+    * `MEMORY_AND_DISK` level) rather than failing. */
   def ingestBatch(spark: SparkSession, raw: DataFrame, tableDir: String): Map[String, Long] = {
-    val headers = Flatten.parseHeaders(
-      raw.select(get_json_object(col("value"), "$.header").as("value")))
-    val payloads = Flatten.parsePayloads(
-      raw.select(get_json_object(col("value"), "$.payload").as("value")))
-    Upsert.mergeAll(spark, tableDir, Flatten.allTables(Flatten.joined(headers, payloads)))
+    val hp = Flatten.parseEnvelopes(raw).persist()
+    try {
+      hp.count(): Unit
+      Upsert.mergeAll(spark, tableDir, Flatten.allTables(Upsert.coalesceBySize(hp)))
+    } finally hp.unpersist(): Unit
   }
 
   /** Stream-stream join: headers and payloads arriving as SEPARATE feeds

@@ -156,6 +156,93 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(window.forall(_ == (("g", "d", "true"))), window)
   }
 
+  test("upsert merge into a file: URI path is idempotent (replay = no-op)") {
+    val uri = Files.createTempDirectory("graft_upsert_uri").toUri.toString + "blocks"
+    val (blocks, pk) = twoBlocks("blocks")
+    assert(Upsert.merge(spark, uri, blocks, pk) === 2)
+    assert(Upsert.merge(spark, uri, blocks, pk) === 0)
+    assert(spark.read.parquet(uri).count() === 2)
+  }
+
+  private def envelopeOf(h: String, p: String) = s"""{"header":$h,"payload":$p}"""
+
+  /** A batch that inserts into all six tables and spreads over every
+    * shuffle partition: the two fixture blocks plus `n` minimal ones. */
+  private def batchLines(n: Int): Seq[String] =
+    Seq(Fixtures.envelope1, envelopeOf(Fixtures.header2, Fixtures.payload2)) ++
+      (1 to n).map(h => envelopeOf(Fixtures.mkHeader(7, h.toLong), Fixtures.mkPayload(7, h.toLong)))
+
+  private def parquetFiles(table: java.nio.file.Path): Set[String] =
+    if (!Files.exists(table)) Set.empty
+    else Files.list(table).iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+
+  private def manifests(table: java.nio.file.Path): Int =
+    Option(table.resolve("_manifests").toFile.list()).fold(0)(_.count(_.endsWith(".manifest")))
+
+  private def tableRows(dir: String, t: String): Seq[String] =
+    spark.read.parquet(s"$dir/$t").collect().map(_.toString).sorted.toSeq
+
+  test("ingestBatch reads its input once, and its tables equal the per-table flatten's") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val lines = batchLines(6)
+    val reads = spark.sparkContext.longAccumulator("envelopes read")
+    val rdd = spark.sparkContext.parallelize(lines, 3).map { l => reads.add(1); Row(l) }
+    val raw = spark.createDataFrame(rdd, StructType(Seq(StructField("value", StringType))))
+    val dir = Files.createTempDirectory("graft_ingest_once").toString
+    val counts = Listen.ingestBatch(spark, raw, dir)
+    assert(reads.value === lines.size)
+
+    // the same batch through the two-sided parse and join, table by table
+    import spark.implicits._
+    val halves = lines.toDF("value")
+    val joined = Flatten.joined(
+      Flatten.parseHeaders(halves.select(get_json_object(col("value"), "$.header").as("value"))),
+      Flatten.parsePayloads(halves.select(get_json_object(col("value"), "$.payload").as("value"))))
+    val ref = Files.createTempDirectory("graft_ingest_joined").toString
+    val refCounts = Upsert.mergeAll(spark, ref, Flatten.allTables(joined))
+    assert(counts === refCounts)
+    assert(Flatten.parseEnvelopes(halves).columns.toSeq === joined.columns.toSeq)
+    counts.keys.foreach(t => assert(tableRows(dir, t) === tableRows(ref, t), t))
+  }
+
+  test("a small batch writes one parquet file per table; its replay writes none") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_one_file")
+    Listen.ingestBatch(spark, Seq(envelopeOf(Fixtures.mkHeader(9, 1), Fixtures.mkPayload(9, 1))).toDF("value"),
+                       dir.toString): Unit
+    val tables = graft.ingest.Schemas.expected(spark).keySet.map(dir.resolve(_))
+    val files0 = tables.map(t => t -> parquetFiles(t)).toMap
+    val batch = batchLines(40).toDF("value")
+    val counts = Listen.ingestBatch(spark, batch, dir.toString)
+    assert(counts.values.forall(_ > 0), counts)
+    val files1 = tables.map(t => t -> parquetFiles(t)).toMap
+    tables.foreach(t => assert((files1(t) -- files0(t)).size === 1, t))
+    val manifests1 = tables.map(t => t -> manifests(t)).toMap
+
+    assert(Listen.ingestBatch(spark, batch, dir.toString).values.sum === 0)
+    tables.foreach { t =>
+      assert(parquetFiles(t) === files1(t), t)
+      assert(manifests(t) === manifests1(t), t)
+    }
+  }
+
+  test("the file count follows the batch's size: a few-KB maxPartitionBytes splits events") {
+    import spark.implicits._
+    val batch = batchLines(40).toDF("value")
+    val default = Files.createTempDirectory("graft_size_default").toString
+    Listen.ingestBatch(spark, batch, default): Unit
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    val small = Files.createTempDirectory("graft_size_small")
+    spark.conf.set(key, "2k")
+    try Listen.ingestBatch(spark, batch, small.toString): Unit
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(parquetFiles(small.resolve("events")).size > 1)
+    graft.ingest.Schemas.expected(spark).keys.foreach(t =>
+      assert(tableRows(small.toString, t) === tableRows(default, t), t))
+  }
+
   test("streaming listen: drop-zone → 6 tables, effectively-once") {
     val zone = Files.createTempDirectory("graft_zone").toString
     val tables = Files.createTempDirectory("graft_tables").toString
