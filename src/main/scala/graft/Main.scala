@@ -136,11 +136,8 @@ object Main {
   /** `card` — print the per-source DATASET CARD
     * ([[operators.DataCard.q181DataCard]]) as a TSV with a header row:
     * the datasheet a release ships next to its parquet. */
-  def cardCmd(spark: SparkSession, sfDir: String): Seq[String] = {
-    val df = operators.DataCard.q181DataCard(spark, sfDir)
-    val header = df.columns.mkString("\t")
-    header +: df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
-  }
+  def cardCmd(spark: SparkSession, sfDir: String): Seq[String] =
+    tsv(operators.DataCard.q181DataCard(spark, sfDir))
 
   /** `vacuum` — snapshot-manifest retention over every table under
     * `tables` that has a `_manifests/` directory ([[sources.Snapshots
@@ -161,11 +158,8 @@ object Main {
       }
   }
 
-  def indexCmd(spark: SparkSession, sfDir: String): Seq[String] = {
-    val df = operators.Similarity.indexLifecycleStats(spark, sfDir)
-    df.columns.mkString("\t") +:
-      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
-  }
+  def indexCmd(spark: SparkSession, sfDir: String): Seq[String] =
+    tsv(operators.Similarity.indexLifecycleStats(spark, sfDir))
 
   /** `graft index <sfDir> text` — the sparse twin of the IVF lifecycle
     * verb: build the persisted inverted index (bucket-partitioned BM25
@@ -173,16 +167,13 @@ object Main {
     * per-bucket accounting plus a serve-from-storage smoke (top hit per
     * query via the pruned q264 path). */
   def indexTextCmd(spark: SparkSession, sfDir: String): Seq[String] = {
-    def dump(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.columns.mkString("\t") +:
-        df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
     // materialize the accounting BEFORE q264's rebuild overwrites the
     // postings files its lazy plan points at (overwrite = new part names)
-    val acct = dump(operators.Retrieval.q263TextIndexBuild(spark, sfDir))
+    val acct = tsv(operators.Retrieval.q263TextIndexBuild(spark, sfDir))
     val serve = operators.Retrieval.q264TextIndexQuery(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("rank") === 1L)
     acct ++ Seq("--- top hit per query (served from storage) ---") ++
-      dump(serve)
+      tsv(serve)
   }
 
   /** `graft index <sfDir> text upsert` — build the lifecycle store from
@@ -192,10 +183,8 @@ object Main {
   def indexTextUpsertCmd(spark: SparkSession, sfDir: String): Seq[String] = {
     val store = operators.Retrieval.textLifecycleStore(spark, sfDir)
     val (v, n, dl) = operators.Retrieval.latestTextStats(spark, store)
-    val df = operators.Retrieval.textStoreAccounting(spark, store)
     s"stats\tversion=$v\tn_docs=$n\ttotal_dl=$dl" +:
-      df.columns.mkString("\t") +:
-      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
+      tsv(operators.Retrieval.textStoreAccounting(spark, store))
   }
 
   /** `graft index <sfDir> text compact` — the full verb chain (build →
@@ -207,11 +196,9 @@ object Main {
     val affected = operators.Retrieval.textCompact(spark, store)
     val (v, n, dl) = operators.Retrieval.latestTextStats(spark, store)
     val nTomb = spark.read.parquet(s"$store/tombstones").count()
-    val df = operators.Retrieval.textStoreAccounting(spark, store)
     Seq(s"compacted buckets: ${affected.mkString(",")}",
         s"stats\tversion=$v\tn_docs=$n\ttotal_dl=$dl\ttombstones=$nTomb") ++
-      (df.columns.mkString("\t") +:
-        df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t")))
+      tsv(operators.Retrieval.textStoreAccounting(spark, store))
   }
 
   /** `graft maintain <tablesDir> <outDir> [keepLast]` — the reference's
@@ -264,11 +251,30 @@ object Main {
   def indexCompactCmd(spark: SparkSession, sfDir: String): Seq[String] = {
     val store = operators.Similarity.indexLifecycleStore(spark, sfDir)
     val affected = operators.Similarity.compactStore(spark, store)
-    val df = operators.Similarity.storeStats(spark, store)
     s"compacted cells: ${affected.mkString(",")}" +:
-      df.columns.mkString("\t") +:
-      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
+      tsv(operators.Similarity.storeStats(spark, store))
   }
+
+  /** A relation as TSV lines: the column names, then one line per row. */
+  private def tsv(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.columns.mkString("\t") +:
+      df.collect().toSeq.map(_.toSeq.map(String.valueOf).mkString("\t"))
+
+  /** Run a verb on a fresh session, print its lines, stop the session. */
+  private def printAll(verb: SparkSession => Seq[String]): Unit = {
+    val spark = session()
+    verb(spark).foreach(println)
+    spark.stop()
+  }
+
+  /** `vacuum`'s and `maintain`'s optional `[keepLast]` (default 16). */
+  private def keepLastArg(cmd: String, rest: List[String]): Int =
+    rest.headOption.map { k =>
+      try k.toInt catch { case _: NumberFormatException =>
+        System.err.println(s"$cmd: keepLast must be a number, got: $k")
+        sys.exit(2)
+      }
+    }.getOrElse(16)
 
   def main(args: Array[String]): Unit = args.toList match {
     case "listen" :: zone :: tables :: ckpt :: Nil =>
@@ -285,26 +291,17 @@ object Main {
     // flatten → merge, the reference's fill worker); without it the plan is
     // printed for an out-of-engine fetcher, as before.
     case ("fill" | "gaps" | "backfill") :: tables :: rest =>
-      val spark = session()
-      fillDispatch(spark, tables, rest).foreach(println)
-      spark.stop()
+      printAll(fillDispatch(_, tables, rest))
 
     case "single" :: tables :: cid :: height :: Nil =>
-      val spark = session()
-      singleCmd(spark, tables, cid.toLong, height.toLong).foreach(println)
-      spark.stop()
+      printAll(singleCmd(_, tables, cid.toLong, height.toLong))
 
     case "fill-events" :: tables :: start :: Nil =>
-      val spark = session()
-      fillEventsCmd(spark, tables, start.toLong).foreach(println)
-      spark.stop()
+      printAll(fillEventsCmd(_, tables, start.toLong))
 
     case "backfill-transfers" :: tables :: activation :: chains :: rest =>
-      val spark = session()
-      backfillTransfersCmd(spark, tables, activation.toLong, chains.toInt,
-                           rest.headOption.map(_.toInt).getOrElse(200))
-        .foreach(println)
-      spark.stop()
+      printAll(backfillTransfersCmd(_, tables, activation.toLong, chains.toInt,
+                                    rest.headOption.map(_.toInt).getOrElse(200)))
 
     case "migrate" :: tables :: rest =>
       val spark = session()
@@ -334,79 +331,51 @@ object Main {
       spark.stop()
 
     case "funnel" :: sfDir :: rest if rest.size <= 1 =>
-      val spark = session()
-      funnelCmd(spark, sfDir, rest.headOption.getOrElse("v1")).foreach(println)
-      spark.stop()
+      printAll(funnelCmd(_, sfDir, rest.headOption.getOrElse("v1")))
 
     case "card" :: sfDir :: Nil =>
-      val spark = session()
-      cardCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(cardCmd(_, sfDir))
 
     // `graft index <sfDir>` — persisted-IVF maintenance lifecycle
     // (build → upsert → tombstone) with the per-cell accounting TSV a
     // rebalance/compaction planner consumes (the q249/q245/q258 CRUD
     // story as one operational command).
     case "index" :: sfDir :: Nil =>
-      val spark = session()
-      indexCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(indexCmd(_, sfDir))
 
     // `graft index <sfDir> compact` — the maintenance pass that reclaims
     // tombstoned rows (q259/q260; the reference analog: the scheduled
     // maintenance loop, Server.hs:184-210).
     case "index" :: sfDir :: "compact" :: Nil =>
-      val spark = session()
-      indexCompactCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(indexCompactCmd(_, sfDir))
 
     // `graft index <sfDir> text` — build + smoke the persisted inverted
     // index (q263/q264), the sparse side of the serving story.
     case "index" :: sfDir :: "text" :: Nil =>
-      val spark = session()
-      indexTextCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(indexTextCmd(_, sfDir))
 
     // `graft index <sfDir> text upsert|compact` — the text-index
     // maintenance lifecycle (q266-q270): affected-bucket merges with
     // versioned stats, tombstone compaction with conservation accounting.
     case "index" :: sfDir :: "text" :: "upsert" :: Nil =>
-      val spark = session()
-      indexTextUpsertCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(indexTextUpsertCmd(_, sfDir))
 
     case "index" :: sfDir :: "text" :: "compact" :: Nil =>
-      val spark = session()
-      indexTextCompactCmd(spark, sfDir).foreach(println)
-      spark.stop()
+      printAll(indexTextCompactCmd(_, sfDir))
 
     // `graft maintain <tablesDir> <outDir> [keepLast]` — the scheduled
     // nightly pass: richlist/supply/stats + manifest vacuum + index-store
     // compaction in one idempotent sequence (Server.hs:184-210 cadence).
     case "maintain" :: tables :: out :: rest if rest.size <= 1 =>
-      val keep = rest.headOption.map { k =>
-        try k.toInt catch { case _: NumberFormatException =>
-          System.err.println(s"maintain: keepLast must be a number, got: $k")
-          sys.exit(2)
-        }
-      }.getOrElse(16)
-      val spark = session()
-      maintainCmd(spark, tables, out, keep).foreach(println)
-      spark.stop()
+      val keep = keepLastArg("maintain", rest)
+      printAll(maintainCmd(_, tables, out, keep))
 
     // `graft vacuum <tableDir> [keepLast]` — drop superseded snapshot
     // manifests (bounded per-request `_manifests/` listing; see
     // sources.Snapshots.vacuum).
     case "vacuum" :: tables :: rest if rest.size <= 1 =>
-      val keep = rest.headOption.map { k =>
-        try k.toInt catch { case _: NumberFormatException =>
-          System.err.println(s"vacuum: keepLast must be a number, got: $k")
-          sys.exit(2)
-        }
-      }.getOrElse(16)
-      val spark = session()
-      vacuumCmd(spark, tables, keep).foreach(println)
-      spark.stop()
+      val keep = keepLastArg("vacuum", rest)
+      printAll(vacuumCmd(_, tables, keep))
 
     case "check-schema" :: tables :: Nil =>
       val spark = session()

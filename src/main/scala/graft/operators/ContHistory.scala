@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Continuation (pact) history — the reference's recursive-CTE join
@@ -12,24 +12,24 @@ import org.apache.spark.sql.functions._
   * ≤ ~10), so a bounded iterative join with per-iteration checkpoints is
   * faithful and scale-safe (SURVEY §7.3.1) — each step is one equi-join
   * on the node id, and the frontier only shrinks. [[resolveCode]] is the
-  * one walk; [[chains]] runs it over the ingested transactions and q63
+  * one walk; [[chains]] runs it over a pinned read of the ingested
+  * transactions (the tx-search source, [[TxSearch.source]]) and q63
   * ([[TxSearch.q63SearchChainCode]]) over the synthetic events.
   */
 object ContHistory {
 
-  /** For every continuation tx: the ancestor chain (self first, root
-    * last) and the chain's code (first non-null walking up). The walk runs
-    * over ONE node per request key: orphan fork twins carry the same
-    * request key (and so the same command), and a node per copy would
-    * multiply every chain through a twin. */
-  def chains(spark: SparkSession, tableDir: String, maxDepth: Int = 25): DataFrame = {
-    val tx = graft.sources.Snapshots.readPinned(spark, s"$tableDir/transactions")
-      .select(col("requestkey").as("id"), col("pactid").as("parent"), col("code"))
-      .dropDuplicates("id")
-    resolveCode(tx, maxDepth)
+  /** For every continuation tx of `tx` (a read of the `transactions`
+    * table): the ancestor chain (self first, root last) and the chain's
+    * code (first non-null walking up), one row per request key in no
+    * particular order. The walk runs over ONE node per request key: orphan
+    * fork twins carry the same request key (and so the same command), and a
+    * node per copy would multiply every chain through a twin. */
+  def chains(tx: DataFrame, maxDepth: Int = 25): DataFrame =
+    resolveCode(
+      tx.select(col("requestkey").as("id"), col("pactid").as("parent"), col("code"))
+        .dropDuplicates("id"),
+      maxDepth)
       .select(col("seed").as("requestkey"), col("chain"), col("chain_code"))
-      .orderBy(col("requestkey"))
-  }
 
   /** First-non-null-code ancestor walk over an edge relation
     * `nodes(id, parent, code)` with one row per id — the abstract shape of

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * The per-tx events and signers become sorted struct arrays via
   * `sort_array(collect_list(struct(idx, …)))` — the reference's app-side
   * merge (two extra point queries + Haskell zip) collapses into two
-  * aggregations co-keyed with the tx row. Point-lookup latency at scale
+  * aggregations co-keyed with the tx row, and its ContinuationHistory
+  * query a join of [[TxSearch.source]]. Point-lookup latency at scale
   * rides on requestkey clustering/stats (SURVEY §4), not an index.
   */
 object TxDetail {
@@ -38,9 +39,17 @@ object TxDetail {
         col("sig")))).as("signers"))
     val blocks = pinned("blocks")
       .select(col("hash").as("block"), col("creationtime").as("block_time"))
+    // keyed by the tx copy, so orphan twins (one key, two blocks) each
+    // match one history row; the source pins a version no older than `tx`.
+    // One key's rows: broadcast, since the planner has no size for the
+    // checkpointed source and would shuffle both sides instead.
+    val hist = broadcast(TxSearch.source(spark, tableDir)
+      .filter(col("requestkey") === requestkey)
+      .select(col("requestkey"), col("block"), col("initial_code"), col("previous_steps")))
     tx.join(events, Seq("requestkey", "block"), "left")
       .join(signers, Seq("requestkey"), "left")
       .join(blocks, Seq("block"), "left")
+      .join(hist, Seq("requestkey", "block"), "left")
       .orderBy(col("block"))
   }
 

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * Spark-first: the reference runs the recursive CTE per row via a
   * correlated LATERAL ("very hacky" by its own comment, Queries.hs:114-123);
   * here the continuation chains are a set-based iterative join computed once
-  * ([[ContHistory]]) and LEFT-joined to the summaries — strictly better at
-  * scale (SURVEY §4's lateral→join rewrite), and at 100 TB the chain
-  * relation is the thing to materialize incrementally at ingest.
+  * per committed `transactions` version ([[ContHistory]]) and LEFT-joined
+  * to the summaries — strictly better at scale (SURVEY §4's lateral→join
+  * rewrite), and at 100 TB the chain relation is the thing to materialize
+  * incrementally at ingest.
   */
 object TxSearch {
 
@@ -25,20 +26,25 @@ object TxSearch {
     * + `code_merged` (the searchable text) + `initial_code`/`previous_steps`
     * (the ContinuationHistory decoration, Queries.hs:104-108). Feed to
     * [[graft.plans.BoundedScan.performBoundedScan]] with the txs cursor
-    * (height DESC, requestkey DESC — Queries.hs:85-88). */
-  def source(spark: SparkSession, tableDir: String): DataFrame = {
-    // Pinned read — per-request REPEATABLE READ (see EventSearch.source)
-    val tx = graft.sources.Snapshots.readPinned(spark, s"$tableDir/transactions")
-    val hist = ContHistory.chains(spark, tableDir)
-      .select(col("requestkey"),
-              col("chain_code").as("initial_code"),
-              col("chain").as("previous_steps"))
-    tx.select(col("chainid"), col("height"), col("block"), col("creationtime"),
-              col("requestkey"), col("sender"), col("code"),
-              col("continuation"), col("goodresult"))
-      .join(hist, Seq("requestkey"), "left")
-      .withColumn("code_merged", coalesce(col("code"), col("initial_code")))
-  }
+    * (height DESC, requestkey DESC — Queries.hs:85-88).
+    * One read of the latest committed `transactions` version feeds both
+    * the summaries and the [[ContHistory.chains]] walk; the checkpointed
+    * join is memoized per version ([[graft.sources.Snapshots.derivePinned]]),
+    * so the walk reruns only when a new version lands. */
+  def source(spark: SparkSession, tableDir: String): DataFrame =
+    graft.sources.Snapshots.derivePinned(spark, s"$tableDir/transactions",
+        graft.sources.Snapshots.TxSearchSource) { tx =>
+      val hist = ContHistory.chains(tx)
+        .select(col("requestkey"),
+                col("chain_code").as("initial_code"),
+                col("chain").as("previous_steps"))
+      tx.select(col("chainid"), col("height"), col("block"), col("creationtime"),
+                col("requestkey"), col("sender"), col("code"),
+                col("continuation"), col("goodresult"))
+        .join(hist, Seq("requestkey"), "left")
+        .withColumn("code_merged", coalesce(col("code"), col("initial_code")))
+        .localCheckpoint()
+    }
 
   /** The filter-mark predicate (P3 — Queries.hs:158-160). */
   def matchCol(search: String): Column =

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.Tables
-import graft.operators.{AccountHistory, ChainTime, Coins, EventSearch, TxSearch}
+import graft.operators.{AccountHistory, ChainTime, Coins, EventSearch, TxDetail, TxSearch}
 import graft.plans.BoundedScan
 import graft.plans.BoundedScan.{Continuation, CursorSpec}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -40,6 +40,10 @@ import org.apache.spark.sql.functions._
   *   - `GET /coins`       — circulating supply (Server.hs:227-231)
   *   - `GET /stats`       — cached O(1) stats (Server.hs:633-641 estimate
   *     semantics: counts come from the maintenance pass, not a live scan)
+  *
+  * One pin rule: every request reads the latest committed snapshot of each
+  * table, so a server beside `listen` sees each batch once it commits; the
+  * tx-search source is memoized per committed version ([[TxSearch.source]]).
   */
 class Api(spark: SparkSession, dataDir: String, port: Int,
           tablesDir: Option[String] = None,
@@ -50,14 +54,6 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
   private val demoSpec = CursorSpec(Seq("user_id" -> true, "event_id" -> true))
   private def events = Tables.events(spark, dataDir)
     .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-
-  /** Tx-search source pinned ONCE per server instance — the Spark analog of
-    * the reference's REPEATABLE READ transaction around the two bounded-scan
-    * phases (Server.hs:322): every request phase reads the same snapshot.
-    * (`localCheckpoint` also materializes the continuation-chain join so
-    * requests don't re-run the iterative resolver.) */
-  private lazy val txSearchSrc: DataFrame =
-    TxSearch.source(spark, tables).localCheckpoint()
 
   private def tables: String = tablesDir.getOrElse(
     throw new IllegalStateException("no ingested tables configured"))
@@ -284,7 +280,7 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     val search = p.getOrElse("search",
       throw Api.ApiError(404, "You must specify a search string"))
     page(p, bounded, txSpec)(
-      (ChainTime.heightRange(txSearchSrc, longParam(p, "minheight"), longParam(p, "maxheight")),
+      (ChainTime.heightRange(TxSearch.source(spark, tables), longParam(p, "minheight"), longParam(p, "maxheight")),
        TxSearch.matchCol(search)))(_.map(Dto.txSummary))
   }
 
@@ -341,23 +337,17 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
     val rk = decode(path.stripPrefix(prefix))
     val dir = tables
     val rows =
-      (if (one) graft.operators.TxDetail.lookupOne(spark, dir, rk)
-       else graft.operators.TxDetail.lookup(spark, dir, rk)).collect()
-    // continuation-history decoration from the checkpointed search source
-    // (the reference's separate ContinuationHistory query per detail row)
-    val hist = txSearchSrc.filter(col("requestkey") === rk)
-      .select(col("initial_code"), col("previous_steps"))
-      .collect().headOption
-    val (ic, ps) = hist.map(h => (h.get(0), h.get(1))).getOrElse((null, null))
-    (rows.map(r => Dto.txDetail(r, ic, ps)).mkString("[", ",", "]"), Map.empty)
+      (if (one) TxDetail.lookupOne(spark, dir, rk)
+       else TxDetail.lookup(spark, dir, rk)).collect()
+    (rows.map(Dto.txDetail).mkString("[", ",", "]"), Map.empty)
   }
 
   /** Top-10 recent (O4 — Server.hs:621-631): [TxSummary] over the
     * ingested tables; the synthetic-events demo shape without them. */
   private def recent(p: Map[String, String]): (String, Map[String, String]) =
     tablesDir match {
-      case Some(_) =>
-        (txSearchSrc.orderBy(col("height").desc, col("requestkey").desc)
+      case Some(dir) =>
+        (TxSearch.source(spark, dir).orderBy(col("height").desc, col("requestkey").desc)
            .limit(10).collect()
            .map(Dto.txSummary).mkString("[", ",", "]"),
          Map.empty)

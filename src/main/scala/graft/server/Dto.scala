@@ -104,11 +104,10 @@ object Dto {
     "previousSteps" -> (if (get(r, "initial_code") == null) "null"
                         else jsonValue(get(r, "previous_steps")))))
 
-  /** TxDetail from a [[graft.operators.TxDetail.lookup]] row decorated
-    * with block time + continuation history (Server.hs:359-389).
-    * `initialCode`/`previousSteps` come from the continuation-history
-    * relation (the reference's separate ContinuationHistory query). */
-  def txDetail(r: Row, initialCode: Any = null, previousSteps: Any = null): String = {
+  /** TxDetail from a [[graft.operators.TxDetail.lookup]] row, which
+    * carries the block time and the continuation history
+    * (`initial_code`/`previous_steps`) (Server.hs:359-389). */
+  def txDetail(r: Row): String = {
     val events = get(r, "events") match {
       case null => "[]"
       case xs: scala.collection.Seq[_] => xs.map { case e: Row =>
@@ -156,9 +155,9 @@ object Dto {
       "code"          -> jsonValue(get(r, "code")),
       "success"       -> (get(r, "goodresult") != null).toString,
       "events"        -> events,
-      "initialCode"   -> jsonValue(initialCode),
-      "previousSteps" -> (if (initialCode == null) "null"
-                          else jsonValue(previousSteps)),
+      "initialCode"   -> jsonValue(get(r, "initial_code")),
+      "previousSteps" -> (if (get(r, "initial_code") == null) "null"
+                          else jsonValue(get(r, "previous_steps"))),
       "signers"       -> signers,
       "sigs"          -> sigs))
   }

@@ -112,36 +112,47 @@ object Snapshots {
   def read(spark: SparkSession, snap: Snapshot): DataFrame =
     spark.read.parquet(snap.files: _*)
 
-  /** Snapshot-handle memo, keyed by (appId, table path, version) — the
-    * [[graft.Tables]] memo's discipline applied to versioned reads. A
+  /** What a memo entry holds for a version: its raw read, or the tx-search
+    * source derived from it ([[graft.operators.TxSearch.source]]). */
+  sealed trait Kind
+  case object RawRead extends Kind
+  case object TxSearchSource extends Kind
+
+  /** Snapshot-handle memo, keyed by (appId, kind, table path, version) —
+    * the [[graft.Tables]] memo's discipline applied to versioned reads. A
     * committed version's file set is immutable by construction (writers
     * only add files and manifests), so unlike a directory handle this
     * cache can never go stale; it removes the per-request parquet-footer
-    * re-read from the serving path (the round-8 `Tables.load` lesson). */
+    * re-read from the serving path (the round-8 `Tables.load` lesson), and
+    * a derived relation is built once per version. */
   private val handles =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, Kind, String, Long), DataFrame]
 
-  /** How many versions of one table the handle memo retains. A long-running
-    * server commits a new version per ingest merge; without eviction every
-    * superseded handle (plan + full file listing) stays reachable — a
-    * driver memory leak growing with commit frequency × table size. The
-    * small window (not just latest) keeps handles alive for requests that
-    * pinned a version just before a concurrent commit bumped it. */
-  private val HandleWindow = 4
+  /** How many versions of one table the handle memo retains per kind. A
+    * long-running server commits a new version per ingest merge; without
+    * eviction every superseded handle (plan + full file listing) stays
+    * reachable — a driver memory leak growing with commit frequency ×
+    * table size. The small window (not just latest) keeps handles alive
+    * for requests that pinned a version just before a concurrent commit
+    * bumped it; Spark's context cleaner frees an evicted checkpoint. */
+  private[graft] val HandleWindow = 4
 
-  def readCached(spark: SparkSession, snap: Snapshot): DataFrame = {
+  private def cached(spark: SparkSession, kind: Kind, snap: Snapshot)(build: => DataFrame): DataFrame = {
     val app = spark.sparkContext.applicationId
-    handles.getOrElseUpdate((app, snap.table, snap.version), {
-      handles.filterInPlace { case ((a, t, v), _) =>
-        a == app && !(t == snap.table && v <= snap.version - HandleWindow)
+    handles.getOrElseUpdate((app, kind, snap.table, snap.version), {
+      handles.filterInPlace { case ((a, k, t, v), _) =>
+        a == app && !(k == kind && t == snap.table && v <= snap.version - HandleWindow)
       }
-      read(spark, snap)
+      build
     })
   }
 
-  /** Test hook: live memo entries for one table path (eviction pin). */
-  private[graft] def cachedHandleCount(table: String): Int =
-    handles.keys.count(_._2 == table)
+  def readCached(spark: SparkSession, snap: Snapshot): DataFrame =
+    cached(spark, RawRead, snap)(read(spark, snap))
+
+  /** Test hook: live memo entries of one kind for one table (eviction pin). */
+  private[graft] def cachedHandleCount(table: String, kind: Kind = RawRead): Int =
+    handles.keys.count { case (_, k, t, _) => k == kind && t == table }
 
   /** Maintenance: delete all manifests older than the newest `keepLast`
     * versions (the on-disk complement of the handle-memo window above).
@@ -215,33 +226,42 @@ object Snapshots {
     }
   }
 
-  /** Pin-and-read convenience: latest committed version, else (for tables
-    * written before snapshotting existed) commit the current state first.
-    * Served from the version-keyed handle memo. The bootstrap commit is
-    * serialized in-process; if it still loses a cross-process race it
-    * proceeds on the winner's manifest. Only a directory that FAILS an
-    * explicit writability probe falls back to a raw, unpinned read (the
-    * decision is logged and memoized per table) — a transient IO failure
-    * on a writable mount propagates instead of silently losing the pin. */
-  def readPinned(spark: SparkSession, path: String): DataFrame =
-    latest(spark, path) match {
-      case Some(snap) => readCached(spark, snap)
-      case None if readOnlyTables.contains(path) => spark.read.parquet(path)
-      case None =>
-        val snap = bootstrapLock.synchronized {
-          latest(spark, path).getOrElse {
-            try commit(spark, path)
-            catch {
-              case e: IllegalStateException =>
-                // lost a cross-process rename race: the winner's manifest
-                // pins the same pre-existing file set — read that
-                latest(spark, path).getOrElse(throw e)
-              case e: java.io.IOException =>
-                if (probeReadOnly(spark, path)) null else throw e
-            }
+  /** The latest committed version, else (for tables written before
+    * snapshotting existed) commit the current state first. The bootstrap
+    * commit is serialized in-process; if it still loses a cross-process
+    * race it proceeds on the winner's manifest. None only for a directory
+    * that FAILS an explicit writability probe (the decision is logged and
+    * memoized per table) — a transient IO failure on a writable mount
+    * propagates instead of silently losing the pin. */
+  private def pin(spark: SparkSession, path: String): Option[Snapshot] =
+    latest(spark, path).orElse {
+      if (readOnlyTables.contains(path)) None
+      else bootstrapLock.synchronized {
+        latest(spark, path).orElse {
+          try Some(commit(spark, path))
+          catch {
+            case e: IllegalStateException =>
+              // lost a cross-process rename race: the winner's manifest
+              // pins the same pre-existing file set — read that
+              Some(latest(spark, path).getOrElse(throw e))
+            case e: java.io.IOException =>
+              if (probeReadOnly(spark, path)) None else throw e
           }
         }
-        if (snap == null) spark.read.parquet(path)
-        else readCached(spark, snap)
+      }
     }
+
+  /** Pin-and-read convenience: the latest committed version ([[pin]]),
+    * served from the version-keyed handle memo; a raw, unpinned read only
+    * for a proven read-only table. */
+  def readPinned(spark: SparkSession, path: String): DataFrame =
+    pin(spark, path).fold(spark.read.parquet(path))(readCached(spark, _))
+
+  /** `derive` of the [[readPinned]] read, run once per committed version
+    * and memoized as `kind` under the same [[HandleWindow]] eviction (on
+    * every call for a proven read-only table, which has no version). */
+  def derivePinned(spark: SparkSession, path: String, kind: Kind)
+                  (derive: DataFrame => DataFrame): DataFrame =
+    pin(spark, path).fold(derive(spark.read.parquet(path)))(snap =>
+      cached(spark, kind, snap)(derive(readCached(spark, snap))))
 }

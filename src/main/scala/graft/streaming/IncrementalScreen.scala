@@ -51,9 +51,11 @@ object IncrementalScreen {
   def shinglesPath(spark: SparkSession): String = Stores.path(spark, "inc_screen_shingles")
   def decisionsPath(spark: SparkSession): String = Stores.path(spark, "inc_screen_decisions")
 
+  /** The state table at `path`, or an empty one of `schema`; `path` may be
+    * a URI (`file:`, `hdfs:`, `s3a:`), so its Hadoop file system is asked. */
   private def readIfExists(spark: SparkSession, path: String,
                            schema: String): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+    if (graft.sources.Snapshots.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
       spark.read.parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

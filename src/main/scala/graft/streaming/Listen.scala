@@ -26,15 +26,8 @@ object Listen {
     * SSE event body paired with its fetched payload. */
   def stream(spark: SparkSession, dropZone: String, tableDir: String,
              checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema("value STRING")
-      .text(dropZone)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch.sparkSession, batch, tableDir): Unit
-      }
-      .start()
+    ingestEach(spark.readStream.schema("value STRING").text(dropZone),
+               tableDir, checkpoint)
 
   /** The same listen pipeline over the LIVE SSE source ([[SseSourceProvider]],
     * format "graft-sse") instead of the drop-zone: BlockHeader frames'
@@ -43,14 +36,21 @@ object Listen {
     * the source's scaladoc: at-most-once hop + idempotent merge. */
   def streamSse(spark: SparkSession, host: String, port: Int, tableDir: String,
                 checkpoint: String): StreamingQuery =
-    spark.readStream
-      .format("graft-sse")
-      .option("host", host)
-      .option("port", port.toString)
-      .load()
-      .filter(col("event") === "BlockHeader")
-      .select(col("value"))
-      .writeStream
+    ingestEach(
+      spark.readStream
+        .format("graft-sse")
+        .option("host", host)
+        .option("port", port.toString)
+        .load()
+        .filter(col("event") === "BlockHeader")
+        .select(col("value")),
+      tableDir, checkpoint)
+
+  /** Start `envelopes`' query: each micro-batch goes through
+    * [[ingestBatch]], with its progress kept under `checkpoint`. */
+  private def ingestEach(envelopes: DataFrame, tableDir: String,
+                         checkpoint: String): StreamingQuery =
+    envelopes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         ingestBatch(batch.sparkSession, batch, tableDir): Unit

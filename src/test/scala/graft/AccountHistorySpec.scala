@@ -40,7 +40,8 @@ class AccountHistorySpec extends AnyFunSuite with SparkSpec {
 
     // continuation history: rk2 (cont) chains to rk1 (exec); the chain
     // code is the first non-null walking up (rk1's).
-    val ch = graft.operators.ContHistory.chains(spark, dir).collect()
+    val ch = graft.operators.ContHistory.chains(
+      graft.sources.Snapshots.readPinned(spark, s"$dir/transactions")).collect()
     assert(ch.length === 1)
     assert(ch.head.getAs[String]("requestkey") === "rk2")
     assert(ch.head.getAs[scala.collection.Seq[String]]("chain").toSeq === Seq("rk2", "rk1"))

@@ -180,15 +180,17 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     } finally api.stop()
   }
 
+  /** blk1t: an orphan twin of blk1 at the same height carrying the same
+    * txs — rk1 (exec), rk2 (its continuation) and rk3. */
+  private def twin(json: String) = json.replace("\"hash\":\"blk1\"", "\"hash\":\"blk1t\"")
+    .replace("\"payloadHash\":\"ph1\"", "\"payloadHash\":\"ph1t\"")
+
   test("/txs/search returns one row per block copy when a continuation " +
        "and its block's orphan twin share request keys") {
-    // blk1t: an orphan twin of blk1 at the same height carrying the same
-    // txs — rk1 (exec), rk2 (its continuation) and rk3
-    def twin(json: String) = json.replace("\"hash\":\"blk1\"", "\"hash\":\"blk1t\"")
-      .replace("\"payloadHash\":\"ph1\"", "\"payloadHash\":\"ph1t\"")
     val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1,
       twin(Fixtures.header1) -> twin(Fixtures.payload1))
-    val chains = graft.operators.ContHistory.chains(spark, dir).collect()
+    val chains = graft.operators.ContHistory.chains(
+      graft.sources.Snapshots.readPinned(spark, s"$dir/transactions")).collect()
       .map(r => r.getAs[String]("requestkey") -> r.getAs[scala.collection.Seq[String]]("chain").toSeq)
     assert(chains.toSeq === Seq("rk2" -> Seq("rk2", "rk1")))
 
@@ -214,6 +216,57 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
       assert(rows.toSeq === (for (rk <- Seq("rk3", "rk2", "rk1");
                                   blk <- Seq("blk1t", "blk1")) yield rk -> blk))
     } finally api.stop()
+  }
+
+  test("search, recent and detail see txs ingested after the server's first search") {
+    import spark.implicits._
+    def ingest(dir: String, h: String, p: String): Unit =
+      graft.streaming.Listen.ingestBatch(spark,
+        Seq(s"""{"header":$h,"payload":$p}""").toDF("value"), dir): Unit
+    def keys(body: String): Set[String] =
+      """"requestKey":"(rk\d)"""".r.findAllMatchIn(body).map(_.group(1)).toSet
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      assert(keys(get(s"$base/txs/search?search=coin").body()) === Set("rk1", "rk2", "rk3"))
+
+      ingest(dir, Fixtures.header2, Fixtures.payload2)
+      assert(keys(get(s"$base/txs/search?search=coin").body()) === Set("rk1", "rk2", "rk3", "rk4"))
+      assert(keys(get(s"$base/txs/recent").body()).contains("rk4"))
+      val rk4 = get(s"$base/txs/tx/rk4")
+      assert(rk4.statusCode() === 200)
+      assert(rk4.body().contains("\"initialCode\":\"(coin.transfer-crosschain)\""), rk4.body())
+
+      // an orphan twin of block 1 repeats rk2: one detail row per copy,
+      // each decorated with rk2's history, none multiplied by the twin
+      ingest(dir, twin(Fixtures.header1), twin(Fixtures.payload1))
+      val rk2 = get(s"$base/txs/txs/rk2").body()
+      assert(""""blockHash":"(blk1t?)"""".r.findAllMatchIn(rk2).map(_.group(1)).toSeq.sorted ===
+        Seq("blk1", "blk1t"), rk2)
+      def count(lit: String) = java.util.regex.Pattern.quote(lit).r.findAllIn(rk2).length
+      assert(count("\"initialCode\":\"(coin.transfer \\\"alice") === 2, rk2)
+      assert(count("\"previousSteps\":[\"rk2\",\"rk1\"]") === 2, rk2)
+    } finally api.stop()
+  }
+
+  test("the tx-search source is built once per committed version, and the " +
+       "memo keeps at most HandleWindow versions of it") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val tx = s"$dir/transactions"
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      (1 to graft.sources.Snapshots.HandleWindow + 3).foreach { _ =>
+        graft.sources.Snapshots.commit(spark, tx): Unit
+        assert(get(s"$base/txs/search?search=coin").statusCode() === 200)
+      }
+    } finally api.stop()
+    val live = graft.sources.Snapshots.cachedHandleCount(tx, graft.sources.Snapshots.TxSearchSource)
+    assert(live >= 1 && live <= graft.sources.Snapshots.HandleWindow, s"$live tx-search sources")
+    assert(graft.operators.TxSearch.source(spark, dir) eq graft.operators.TxSearch.source(spark, dir))
   }
 
   /** Status line of a raw request, for targets `java.net.URI` refuses. */

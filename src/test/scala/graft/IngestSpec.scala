@@ -260,6 +260,34 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(s"$tables/events").count() === 7)
   }
 
+  test("streaming listen: a restart from the checkpoint after a crash mid-batch " +
+       "converges to the uninterrupted run's tables") {
+    val zone = Files.createTempDirectory("graft_zone_crash")
+    Files.writeString(zone.resolve("b1.json"),
+      Seq(Fixtures.envelope1, envelopeOf(Fixtures.header2, Fixtures.payload2)).mkString("\n"))
+    def run(tables: java.nio.file.Path, ckpt: java.nio.file.Path): Unit = {
+      val q = Listen.stream(spark, zone.toString, tables.toString, ckpt.toString)
+      try q.processAllAvailable() finally q.stop()
+    }
+    val tables = Files.createTempDirectory("graft_tables_crash")
+    val ckpt = Files.createTempDirectory("graft_ckpt_crash")
+    Files.writeString(tables.resolve("events"), "not a table") // blocks the events merge
+    val crashed = Listen.stream(spark, zone.toString, tables.toString, ckpt.toString)
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](crashed.processAllAvailable())
+    finally crashed.stop()
+    assert(manifests(tables.resolve("transactions")) === 1)
+
+    Files.delete(tables.resolve("events"))
+    run(tables, ckpt)
+    val clean = Files.createTempDirectory("graft_tables_clean")
+    run(clean, Files.createTempDirectory("graft_ckpt_clean"))
+    twoBlocks.foreach { case (t, (_, pk)) =>
+      assert(tableRows(tables.toString, t) === tableRows(clean.toString, t), t)
+      val got = spark.read.parquet(tables.resolve(t).toString)
+      assert(got.select(pk.map(col): _*).distinct().count() === got.count(), t)
+    }
+  }
+
   test("SSE MicroBatchStream: live listen path over the custom source") {
     val tables = Files.createTempDirectory("graft_sse_tables").toString
     val ckpt = Files.createTempDirectory("graft_sse_ckpt").toString

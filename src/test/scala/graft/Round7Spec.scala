@@ -187,4 +187,21 @@ class Round7Spec extends AnyFunSuite with SparkSpec {
         "replay must not grow the band state")
     } finally spark.conf.unset("spark.graft.store.base")
   }
+
+  test("incremental screen under a file: store base: batch 2's near-dup " +
+       "of a batch-1 document is screened against the persisted state") {
+    val base = java.nio.file.Files.createTempDirectory("r7_inc_uri").toUri.toString
+    spark.conf.set("spark.graft.store.base", s"${base}stores")
+    try {
+      val t0 = "the quick brown fox jumps over the lazy dog tonight"
+      val t1 = "completely different sentence about distributed query engines and shuffles"
+      def screen(docs: (Long, String)*): Map[Long, (String, Option[Long])] =
+        streaming.IncrementalScreen.screenBatch(spark, spark.createDataFrame(docs).toDF("doc_id", "text"))
+          .collect().map(r => r.getAs[Long]("new_doc") ->
+            ((r.getAs[String]("status"), Option(r.getAs[java.lang.Long]("dup_of")).map(_.longValue))))
+          .toMap
+      assert(screen(0L -> t0, 1L -> t1).values.map(_._1).toSet === Set("new"))
+      assert(screen(10L -> t0)(10L) === (("dup", Some(0L))))
+    } finally spark.conf.unset("spark.graft.store.base")
+  }
 }
