@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * `sort_array(collect_list(struct(idx, …)))` — the reference's app-side
   * merge (two extra point queries + Haskell zip) collapses into two
   * aggregations co-keyed with the tx row, and its ContinuationHistory
-  * query a join of [[TxSearch.source]]. Point-lookup latency at scale
-  * rides on requestkey clustering/stats (SURVEY §4), not an index.
+  * query a scalar subquery of [[TxSearch.source]]. Point-lookup latency
+  * at scale rides on requestkey clustering/stats (SURVEY §4), not an index.
   */
 object TxDetail {
 
@@ -39,17 +39,21 @@ object TxDetail {
         col("sig")))).as("signers"))
     val blocks = pinned("blocks")
       .select(col("hash").as("block"), col("creationtime").as("block_time"))
-    // keyed by the tx copy, so orphan twins (one key, two blocks) each
-    // match one history row; the source pins a version no older than `tx`.
-    // One key's rows: broadcast, since the planner has no size for the
-    // checkpointed source and would shuffle both sides instead.
-    val hist = broadcast(TxSearch.source(spark, tableDir)
+    // The key's continuation history, one per request key, so orphan twins
+    // (one key, two blocks) share it; the source pins a version no older
+    // than `tx`. A scalar subquery: one small job and one value, where a
+    // join would build and broadcast a hash relation on every request.
+    val hist = TxSearch.source(spark, tableDir)
       .filter(col("requestkey") === requestkey)
-      .select(col("requestkey"), col("block"), col("initial_code"), col("previous_steps")))
+      .select(struct(col("initial_code"), col("previous_steps")))
+      .limit(1).scalar()
     tx.join(events, Seq("requestkey", "block"), "left")
       .join(signers, Seq("requestkey"), "left")
       .join(blocks, Seq("block"), "left")
-      .join(hist, Seq("requestkey", "block"), "left")
+      .withColumn("hist", hist)
+      .withColumns(Map("initial_code" -> col("hist.initial_code"),
+                       "previous_steps" -> col("hist.previous_steps")))
+      .drop("hist")
       .orderBy(col("block"))
   }
 
