@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions.col
   * height ranges that partition-prune (SURVEY §4). */
 object ChainTime {
 
-  val BlockIntervalSeconds = 30L
-  val Genesis: Instant = Instant.parse("2019-10-30T00:01:00Z")
+  /** The clock [[Coins]] prices supply with: one genesis, one interval. */
+  val Genesis: Instant = Instant.ofEpochSecond(Coins.GenesisEpochSec)
 
   def heightToDate(height: Long): Instant =
-    Genesis.plusSeconds(height * BlockIntervalSeconds)
+    Instant.ofEpochSecond(Coins.heightToEpochSec(height))
 
   def dateToHeight(t: Instant): Long =
-    math.max(0L, (t.getEpochSecond - Genesis.getEpochSecond) / BlockIntervalSeconds)
+    math.max(0L, (t.getEpochSecond - Coins.GenesisEpochSec) / Coins.BlockIntervalSec)
 
   /** Optional height-range guard (P2 — Queries.hs:52-60) of every search
     * source: `minHeight <= height <= maxHeight`, each bound optional. */

@@ -37,7 +37,9 @@ object Coins {
   val GenesisEpochSec = 1572393600L
 
   /** 30-second target block time (Coins.hs:166-176 `heightToDate`). */
-  def heightToEpochSec(height: Long): Long = GenesisEpochSec + 30L * height
+  val BlockIntervalSec = 30L
+
+  def heightToEpochSec(height: Long): Long = GenesisEpochSec + BlockIntervalSec * height
 
   private def resource(name: String): Seq[String] = {
     val in = getClass.getResourceAsStream(s"/graft/data/$name")
@@ -143,7 +145,7 @@ object Coins {
       while (lo < hi) { val m = (lo + hi + 1) >>> 1; if (rs(m)._1 <= h) lo = m else hi = m - 1 }
       val (k, total, reward) = rs(lo)
       val mining = total.add(reward.multiply(new JBigDecimal(h - k)))
-      val ts = GenesisEpochSec + 30L * h
+      val ts = heightToEpochSec(h)
       var alo2 = -1; var ahi = as.length - 1; var aidx = -1
       if (as.nonEmpty && as(0)._1 <= ts) {
         alo2 = 0

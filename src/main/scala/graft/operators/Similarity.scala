@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (BASELINE.json north star).
@@ -42,36 +43,93 @@ object Similarity {
   private def dot(x: Column, y: Column): Column =
     call_function("graft_dot", x, y)
 
-  private def topK(pairs: DataFrame): DataFrame = {
+  /** The family's similarity: cosine of `qv` (norm `qn`) against `v`
+    * (norm `n`), rounded to 4dp before anything ranks by it. */
+  private def cosine(v: String = "v", n: String = "nrm",
+                     qv: String = "qv", qn: String = "qn"): Column =
+    round(dot(col(qv), col(v)) / sqrt(col(qn) * col(n)), 4)
+
+  /** The fixed query set (vec_id < [[N_QUERIES]]) as (q_id, extra…, qv,
+    * qn), taken from vector column `v` with norm `n`. */
+  private def queries(e: DataFrame, extra: Seq[Column] = Nil,
+                      v: String = "v", n: String = "nrm"): DataFrame =
+    e.filter(col("vec_id") < N_QUERIES)
+      .select(Seq(col("vec_id").as("q_id")) ++ extra ++
+              Seq(col(v).as("qv"), col(n).as("qn")): _*)
+
+  /** Exact cosine top-k per query over candidate `pairs`: query columns
+    * (q_id, qv, qn) beside corpus rows (vec_id, vector `v`, norm `n`). A
+    * query never matches itself; ties break by neighbor id. */
+  private def topK(pairs: DataFrame, v: String = "v", n: String = "nrm"): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("n_id"))
     pairs
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), cosine(v, n).as("cos_sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TOP_K)
       .select(col("q_id"), col("rank"), col("n_id"), col("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
+  /** A 6dp mean both engines round alike: routed through DECIMAL, since a
+    * dyadic avg can end in a 5 exactly at the 6th decimal, where Spark's
+    * HALF_UP and DuckDB's half-even diverge. */
+  private def mean6(x: Column): Column =
+    round(avg(x.cast("double")).cast(DecimalType(28, 12)), 6).cast("double")
+
+  /** Per-label mean centroids (label, cv) over the given vectors: the
+    * computed coarse quantizer of every IVF operator. */
+  private def centroidsOf(xs: DataFrame): DataFrame =
+    xs.select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy(col("label"), col("dim"))
+      .agg(mean6(col("x")).as("c"))
+      .groupBy(col("label"))
+      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
+                     _.getField("c")).as("cv"))
+
+  /** Squared L2 from vector `x` to centroid `c`, rounded to 4dp so both
+    * engines make identical assignment and probe decisions. */
+  private def sqDist(x: Column, c: Column): Column =
+    round(aggregate(
+      zip_with(x, c, (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
+      lit(0.0), (acc, p) => acc + p), 4)
+
+  /** Every (query, cell) pair with the cell's probe rank `pr` per query:
+    * 1 = the cell whose centroid is nearest, label breaking ties. */
+  private def probeRanks(q: DataFrame, cent: DataFrame): DataFrame =
+    q.crossJoin(broadcast(cent))
+      .withColumn("rdist", sqDist(col("qv"), col("cv")))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))))
+
+  /** Per-query recall@k of `approx` against `truth`, both (q_id, n_id)
+    * top-k rows; a query with no hit reads 0. */
+  private def recallAtK(truth: DataFrame, approx: DataFrame): DataFrame = {
+    val hits = truth.join(approx, Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
+    truth.select(col("q_id")).distinct()
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"),
+              coalesce(col("hits"), lit(0L)).as("hits"),
+              (coalesce(col("hits"), lit(0L)).cast("double") / TOP_K)
+                .as("recall_at_k"))
+      .orderBy(col("q_id"))
+  }
+
+  /** The brute-force ground truth (q32) as (q_id, n_id). */
+  private def truthOf(spark: SparkSession, dir: String): DataFrame =
+    q32AnnBrute(spark, dir).select(col("q_id"), col("n_id"))
+
   /** q32 — brute-force cosine top-k for a fixed query set. */
   def q32AnnBrute(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
-    topK(e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+    topK(e.crossJoin(broadcast(queries(e))))
   }
 
   /** q33 — IVF-style ANN: probe only the query's own coarse cell (label). */
   def q33AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("label"),
-              col("v").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
-    topK(e.join(broadcast(q), Seq("label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+    topK(e.join(broadcast(queries(e, Seq(col("label")))), Seq("label")))
   }
 
   /** q53 — multi-probe IVF with a COMPUTED coarse quantizer: centroids are
@@ -84,33 +142,10 @@ object Similarity {
     * quantizer derived from the data instead of assumed. */
   def q53AnnMultiProbe(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      // DECIMAL-routed like q71's centroids: a dyadic avg can terminate
-      // with a 5 exactly at the 6th decimal (HALF_UP vs half-even trap)
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = aggregate(
-      zip_with(col("qv"), col("cv"),
-               (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("rdist", round(sqDist, 4))
-      .withColumn("pr", row_number().over(pw))
+    val probes = probeRanks(queries(e), centroidsOf(e))
       .filter(col("pr") <= 2)
       .select(col("q_id"), col("label"), col("qv"), col("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
-    topK(e.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+    topK(e.join(broadcast(probes), Seq("label")))
   }
 
   /** q115 — embedding-space OUTLIER audit, the curation gate that runs
@@ -130,21 +165,8 @@ object Similarity {
     * shuffled never. */
   def q115EmbedOutliers(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-    val sqDist = aggregate(
-      zip_with(col("v"), col("cv"),
-               (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p)
-    val d = e.join(broadcast(cent), Seq("label"))
-      .select(col("vec_id"), col("label"), round(sqDist, 4).as("dist"))
+    val d = e.join(broadcast(centroidsOf(e)), Seq("label"))
+      .select(col("vec_id"), col("label"), sqDist(col("v"), col("cv")).as("dist"))
     val quants = d
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("label")).orderBy(col("dist"), col("vec_id"))))
@@ -262,31 +284,33 @@ object Similarity {
     * Iterating = re-running with the emitted centroids as the next seeds
     * (the assignment subframe is the reusable operator). */
   def q71KmeansIter(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val seeds = e.filter(col("vec_id") < KMEANS_K)
-      .select(col("vec_id").as("seed_id"), col("v").as("sv"),
-              col("nrm").as("sn"))
-    // DECIMAL-routed rounds: d2 DECIDES the assignment and c is the
-    // output — a dyadic double can terminate with a 5 exactly at the
-    // rounding digit (65/128 = 0.5078125), where Spark HALF_UP and
-    // DuckDB half-even diverge
-    val d2 = round(((col("nrm") + col("sn")) - lit(2.0) * dot(col("v"), col("sv")))
-        .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 4)
-      .cast("double")
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("seed_id"))
-    val assigned = e.crossJoin(broadcast(seeds))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(aw))
-      .filter(col("rn") === 1)
+    val assigned = assignSeeds(vecs(spark, dir), KMEANS_K)
       .select(col("vec_id"), col("seed_id").as("cluster_id"), col("v"))
     assigned
       .select(col("cluster_id"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cluster_id"), (col("dim") + 1).cast("long").as("dim"))
-      .agg(count(lit(1)).as("n_members"),
-           round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
+      .agg(count(lit(1)).as("n_members"), mean6(col("x")).as("c"))
       .orderBy(col("cluster_id"), col("dim"))
+  }
+
+  /** Every vector of `xs` with its nearest seed — the vectors of `xs` with
+    * vec_id < `seedBound` — by squared L2, seed id breaking ties. The
+    * distance is DECIMAL-routed to 4dp because it DECIDES the
+    * assignment: a dyadic double can end in a 5 exactly at the rounding
+    * digit (65/128 = 0.5078125), where Spark HALF_UP and DuckDB
+    * half-even diverge. */
+  private def assignSeeds(xs: DataFrame, seedBound: Int): DataFrame = {
+    val seeds = xs.filter(col("vec_id") < seedBound)
+      .select(col("vec_id").as("seed_id"), col("v").as("sv"),
+              col("nrm").as("sn"))
+    val d2 = round(((col("nrm") + col("sn")) - lit(2.0) * dot(col("v"), col("sv")))
+        .cast(DecimalType(28, 12)), 4)
+      .cast("double")
+    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("seed_id"))
+    xs.crossJoin(broadcast(seeds))
+      .withColumn("d2", d2)
+      .withColumn("rn", row_number().over(aw))
+      .filter(col("rn") === 1)
   }
 
   val kmeansIterOracle: String =
@@ -347,13 +371,7 @@ object Similarity {
       when(round(proj, 6) >= 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
     val b = e.withColumn("bucket", bucket)
-    val q = b.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("bucket"),
-              col("v").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
-    topK(b.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+    topK(b.join(broadcast(queries(b, Seq(col("bucket")))), Seq("bucket")))
   }
 
   val annHyperplaneOracle: String = {
@@ -415,15 +433,12 @@ object Similarity {
     * rank ≤ 3 filter is a WindowGroupLimit heap per (query, side). */
   def q155HardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-              col("v").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
+    val q = queries(e, Seq(col("label").as("q_label")))
     val pairs = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
               (col("label") === col("q_label")).as("same"),
-              sim.as("cos_sim"))
+              cosine().as("cos_sim"))
     val w = Window.partitionBy(col("q_id"), col("same"))
       .orderBy(col("cos_sim").desc, col("n_id"))
     // rank <= 3 first, as its own conjunct: InferWindowGroupLimit only
@@ -487,23 +502,18 @@ object Similarity {
     * once — by the q32 broadcast pass that builds the pool. */
   def q157MmrRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val qsim = simPm(round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4))
     val cw = Window.partitionBy(col("q_id"))
       .orderBy(col("qsim_pm").desc, col("n_id"))
-    val cand = e.crossJoin(broadcast(q))
+    val cand = e.crossJoin(broadcast(queries(e)))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), qsim.as("qsim_pm"))
+      .select(col("q_id"), col("vec_id").as("n_id"), simPm(cosine()).as("qsim_pm"))
       .withColumn("rnk", row_number().over(cw))
       .filter(col("rnk") <= MmrN)
       .select(col("q_id"), col("n_id"), col("qsim_pm"))
       .localCheckpoint()
     val withVec = cand.join(
       e.select(col("vec_id").as("n_id"), col("v"), col("nrm")), "n_id")
-    val psim = simPm(round(
-      call_function("graft_dot", col("av"), col("bv")) /
-        sqrt(col("an") * col("bn")), 4))
+    val psim = simPm(cosine(v = "bv", n = "bn", qv = "av", qn = "an"))
     val cp = withVec.select(col("q_id"), col("n_id").as("a_id"),
         col("v").as("av"), col("nrm").as("an"))
       .join(withVec.select(col("q_id"), col("n_id").as("b_id"),
@@ -602,19 +612,9 @@ object Similarity {
     * (one division of small exact ints). Cost: both top-k plans + one
     * k·|queries|-row semi join — negligible next to the searches
     * themselves. */
-  def q89AnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    val truth = q32AnnBrute(spark, dir).select(col("q_id"), col("n_id"))
-    val approx = q33AnnIvf(spark, dir).select(col("q_id"), col("n_id"))
-    val hits = truth.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    truth.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"),
-              coalesce(col("hits"), lit(0L)).as("hits"),
-              (coalesce(col("hits"), lit(0L)).cast("double") / TOP_K)
-                .as("recall_at_k"))
-      .orderBy(col("q_id"))
-  }
+  def q89AnnRecall(spark: SparkSession, dir: String): DataFrame =
+    recallAtK(truthOf(spark, dir),
+              q33AnnIvf(spark, dir).select(col("q_id"), col("n_id")))
 
   // --- q94/q95 — deterministic random projection (Johnson-Lindenstrauss)
 
@@ -672,24 +672,14 @@ object Similarity {
     val p = base.select(col("vec_id"), pv.as("pv"))
       .withColumn("nrm", dot(col("pv"), col("pv")))
       .localCheckpoint()
-    val q = p.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("pv").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("pv")) / sqrt(col("qn") * col("nrm")), 4)
-    val approx = topK(p.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
-      .select(col("q_id"), col("n_id"))
-    val truth = q32AnnBrute(spark, dir).select(col("q_id"), col("n_id"))
-    val hits = truth.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    truth.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"),
-              coalesce(col("hits"), lit(0L)).as("hits"),
-              (coalesce(col("hits"), lit(0L)).cast("double") / TOP_K)
-                .as("recall_at_k"))
-      .orderBy(col("q_id"))
+    recallAtK(truthOf(spark, dir), projectedTopK(p))
   }
+
+  /** Brute top-k in a projected space `p` (vec_id, pv, nrm) as (q_id,
+    * n_id) — the approx leg of the q95/q159 audits. */
+  private def projectedTopK(p: DataFrame): DataFrame =
+    topK(p.crossJoin(broadcast(queries(p, v = "pv"))), v = "pv")
+      .select(col("q_id"), col("n_id"))
 
   /** The oracle embeds the SAME ±1 literals: 1.0·x + (−1.0)·x left fold =
     * the kernel's op sequence exactly. */
@@ -736,8 +726,7 @@ object Similarity {
     }
     val minsL = typedLit(mins.toSeq)
     val deltasL = typedLit(deltas.toSeq)
-    def r0(c: Column): Column =
-      round(c.cast(org.apache.spark.sql.types.DecimalType(28, 12))).cast("double")
+    def r0(c: Column): Column = round(c.cast(DecimalType(28, 12))).cast("double")
     val xhat = transform(sequence(lit(1), lit(Dim)), i => {
       val x = element_at(col("v"), i)
       val m = element_at(minsL, i)
@@ -747,23 +736,7 @@ object Similarity {
     val p = base.select(col("vec_id"), xhat.as("pv"))
       .withColumn("nrm", dot(col("pv"), col("pv")))
       .localCheckpoint()
-    val q = p.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("pv").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("pv")) / sqrt(col("qn") * col("nrm")), 4)
-    val approx = topK(p.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
-      .select(col("q_id"), col("n_id"))
-    val truth = q32AnnBrute(spark, dir).select(col("q_id"), col("n_id"))
-    val hits = truth.join(approx, Seq("q_id", "n_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    truth.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"),
-              coalesce(col("hits"), lit(0L)).as("hits"),
-              (coalesce(col("hits"), lit(0L)).cast("double") / TOP_K)
-                .as("recall_at_k"))
-      .orderBy(col("q_id"))
+    recallAtK(truthOf(spark, dir), projectedTopK(p))
   }
 
   val sq8RecallOracle: String =
@@ -891,9 +864,9 @@ object Similarity {
   val PQ_SUBDIM = 8 // dims per subspace (8×8 = 64)
   val PQ_K = 16     // centroids per subspace
 
-  private val dec4 = org.apache.spark.sql.types.DecimalType(28, 4)
+  private val dec4 = DecimalType(28, 4)
   private def d2dec(sq: Column): Column =
-    round(sq.cast(org.apache.spark.sql.types.DecimalType(28, 12)), 4).cast(dec4)
+    round(sq.cast(DecimalType(28, 12)), 4).cast(dec4)
 
   /** (vec_id, m, sv) subvector explode — one row per (vector, subspace). */
   private def pqSub(e: DataFrame): DataFrame =
@@ -923,6 +896,52 @@ object Similarity {
       .select(col("vec_id"), col("m"), col("code"))
   }
 
+  /** Per-query ADC lookup table (q_id, m, code, d2m): the decimal-routed
+    * squared L2 from each query subvector to each codebook centroid —
+    * PQ_M·PQ_K rows per query, broadcast-scale. */
+  private def adcTable(q: DataFrame, e: DataFrame): DataFrame = {
+    val qsub = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
+      .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
+      .withColumn("qsvn", dot(col("qsv"), col("qsv")))
+    qsub.join(pqCodebook(e), Seq("m"))
+      .select(col("q_id"), col("m"), col("code"),
+        d2dec(col("qsvn") + col("cvn") -
+              lit(2.0) * dot(col("qsv"), col("cv"))).as("d2m"))
+  }
+
+  /** The k smallest `d` per query, vec_id breaking ties, as (q_id, n_id). */
+  private def smallestK(scored: DataFrame, d: String): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(d), col("vec_id"))
+    scored.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
+  }
+
+  /** Decimal-routed exact squared L2 from the query (qv, qn) to `v`. */
+  private val exactD2: Column =
+    d2dec(col("qn") + col("nrm") - lit(2.0) * dot(col("qv"), col("v")))
+
+  /** Exact-L2 top-k ground truth of the query set `q` over the corpus. */
+  private def exactL2TopK(e: DataFrame, q: DataFrame): DataFrame =
+    smallestK(e.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("d2x", exactD2), "d2x")
+
+  /** Summed ADC distance per (query, candidate) over `cand` rows that
+    * carry (q_id, vec_id, m, code); a query never matches itself. */
+  private def adcSums(cand: DataFrame): DataFrame =
+    cand.groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("d2m")).as("adc"))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  /** Per-query recall@k of the ADC top-k against the exact-L2 top-k. */
+  private def adcRecall(topExact: DataFrame, topAdc: DataFrame): DataFrame =
+    topExact.join(topAdc.withColumn("hit", lit(1L)), Seq("q_id", "n_id"), "left")
+      .groupBy(col("q_id"))
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .select(col("q_id"), col("n_hits"),
+        (col("n_hits").cast("double") / TOP_K).as("recall_at_k"))
+      .orderBy(col("q_id"))
+
   /** q128 — PQ ENCODE: every vector's 8 subspace codes, wide. The
     * persistable compressed corpus (8 bytes/vector + one shared
     * codebook). */
@@ -947,37 +966,9 @@ object Similarity {
   def q129PqRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     val codes = pqCodes(e)
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    // per-query subspace LUT against the codebook
-    val qsub = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
-      .withColumn("qsvn", dot(col("qsv"), col("qsv")))
-    val lut = qsub.join(pqCodebook(e), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        d2dec(col("qsvn") + col("cvn") -
-              lit(2.0) * dot(col("qsv"), col("cv"))).as("d2m"))
-    val adc = codes.join(broadcast(lut), Seq("m", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d2m")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val topAdc = adc.withColumn("rk", row_number().over(wA))
-      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
-    // exact-L2 ground truth over full vectors
-    val d2e = d2dec(col("qn") + col("nrm") - lit(2.0) * dot(col("qv"), col("v")))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("d2x"), col("vec_id"))
-    val topExact = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2x", d2e)
-      .withColumn("rk", row_number().over(wE))
-      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
-    topExact.join(topAdc.withColumn("hit", lit(1L)), Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast("double") / TOP_K).as("recall_at_k"))
-      .orderBy(col("q_id"))
+    val q = queries(e)
+    val adc = adcSums(codes.join(broadcast(adcTable(q, e)), Seq("m", "code")))
+    adcRecall(exactL2TopK(e, q), smallestK(adc, "adc"))
   }
 
   /** q130 — IVF-PQ, the composed production ANN shape at 100 TB: the
@@ -995,59 +986,24 @@ object Similarity {
     * only by the audit's ground-truth side. */
   def q130IvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
+    val q = queries(e)
+    adcRecall(exactL2TopK(e, q), smallestK(probedAdc(e, q), "adc"))
+  }
+
+  /** The IVF-PQ search of q130/q162: each query probes its 2 nearest
+    * computed cells, and every candidate there is scored by its summed
+    * ADC distance — (q_id, vec_id, adc). */
+  private def probedAdc(e: DataFrame, q: DataFrame): DataFrame = {
     val codes = pqCodes(e)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = aggregate(
-      zip_with(col("qv"), col("cv"),
-               (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("rdist", round(sqDist, 4))
-      .withColumn("pr", row_number().over(pw))
+    val probes = probeRanks(q, centroidsOf(e))
       .filter(col("pr") <= 2)
       .select(col("q_id"), col("label"))
-    val qsub = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
-      .withColumn("qsvn", dot(col("qsv"), col("qsv")))
-    val lut = qsub.join(pqCodebook(e), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        d2dec(col("qsvn") + col("cvn") -
-              lit(2.0) * dot(col("qsv"), col("cv"))).as("d2m"))
+    val lut = adcTable(q, e)
     val cand = e.select(col("vec_id"), col("label"))
       .join(broadcast(probes), Seq("label"))
       .select(col("q_id"), col("vec_id"))
-    val adc = cand.join(codes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d2m")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val topAdc = adc.withColumn("rk", row_number().over(wA))
-      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
-    val d2e = d2dec(col("qn") + col("nrm") - lit(2.0) * dot(col("qv"), col("v")))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("d2x"), col("vec_id"))
-    val topExact = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2x", d2e)
-      .withColumn("rk", row_number().over(wE))
-      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
-    topExact.join(topAdc.withColumn("hit", lit(1L)), Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast("double") / TOP_K).as("recall_at_k"))
-      .orderBy(col("q_id"))
+    adcSums(cand.join(codes, Seq("vec_id"))
+      .join(broadcast(lut), Seq("q_id", "m", "code")))
   }
 
   val ivfPqRecallOracle: String =
@@ -1197,18 +1153,7 @@ object Similarity {
     * the corpus); cluster sizes ride in on a broadcast of the K-row
     * size relation. */
   def q136ClusterSample(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val seeds = e.filter(col("vec_id") < KMEANS_K)
-      .select(col("vec_id").as("seed_id"), col("v").as("sv"),
-              col("nrm").as("sn"))
-    val d2 = round(((col("nrm") + col("sn")) - lit(2.0) * dot(col("v"), col("sv")))
-        .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 4)
-      .cast("double")
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("seed_id"))
-    val assigned = e.crossJoin(broadcast(seeds))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(aw))
-      .filter(col("rn") === 1)
+    val assigned = assignSeeds(vecs(spark, dir), KMEANS_K)
       .select(col("vec_id"), col("seed_id").as("cluster_id"))
     val sizes = assigned.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_n"))
@@ -1277,68 +1222,20 @@ object Similarity {
     * exact brute leg is the audit's cost, not the operator's. */
   def q162IvfPqRefine(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val codes = pqCodes(e)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = aggregate(
-      zip_with(col("qv"), col("cv"),
-               (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("rdist", round(sqDist, 4))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= 2)
-      .select(col("q_id"), col("label"))
-    val qsub = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qsv"))
-      .withColumn("qsvn", dot(col("qsv"), col("qsv")))
-    val lut = qsub.join(pqCodebook(e), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        d2dec(col("qsvn") + col("cvn") -
-              lit(2.0) * dot(col("qsv"), col("cv"))).as("d2m"))
-    val cand = e.select(col("vec_id"), col("label"))
-      .join(broadcast(probes), Seq("label"))
-      .select(col("q_id"), col("vec_id"))
-    val adc = cand.join(codes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d2m")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
+    val q = queries(e)
     val wA = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val ranked = adc.withColumn("rk", row_number().over(wA))
+    val ranked = probedAdc(e, q).withColumn("rk", row_number().over(wA))
     val topAdc = ranked.filter(col("rk") <= TOP_K)
       .select(col("q_id"), col("vec_id").as("n_id"))
     val shortlist = ranked.filter(col("rk") <= RefineShortlist)
       .select(col("q_id"), col("vec_id"))
     // refine: true vectors for the shortlist only (broadcast semi-shape —
     // the corpus side is scanned, never exchanged), exact re-rank
-    val ref = e.select(col("vec_id"), col("v"), col("nrm"))
+    val topRef = smallestK(e.select(col("vec_id"), col("v"), col("nrm"))
       .join(broadcast(shortlist), Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
-      .withColumn("d2x",
-        d2dec(col("qn") + col("nrm") - lit(2.0) * dot(col("qv"), col("v"))))
-    val wR = Window.partitionBy(col("q_id")).orderBy(col("d2x"), col("vec_id"))
-    val topRef = ref.withColumn("rk", row_number().over(wR))
-      .filter(col("rk") <= TOP_K)
-      .select(col("q_id"), col("vec_id").as("n_id"))
-    val d2e = d2dec(col("qn") + col("nrm") - lit(2.0) * dot(col("qv"), col("v")))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("d2x"), col("vec_id"))
-    val topExact = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2x", d2e)
-      .withColumn("rk", row_number().over(wE))
-      .filter(col("rk") <= TOP_K).select(col("q_id"), col("vec_id").as("n_id"))
-    topExact
+      .withColumn("d2x", exactD2), "d2x")
+    exactL2TopK(e, q)
       .join(topAdc.withColumn("hit_a", lit(1L)), Seq("q_id", "n_id"), "left")
       .join(topRef.withColumn("hit_r", lit(1L)), Seq("q_id", "n_id"), "left")
       .groupBy(col("q_id"))
@@ -1455,25 +1352,17 @@ object Similarity {
     * release is scanned once, never exchanged; the persisted store is
     * |cells|×dim rows of control plane. */
   def q170IvfDrift(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
+    val dec = DecimalType(28, 12)
     val e = vecs(spark, dir)
     val prev = e.filter(col("vec_id") % 3 =!= 0)
     val nu = e.filter(col("vec_id") % 3 === 0)
-    val seeds = prev.filter(col("vec_id") < DriftSeedBound)
-      .select(col("vec_id").as("seed_id"), col("v").as("sv"), col("nrm").as("sn"))
-    val d2 = round(((col("nrm") + col("sn")) - lit(2.0) * dot(col("v"), col("sv")))
-        .cast(dec), 4).cast("double")
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("seed_id"))
-    val assignedPrev = prev.crossJoin(broadcast(seeds))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
+    val assignedPrev = assignSeeds(prev, DriftSeedBound)
       .select(col("vec_id"), col("seed_id").as("cell"), col("v"))
     // build-time control plane: per-(cell, dim) centroid rows, persisted
     val centroidRows = assignedPrev
       .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cell"), col("dim"))
-      .agg(count(lit(1)).as("n_members"),
-        round(avg(col("x").cast("double")).cast(dec), 6).cast("double").as("c"))
+      .agg(count(lit(1)).as("n_members"), mean6(col("x")).as("c"))
     val store = graft.Stores.path(spark, "graft_ivf_store")
     centroidRows.write.mode("overwrite").parquet(store)
     // everything below reads ONLY the persisted rows
@@ -1570,13 +1459,12 @@ object Similarity {
     * partial aggregates (map-side combined); everything after is a
     * |labels|×dim control relation. */
   def q171CentroidDrift(spark: SparkSession, dir: String): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
     val e = vecs(spark, dir)
       .withColumn("is_new", (col("vec_id") % 3 === 0).cast("int"))
     val dims = e
       .select(col("label"), col("is_new"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("label"), col("is_new"), col("dim"))
-      .agg(round(avg(col("x").cast("double")).cast(dec), 6).cast("double").as("c"))
+      .agg(mean6(col("x")).as("c"))
       .withColumn("c_u", expr("CAST(round(c * 1000000.0) AS BIGINT)"))
     val a = dims.filter(col("is_new") === 0)
       .select(col("label"), col("dim"), col("c_u").as("ca"))
@@ -1590,7 +1478,7 @@ object Similarity {
       .select(col("label"),
         round((col("dot_uu").cast("double") /
           sqrt(col("na_uu").cast("double") * col("nb_uu").cast("double")))
-          .cast(dec), 4).cast("double").as("cos_drift"))
+          .cast(DecimalType(28, 12)), 4).cast("double").as("cos_drift"))
     val counts = e.groupBy(col("label"))
       .agg(sum(when(col("is_new") === 0, 1L).otherwise(0L)).as("n_prev"),
         sum(when(col("is_new") === 1, 1L).otherwise(0L)).as("n_new"))
@@ -1644,33 +1532,15 @@ object Similarity {
   def q176NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-    val q = e.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = aggregate(
-      zip_with(col("qv"), col("cv"),
-               (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val maxNp = ProbeSweep.max
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("rdist", round(sqDist, 4))
-      .withColumn("pr", row_number().over(pw).cast("long"))
-      .filter(col("pr") <= maxNp)
-      .select(col("q_id"), col("label"), col("pr"), col("qv"), col("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
+    val q = queries(e)
+    val probes = probeRanks(q, centroidsOf(e))
+      .filter(col("pr") <= ProbeSweep.max)
+      .select(col("q_id"), col("label"), col("pr").cast("long").as("pr"),
+              col("qv"), col("qn"))
     val cands = e.join(broadcast(probes), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), col("pr"),
-              sim.as("cos_sim"))
+              cosine().as("cos_sim"))
     val nps = broadcast(ProbeSweep.toDF("np"))
     val w = Window.partitionBy(col("np"), col("q_id"))
       .orderBy(col("cos_sim").desc, col("n_id"))
@@ -1678,11 +1548,7 @@ object Similarity {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= TOP_K)
       .select(col("np"), col("q_id"), col("n_id"))
-    val exactTop = topK(
-        e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
-      .select(col("q_id"), col("n_id"))
+    val exactTop = topK(e.crossJoin(broadcast(q))).select(col("q_id"), col("n_id"))
     val perQ = approxTop.join(exactTop, Seq("q_id", "n_id"))
       .groupBy(col("np"), col("q_id")).agg(count(lit(1)).as("hits"))
     val grid = nps.crossJoin(q.select(col("q_id")))
@@ -1845,10 +1711,7 @@ object Similarity {
         expr(s"greatest(CAST(1 AS BIGINT), (n_total + ${HubSampleCap - 1}) DIV $HubSampleCap)")) === 0L)
       .orderBy(col("vec_id")).limit(HubSampleCap.toInt)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
-    val top = topK(e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+    val top = topK(e.crossJoin(broadcast(q)))
     val occ = top.groupBy(col("n_id")).agg(count(lit(1)).as("k_occ"))
     val hist = occ.groupBy(col("k_occ")).agg(count(lit(1)).as("n_points"))
     val zero = e.agg(count(lit(1)).as("n_total"))
@@ -1878,16 +1741,7 @@ object Similarity {
   /** q221 — (label_a < label_b, cos_sim) over the q53-contract centroids
     * (6dp decimal-routed means; cosine rounded to 4dp, index-order fold). */
   def q221CentroidAffinity(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
+    val cent = centroidsOf(vecs(spark, dir))
     def fold(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, p) => acc + p)
     val aa = cent.select(col("label").as("label_a"), col("cv").as("av"))
@@ -1953,10 +1807,9 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("label"),
               col("v").as("qv"), col("nrm").as("qn"))
     val y = e.filter(pmod(col("vec_id"), lit(2L)) === 1L)
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("n_id"))
     val ranked = y.join(x, Seq("label")) // cell-keyed shuffle join, no broadcast
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim"))
+      .select(col("q_id"), col("vec_id").as("n_id"), cosine().as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 4)
     def at(r: Int, c: String): Column = max(when(col("rank") === r, col(c)))
@@ -2054,9 +1907,7 @@ object Similarity {
     val mu = new Array[Double](DIMS)
     e.select(posexplode(col("embedding")).as(Seq("i", "xi")))
       .groupBy(col("i"))
-      .agg(round(avg(col("xi").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("m"))
+      .agg(mean6(col("xi")).as("m"))
       .collect()
       .foreach(r => mu(r.getAs[Int]("i")) = r.getAs[Double]("m"))
     val flat = e.agg(
@@ -2156,7 +2007,7 @@ object Similarity {
     val (mu, _, u, _) = topPcState(spark, dir)
     val centered = zip_with(col("embedding"), typedLit(mu.toSeq),
       (x, m) => x.cast("double") - m)
-    val p = round(call_function("graft_dot", centered, typedLit(u.toSeq)), 4)
+    val p = round(dot(centered, typedLit(u.toSeq)), 4)
     Tables.embeddings(spark, dir)
       .select(col("label"), p.as("p4"))
       .select(col("label"),
@@ -2207,17 +2058,12 @@ object Similarity {
   /** q230 — (dims, n_hits, recall_ppm) vs the full-dim top-K truth. */
   def q230MatryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val truth = q32AnnBrute(spark, dir)
-      .select(col("q_id"), col("n_id")).localCheckpoint()
+    val truth = truthOf(spark, dir).localCheckpoint()
     val legs = MrlDims.map { d =>
       val ed = e.select(col("vec_id"), slice(col("v"), 1, d).as("vd"))
         .withColumn("nd", dot(col("vd"), col("vd")))
-      val q = ed.filter(col("vec_id") < N_QUERIES)
-        .select(col("vec_id").as("q_id"), col("vd").as("qv"), col("nd").as("qn"))
-      val sim = round(dot(col("qv"), col("vd")) / sqrt(col("qn") * col("nd")), 4)
-      val top = topK(ed.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim")))
+      val top = topK(ed.crossJoin(broadcast(queries(ed, v = "vd", n = "nd"))),
+                     v = "vd", n = "nd")
         .select(col("q_id"), col("n_id"))
       truth.join(top, Seq("q_id", "n_id"), "left_semi")
         .agg(count(lit(1)).as("n_hits"))
@@ -2319,15 +2165,7 @@ object Similarity {
     * same persisted postings. Returns the store path. */
   private[graft] def buildIvfStore(spark: SparkSession, dir: String): String = {
     val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
+    val cent = centroidsOf(e)
     val store = graft.Stores.path(spark, "graft_ivf_store")
     e.select(col("vec_id"), col("label"), col("v"), col("nrm"))
       .write.mode("overwrite").partitionBy("label").parquet(s"$store/postings")
@@ -2338,31 +2176,22 @@ object Similarity {
   def q246IvfPersist(spark: SparkSession, dir: String): DataFrame = {
     val store = buildIvfStore(spark, dir)
     // QUERY: persisted tables only
-    val postings = spark.read.parquet(s"$store/postings")
-    val centroids = spark.read.parquet(s"$store/centroids")
-    val q = postings.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = round(aggregate(
-      zip_with(col("qv"), col("cv"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("rdist", sqDist)
-      .withColumn("pr", row_number().over(pw))
+    storeTopK(spark.read.parquet(s"$store/postings"),
+              spark.read.parquet(s"$store/centroids"), "label")
+  }
+
+  /** The query path of every persisted IVF store (q246, q250, q258,
+    * q259): each query from `postings` is assigned to its nearest stored
+    * centroid (1-probe), and exact cosine top-k runs over the postings of
+    * that one cell. `key` names the postings' cell column; the centroid
+    * label is cast to its type. */
+  private def storeTopK(postings: DataFrame, centroids: DataFrame,
+                        key: String): DataFrame = {
+    val probes = probeRanks(queries(postings), centroids)
       .filter(col("pr") === 1)
-      .select(col("q_id"), col("label"), col("qv"), col("qn"))
-    val sim = round(call_function("graft_dot", col("qv"), col("v")) /
-      sqrt(col("qn") * col("nrm")), 4)
-    val pairs = postings.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("n_id"))
-    pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TOP_K)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+      .select(col("q_id"), col("label").cast(postings.schema(key).dataType).as(key),
+              col("qv"), col("qn"))
+    topK(postings.join(broadcast(probes), Seq(key)))
   }
 
   /** q246's oracle: the identical quantize-then-probe math straight from
@@ -2417,35 +2246,23 @@ object Similarity {
 
   def q245IvfRebalance(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val cent = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
+    val cent = centroidsOf(e)
     val st = e.agg(count(lit(1)),
       countDistinct(col("label"))).first()
     val (n, nLabels) = (st.getLong(0), st.getLong(1))
     val cap = (21L * n) / (20L * nLabels) + 1L
     val over = e.groupBy(col("label")).agg(count(lit(1)).as("sz"))
       .filter(col("sz") > cap)
-    def sqDist(cv: Column): Column = round(aggregate(
-      zip_with(col("v"), cv,
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
     val members = e.join(broadcast(over), Seq("label"))
       .join(broadcast(cent), Seq("label"))
-      .withColumn("d_own", sqDist(col("cv")))
+      .withColumn("d_own", sqDist(col("v"), col("cv")))
       .select(col("vec_id"), col("label"), col("sz"), col("v"), col("d_own"))
     val wAlt = Window.partitionBy(col("vec_id"))
       .orderBy(col("d_alt"), col("alt_label"))
     val alt = members.crossJoin(broadcast(
         cent.select(col("label").as("alt_label"), col("cv").as("acv"))))
       .filter(col("alt_label") =!= col("label"))
-      .withColumn("d_alt", sqDist(col("acv")))
+      .withColumn("d_alt", sqDist(col("v"), col("acv")))
       .withColumn("ar", row_number().over(wAlt))
       .filter(col("ar") === 1)
     val wEvict = Window.partitionBy(col("label"))
@@ -2530,29 +2347,13 @@ object Similarity {
   private val UpsertStride = 7L
   private val UpsertResidue = 2L
 
-  /** Per-label mean centroids (6dp via the DECIMAL route — q246's math)
-    * over the given slice. */
-  private def centroidsOf(xs: DataFrame): DataFrame =
-    xs.select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("c"))
-      .groupBy(col("label"))
-      .agg(transform(sort_array(collect_list(struct(col("dim"), col("c")))),
-                     _.getField("c")).as("cv"))
-
   /** Quantize-assign every vector to its nearest stored centroid (rounded
     * squared-L2, centroid-id tiebreak — the q53/q246 probe math). */
   private def assignCells(xs: DataFrame, cent: DataFrame): DataFrame = {
-    val sqd = round(aggregate(
-      zip_with(col("v"), col("cv"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cdist"), col("clabel"))
     xs.crossJoin(broadcast(
         cent.select(col("label").as("clabel"), col("cv"))))
-      .withColumn("cdist", sqd)
+      .withColumn("cdist", sqDist(col("v"), col("cv")))
       .withColumn("cr", row_number().over(w))
       .filter(col("cr") === 1)
       .select(col("vec_id"), col("clabel").as("cell"), col("v"), col("nrm"))
@@ -2564,21 +2365,43 @@ object Similarity {
   private[graft] def buildUpsertStore(spark: SparkSession, dir: String,
                                       merges: Int = 2): String = {
     val e = vecs(spark, dir)
-    val base = e.filter(col("vec_id") % UpsertStride =!= UpsertResidue)
     val batch = e.filter(col("vec_id") % UpsertStride === UpsertResidue)
-    val cent = centroidsOf(base) // the frozen coarse quantizer
-    val store = graft.Stores.path(spark, "graft_ivf_upsert_store")
+    val store = buildBaseStore(spark, e, "graft_ivf_upsert_store")
+    (1 to merges).foreach(_ => mergeBatch(spark, store, batch))
+    store
+  }
+
+  /** Write the base index of the upsert store `name`: the base slice of
+    * `e`, quantize-assigned to cells, plus the base-derived centroids
+    * (the frozen coarse quantizer). Returns the store path. */
+  private def buildBaseStore(spark: SparkSession, e: DataFrame, name: String): String = {
+    val base = e.filter(col("vec_id") % UpsertStride =!= UpsertResidue)
+    val cent = centroidsOf(base)
+    val store = graft.Stores.path(spark, name)
     assignCells(base, cent)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$store/postings")
     cent.write.mode("overwrite").parquet(s"$store/centroids")
-    (1 to merges).foreach { _ =>
-      // localCheckpoint materializes the novel rows before the append
-      // touches the same directory it was computed from.
-      upsertNovel(spark, store, batch).localCheckpoint()
-        .write.mode("append").partitionBy("cell").parquet(s"$store/postings")
-    }
     store
   }
+
+  /** Append the novel rows of `batch` to the store's postings. */
+  private def mergeBatch(spark: SparkSession, store: String, batch: DataFrame): Unit =
+    // localCheckpoint materializes the novel rows before the append
+    // touches the same directory it was computed from.
+    upsertNovel(spark, store, batch).localCheckpoint()
+      .write.mode("append").partitionBy("cell").parquet(s"$store/postings")
+
+  /** Per-cell list sizes of the store's postings: base, added (recovered
+    * from the PK stride) and after. */
+  private def upsertAccounting(spark: SparkSession, store: String): DataFrame =
+    spark.read.parquet(s"$store/postings")
+      .groupBy(col("cell").cast("long").as("cell"))
+      .agg(count(lit(1)).as("sz_after"),
+           sum(when(col("vec_id") % UpsertStride === UpsertResidue, 1L)
+                 .otherwise(0L)).as("n_added"))
+      .select(col("cell"), (col("sz_after") - col("n_added")).as("sz_base"),
+              col("n_added"), col("sz_after"))
+      .orderBy(col("cell"))
 
   /** The MERGE arm of the upsert: quantize `batch` against the STORED
     * centroids, then PK anti-join against the stored postings — whose
@@ -2609,17 +2432,8 @@ object Similarity {
     * sizes before/after + members added, the exact feed of q245's
     * rebalance planner. Batch membership is recovered from the PK stride,
     * so a non-idempotent merge inflates `n_added` against the oracle. */
-  def q249IvfUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val store = buildUpsertStore(spark, dir)
-    spark.read.parquet(s"$store/postings")
-      .groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("sz_after"),
-           sum(when(col("vec_id") % UpsertStride === UpsertResidue, 1L)
-                 .otherwise(0L)).as("n_added"))
-      .select(col("cell"), (col("sz_after") - col("n_added")).as("sz_base"),
-              col("n_added"), col("sz_after"))
-      .orderBy(col("cell"))
-  }
+  def q249IvfUpsert(spark: SparkSession, dir: String): DataFrame =
+    upsertAccounting(spark, buildUpsertStore(spark, dir))
 
   /** q250 — query-after-upsert: the q246 probe (re-quantize each query
     * against the stored centroids, exact cosine top-k inside the one
@@ -2627,34 +2441,15 @@ object Similarity {
     * vectors appear as first-class candidates. */
   def q250IvfUpsertQuery(spark: SparkSession, dir: String): DataFrame = {
     val store = buildUpsertStore(spark, dir)
-    val postings = spark.read.parquet(s"$store/postings")
-    val centroids = spark.read.parquet(s"$store/centroids")
-    val q = postings.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = round(aggregate(
-      zip_with(col("qv"), col("cv"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("rdist", sqDist)
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") === 1)
-      .select(col("q_id"), col("label").cast("long").as("cell"),
-              col("qv"), col("qn"))
-    val sim = round(call_function("graft_dot", col("qv"), col("v")) /
-      sqrt(col("qn") * col("nrm")), 4)
-    val pairs = postings.withColumn("cell", col("cell").cast("long"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("n_id"))
-    pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TOP_K)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    cellStoreTopK(spark, store, spark.read.parquet(s"$store/postings"))
   }
+
+  /** [[storeTopK]] over the `postings` of a cell-partitioned upsert
+    * `store`, keyed on `cell` as a long. */
+  private def cellStoreTopK(spark: SparkSession, store: String,
+                            postings: DataFrame): DataFrame =
+    storeTopK(postings.withColumn("cell", col("cell").cast("long")),
+              spark.read.parquet(s"$store/centroids"), "cell")
 
   /** Shared oracle CTE chain: base/batch split, base-derived centroids,
     * quantize-assignment of EVERY vector — the replay of build+upsert
@@ -2733,9 +2528,7 @@ object Similarity {
     vecs(spark, dir)
       .select(posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("dim"))
-      .agg(round(avg(col("x").cast("double"))
-                   .cast(org.apache.spark.sql.types.DecimalType(28, 12)), 6)
-             .cast("double").as("t"))
+      .agg(mean6(col("x")).as("t"))
       .orderBy(col("dim"))
       .collect().map(_.getDouble(1))
 
@@ -2757,9 +2550,7 @@ object Similarity {
 
   def q251BinaryQuantRecall(spark: SparkSession, dir: String): DataFrame = {
     val coded = bqCodes(spark, dir)
-    val probes = broadcast(coded.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("lo").as("qlo"),
-              col("hi").as("qhi"), col("v").as("qv"), col("nrm").as("qn")))
+    val probes = broadcast(queries(coded, Seq(col("lo").as("qlo"), col("hi").as("qhi"))))
     val ham = (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
                bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long")
     val wh = Window.partitionBy(col("q_id")).orderBy(col("ham"), col("vec_id"))
@@ -2768,11 +2559,10 @@ object Similarity {
       .withColumn("rank", row_number().over(wh).cast("long"))
       .filter(col("rank") <= TOP_K)
       .select(col("q_id"), col("rank"), col("vec_id").as("n_id"), col("ham"))
-    val sim = round(dot(col("qv"), col("v")) / sqrt(col("qn") * col("nrm")), 4)
     val we = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
     val exact = coded.join(probes, col("vec_id") =!= col("q_id"))
-      .withColumn("cos_sim", sim)
+      .withColumn("cos_sim", cosine())
       .withColumn("er", row_number().over(we))
       .filter(col("er") <= TOP_K)
       .select(col("q_id"), col("vec_id").as("n_id"), lit(1L).as("in_exact"))
@@ -2837,26 +2627,11 @@ object Similarity {
   private val StreamResidues = Seq(2L, 0L, 1L, 0L) // out of order + replay
 
   def q256StreamingIvfUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val base = e.filter(col("vec_id") % UpsertStride =!= UpsertResidue)
-    val cent = centroidsOf(base)
-    val store = graft.Stores.path(spark, "graft_ivf_upsert_stream")
-    assignCells(base, cent)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$store/postings")
-    cent.write.mode("overwrite").parquet(s"$store/centroids")
+    val store = buildBaseStore(spark, vecs(spark, dir), "graft_ivf_upsert_stream")
     StreamResidues.foreach { b =>
-      val mb = upsertBatch(spark, dir).filter(col("vec_id") % 3 === b)
-      upsertNovel(spark, store, mb).localCheckpoint()
-        .write.mode("append").partitionBy("cell").parquet(s"$store/postings")
+      mergeBatch(spark, store, upsertBatch(spark, dir).filter(col("vec_id") % 3 === b))
     }
-    spark.read.parquet(s"$store/postings")
-      .groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("sz_after"),
-           sum(when(col("vec_id") % UpsertStride === UpsertResidue, 1L)
-                 .otherwise(0L)).as("n_added"))
-      .select(col("cell"), (col("sz_after") - col("n_added")).as("sz_base"),
-              col("n_added"), col("sz_after"))
-      .orderBy(col("cell"))
+    upsertAccounting(spark, store)
   }
 
   /** Identical to [[ivfUpsertOracle]] — the unbatched replay IS the
@@ -2883,41 +2658,10 @@ object Similarity {
   private val DeleteResidue = 5L
 
   def q258IvfDeleteQuery(spark: SparkSession, dir: String): DataFrame = {
-    val store = buildUpsertStore(spark, dir, merges = 1)
-    // tombstone append: ids only, postings untouched
-    vecs(spark, dir)
-      .filter(col("vec_id") % DeleteStride === DeleteResidue)
-      .select(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$store/tombstones")
+    val store = indexLifecycleStore(spark, dir)
     val tomb = spark.read.parquet(s"$store/tombstones")
-    val postings = spark.read.parquet(s"$store/postings")
-      .join(tomb, Seq("vec_id"), "left_anti") // deleted = invisible
-    val centroids = spark.read.parquet(s"$store/centroids")
-    val q = postings.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = round(aggregate(
-      zip_with(col("qv"), col("cv"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("rdist", sqDist)
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") === 1)
-      .select(col("q_id"), col("label").cast("long").as("cell"),
-              col("qv"), col("qn"))
-    val sim = round(call_function("graft_dot", col("qv"), col("v")) /
-      sqrt(col("qn") * col("nrm")), 4)
-    val pairs = postings.withColumn("cell", col("cell").cast("long"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("n_id"))
-    pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TOP_K)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    cellStoreTopK(spark, store, spark.read.parquet(s"$store/postings")
+      .join(tomb, Seq("vec_id"), "left_anti")) // deleted = invisible
   }
 
   /** CLI feed (`graft index <sfDir>`): the full maintenance lifecycle —
@@ -2929,8 +2673,10 @@ object Similarity {
                                          dir: String): DataFrame =
     storeStats(spark, indexLifecycleStore(spark, dir))
 
-  /** build + merge + tombstone, compaction NOT yet run — the store the
-    * CLI's stats and compact verbs both operate on. */
+  /** build + one upsert merge + tombstone append (the delete slice's ids
+    * go to a side table, the postings stay untouched), compaction NOT yet
+    * run — the store q258 serves and the CLI's stats and compact verbs
+    * both operate on. */
   private[graft] def indexLifecycleStore(spark: SparkSession,
                                          dir: String): String = {
     val store = buildUpsertStore(spark, dir, merges = 1)
@@ -3014,11 +2760,7 @@ object Similarity {
 
   /** build → upsert-merge → tombstone-delete → compact; returns the store. */
   private[graft] def buildCompactedStore(spark: SparkSession, dir: String): String = {
-    val store = buildUpsertStore(spark, dir, merges = 1)
-    vecs(spark, dir)
-      .filter(col("vec_id") % DeleteStride === DeleteResidue)
-      .select(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$store/tombstones")
+    val store = indexLifecycleStore(spark, dir)
     compactStore(spark, store)
     store
   }
@@ -3029,33 +2771,7 @@ object Similarity {
     * equivalence of the two serving paths is the correctness claim. */
   def q259IvfCompactQuery(spark: SparkSession, dir: String): DataFrame = {
     val store = buildCompactedStore(spark, dir)
-    val postings = spark.read.parquet(s"$store/postings")
-    val centroids = spark.read.parquet(s"$store/centroids")
-    val q = postings.filter(col("vec_id") < N_QUERIES)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val sqDist = round(aggregate(
-      zip_with(col("qv"), col("cv"),
-        (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, p) => acc + p), 4)
-    val pw = Window.partitionBy(col("q_id")).orderBy(col("rdist"), col("label"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("rdist", sqDist)
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") === 1)
-      .select(col("q_id"), col("label").cast("long").as("cell"),
-              col("qv"), col("qn"))
-    val sim = round(call_function("graft_dot", col("qv"), col("v")) /
-      sqrt(col("qn") * col("nrm")), 4)
-    val pairs = postings.withColumn("cell", col("cell").cast("long"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("n_id"))
-    pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TOP_K)
-      .select(col("q_id"), col("rank"), col("n_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    cellStoreTopK(spark, store, spark.read.parquet(s"$store/postings"))
   }
 
   /** q260 — post-compaction accounting conservation: per-cell live sizes

@@ -125,11 +125,12 @@ object BoundedScan {
     * matching rows plus the continuation to resume from (None = exhausted).
     *
     * The reference wraps both phases in a REPEATABLE READ transaction; the
-    * Spark analog: pass `src = Snapshots.readPinned(spark, path)` (or
-    * `Snapshots.read` of a version carried in the continuation token) —
-    * both phases, and every later page, then read one committed manifest's
-    * file set, immune to concurrent [[graft.ingest.Upsert.merge]] appends
-    * (SnapshotSpec interleaves merges with a paging loop to prove it).
+    * Spark analog: pass `src = Snapshots.readPinned(spark, path)` — both
+    * phases then read one committed manifest's file set, immune to
+    * concurrent [[graft.ingest.Upsert.merge]] appends. A [[Continuation]]
+    * carries no snapshot version, so each later page pins the latest
+    * commit at its own request, as the reference's per-request
+    * transaction does.
     */
   def performBoundedScan(src: DataFrame, spec: CursorSpec, matchCol: Column,
                          scanLimit: Int, resultLimit: Int,

@@ -216,8 +216,7 @@ object Dto {
        |"paths":{
        |"/txs/recent":${pathItem("Recent transactions", arrayOf("TxSummary"))},
        |"/txs/search":${pathItem("Transaction code search", arrayOf("TxSummary"))},
-       |"/txs/tx/{requestkey}":${pathItem("Transaction detail",
-          "{\"$ref\":\"#/components/schemas/TxDetail\"}")},
+       |"/txs/tx/{requestkey}":${pathItem("Transaction detail", arrayOf("TxDetail"))},
        |"/txs/txs/{requestkey}":${pathItem("All fork copies", arrayOf("TxDetail"))},
        |"/txs/events":${pathItem("Event search", arrayOf("EventDetail"))},
        |"/txs/account/{account}":${pathItem("Account transfer history",

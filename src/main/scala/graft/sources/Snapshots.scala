@@ -24,9 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale: a manifest is O(#files) text written once per merge; reads list
   * nothing (the manifest IS the listing — at 100 TB this also removes the
   * slow recursive directory listing from the read path, which is the main
-  * reason real lakehouse formats exist). Pinning across requests works by
-  * carrying `version` in the continuation token and calling
-  * [[at]]/[[read]] with it.
+  * reason real lakehouse formats exist). A pin lasts one request: the
+  * bounded-scan continuation token carries no version, so every page
+  * pins the table's latest commit afresh ([[readPinned]]); [[at]] can
+  * re-read an older version by number.
   */
 object Snapshots {
 
@@ -90,7 +91,7 @@ object Snapshots {
   def latest(spark: SparkSession, path: String): Option[Snapshot] =
     latestVersion(spark, path).map(at(spark, path, _))
 
-  /** A specific committed version (for continuation tokens that pin one). */
+  /** A specific committed version, by number. */
   def at(spark: SparkSession, path: String, version: Long): Snapshot = {
     val f = fs(spark, path)
     val mp = manifestPath(path, version)
@@ -137,18 +138,21 @@ object Snapshots {
     * bumped it; Spark's context cleaner frees an evicted checkpoint. */
   private[graft] val HandleWindow = 4
 
-  private def cached(spark: SparkSession, kind: Kind, snap: Snapshot)(build: => DataFrame): DataFrame = {
+  private def cached(spark: SparkSession, kind: Kind, table: String, version: Long)
+                    (build: => DataFrame): DataFrame = {
     val app = spark.sparkContext.applicationId
-    handles.getOrElseUpdate((app, kind, snap.table, snap.version), {
+    handles.getOrElseUpdate((app, kind, table, version), {
       handles.filterInPlace { case ((a, k, t, v), _) =>
-        a == app && !(k == kind && t == snap.table && v <= snap.version - HandleWindow)
+        a == app && !(k == kind && t == table && v <= version - HandleWindow)
       }
       build
     })
   }
 
-  def readCached(spark: SparkSession, snap: Snapshot): DataFrame =
-    cached(spark, RawRead, snap)(read(spark, snap))
+  /** The raw read of one committed version through the memo; the manifest
+    * is opened only when the memo misses. */
+  private def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
+    cached(spark, RawRead, path, version)(read(spark, at(spark, path, version)))
 
   /** Test hook: live memo entries of one kind for one table (eviction pin). */
   private[graft] def cachedHandleCount(table: String, kind: Kind = RawRead): Int =
@@ -163,9 +167,8 @@ object Snapshots {
     * listing that otherwise grows with every ingest merge forever (the
     * reference analog: the scheduled maintenance loop,
     * chainweb-data haskell-src/exec/Chainweb/Server.hs:184-210).
-    * `keepLast` should stay above [[HandleWindow]] so versions pinned by
-    * in-flight continuation tokens survive; a token that still pins a
-    * vacuumed version fails like any aged-out cursor. In-flight commit
+    * `keepLast` should stay above [[HandleWindow]] so a version pinned by
+    * a request still in flight survives. In-flight commit
     * temp files (`.v*.manifest.tmp`) are deliberately left alone —
     * deleting one under a live single-writer would fail its rename.
     * Returns the deleted version numbers (oldest first). */
@@ -226,24 +229,25 @@ object Snapshots {
     }
   }
 
-  /** The latest committed version, else (for tables written before
-    * snapshotting existed) commit the current state first. The bootstrap
-    * commit is serialized in-process; if it still loses a cross-process
-    * race it proceeds on the winner's manifest. None only for a directory
-    * that FAILS an explicit writability probe (the decision is logged and
-    * memoized per table) — a transient IO failure on a writable mount
-    * propagates instead of silently losing the pin. */
-  private def pin(spark: SparkSession, path: String): Option[Snapshot] =
-    latest(spark, path).orElse {
+  /** The latest committed version number, else (for tables written
+    * before snapshotting existed) commit the current state first. Only
+    * the manifest directory is listed: a memo hit never opens a manifest.
+    * The bootstrap commit is serialized in-process; if it still loses a
+    * cross-process race it proceeds on the winner's manifest. None only
+    * for a directory that FAILS an explicit writability probe (the
+    * decision is logged and memoized per table) — a transient IO failure
+    * on a writable mount propagates instead of silently losing the pin. */
+  private def pin(spark: SparkSession, path: String): Option[Long] =
+    latestVersion(spark, path).orElse {
       if (readOnlyTables.contains(path)) None
       else bootstrapLock.synchronized {
-        latest(spark, path).orElse {
-          try Some(commit(spark, path))
+        latestVersion(spark, path).orElse {
+          try Some(commit(spark, path).version)
           catch {
             case e: IllegalStateException =>
               // lost a cross-process rename race: the winner's manifest
               // pins the same pre-existing file set — read that
-              Some(latest(spark, path).getOrElse(throw e))
+              Some(latestVersion(spark, path).getOrElse(throw e))
             case e: java.io.IOException =>
               if (probeReadOnly(spark, path)) None else throw e
           }
@@ -255,13 +259,13 @@ object Snapshots {
     * served from the version-keyed handle memo; a raw, unpinned read only
     * for a proven read-only table. */
   def readPinned(spark: SparkSession, path: String): DataFrame =
-    pin(spark, path).fold(spark.read.parquet(path))(readCached(spark, _))
+    pin(spark, path).fold(spark.read.parquet(path))(readVersion(spark, path, _))
 
   /** `derive` of the [[readPinned]] read, run once per committed version
     * and memoized as `kind` under the same [[HandleWindow]] eviction (on
     * every call for a proven read-only table, which has no version). */
   def derivePinned(spark: SparkSession, path: String, kind: Kind)
                   (derive: DataFrame => DataFrame): DataFrame =
-    pin(spark, path).fold(derive(spark.read.parquet(path)))(snap =>
-      cached(spark, kind, snap)(derive(readCached(spark, snap))))
+    pin(spark, path).fold(derive(spark.read.parquet(path)))(v =>
+      cached(spark, kind, path, v)(derive(readVersion(spark, path, v))))
 }

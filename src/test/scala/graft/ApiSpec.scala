@@ -451,6 +451,14 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
       assert(schemaKeys("EventDetail") == Dto.EventDetailFields.toSet)
       assert(schemaKeys("TransferDetail") == Dto.TransferDetailFields.toSet)
       assert(schemaKeys("ChainwebDataStats") == Dto.StatsFields.toSet)
+      // /txs/tx serves a one-element array, and the spec says so
+      val txSchema = specDoc.get("paths").get("/txs/tx/{requestkey}").get("get")
+        .get("responses").get("200").get("content").get("application/json")
+        .get("schema")
+      assert(txSchema.get("type").asText == "array")
+      assert(txSchema.get("items").get("$ref").asText ==
+        "#/components/schemas/TxDetail")
+      assert(om.readTree(get(s"$base/txs/tx/rk1").body()).isArray)
     } finally api.stop()
   }
 

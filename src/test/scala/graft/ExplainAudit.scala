@@ -5,7 +5,11 @@ package graft
   *  - AUDIT_OUT=<dir> AUDIT_SUFFIX=<before|after>: write
   *    `<dir>/<query>_<suffix>.txt` with explain("formatted") for each query
   *    in AUDIT_QUERIES — the optimization-round deliverable
-  *    (plans/r13/<query>_{before,after}.txt).
+  *    (plans/r13/<query>_{before,after}.txt). Ids drawn from JVM-global
+  *    counters (expression `#123`, lambda variable `x_12`, `plan_id=`, RDD
+  *    ids and their call-site lines) and the per-JVM store temp directory
+  *    are normalized away, so two dumps of the same plan — one per
+  *    commit — differ only where the plans differ.
   * The session comes from GraftSession, as graft.Bench's does, so the
   * dumped plan is the benched plan.
   */
@@ -25,6 +29,11 @@ object ExplainAudit {
           new java.io.File(d).mkdirs()
           val txt = SparkEntry.queries(q)(spark, dir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
+            .replaceAll("#\\d+", "#")
+            .replaceAll("\\b([xyz])_\\d+", "$1_")
+            .replaceAll("plan_id=\\d+", "plan_id=")
+            .replaceAll("RDD\\[\\d+\\] at (\\w+) at ([\\w.]+):\\d+", "RDD[] at $1 at $2")
+            .replaceAll("graft_stores\\d+", "graft_stores")
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$d/${q}_$suffix.txt"), txt)
           println(s"[explain] wrote $d/${q}_$suffix.txt")

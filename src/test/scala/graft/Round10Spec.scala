@@ -54,17 +54,27 @@ class Round10Spec extends AnyFunSuite with SparkSpec {
        "aggregate accounting — no cartesian anywhere") {
     def finalPlan(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.executedPlan.toString
-    val cq = operators.Similarity.q259IvfCompactQuery(spark, dir)
-    val cqs = finalPlan(cq)
-    assert(!cqs.contains("CartesianProduct"), s"cartesian in q259:\n$cqs")
-    val wins = cqs.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(wins.nonEmpty && wins.forall(_.contains("q_id")),
-      s"q259 window not q_id-partitioned:\n$cqs")
-    assert(PlanWalk.allNodes(cq).exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
-      s"q259 probes should broadcast:\n$cqs")
-    // no tombstone anti-join survives into the compacted serving plan
-    assert(!cqs.contains("LeftAnti"), s"q259 still anti-joins tombstones:\n$cqs")
+    // every query served through the shared persisted-store probe
+    val storeQueries = Seq(
+      "q246" -> operators.Similarity.q246IvfPersist _,
+      "q250" -> operators.Similarity.q250IvfUpsertQuery _,
+      "q258" -> operators.Similarity.q258IvfDeleteQuery _,
+      "q259" -> operators.Similarity.q259IvfCompactQuery _)
+    storeQueries.foreach { case (name, query) =>
+      val cq = query(spark, dir)
+      val cqs = finalPlan(cq)
+      assert(!cqs.contains("CartesianProduct"), s"cartesian in $name:\n$cqs")
+      val wins = cqs.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
+      assert(wins.nonEmpty && wins.forall(_.contains("q_id")),
+        s"$name window not q_id-partitioned:\n$cqs")
+      assert(PlanWalk.allNodes(cq).exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
+        s"$name probes should broadcast:\n$cqs")
+      // no tombstone anti-join survives into the compacted serving plan
+      // (q258 anti-joins its tombstones by design)
+      if (name == "q259")
+        assert(!cqs.contains("LeftAnti"), s"q259 still anti-joins tombstones:\n$cqs")
+    }
     val ac = finalPlan(operators.Similarity.q260IvfCompactAccounting(spark, dir))
     assert(!ac.contains("CartesianProduct"), s"cartesian in q260:\n$ac")
     assert(!ac.contains("windowspecdefinition"), s"unexpected window in q260:\n$ac")

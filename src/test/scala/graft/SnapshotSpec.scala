@@ -82,4 +82,19 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshots.readPinned(spark, dir).count() === 4)
     assert(Snapshots.latest(spark, dir).get.version === 1)
   }
+
+  test("a memo hit serves readPinned and derivePinned without opening " +
+       "the manifest") {
+    val dir = Files.createTempDirectory("graft_snap_memo").toString + "/t"
+    Upsert.merge(spark, dir, rows(1L to 6L), Seq("id")): Unit
+    val derived = Snapshots.derivePinned(spark, dir, Snapshots.TxSearchSource)(
+      _.filter(col("flag")))
+    assert(Snapshots.readPinned(spark, dir).count() === 6L)
+    // same version name, but no longer a file: any open of it now fails
+    val manifest = new java.io.File(s"$dir/_manifests/v1.manifest")
+    assert(manifest.delete() && manifest.mkdir())
+    assert(Snapshots.readPinned(spark, dir).count() === 6L)
+    assert(Snapshots.derivePinned(spark, dir, Snapshots.TxSearchSource)(
+      _.filter(col("flag"))) eq derived)
+  }
 }
