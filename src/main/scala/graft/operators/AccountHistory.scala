@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType, TimestampType}
 
 /** Account transfer history — the reference's `/txs/account/<acct>`
   * (SURVEY §7.1's first end-to-end milestone: U1 union of the two
@@ -64,27 +68,24 @@ object AccountHistory {
     // item 4): one committed version across the scans and joins below.
     val blocks = graft.sources.Snapshots
       .readPinned(spark, s"$tableDir/blocks")
+      .select(col("hash").as("block"), col("creationtime").as("block_time"))
     val events = graft.sources.Snapshots
       .readPinned(spark, s"$tableDir/events")
     // U1 — union of the two indexed scans, not one OR predicate.
     val scans = source(spark, tableDir, account)
       .filter(col("modulename") === token)
-    decorate(scans, blocks, events)
+    decorate(scans.join(blocks, "block"), events)
       .orderBy(col("height").desc, col("requestkey").desc, col("idx").asc)
   }
 
-  /** Block-time + cross-chain decoration of a transfers relation
-    * (Queries.hs:278-339 `transferSearchExtras` + `joinXChainInfo`),
-    * factored out so the serving layer can decorate just a RESULT PAGE
-    * (against pruned blocks/events scans) while [[transfersOf]] decorates
-    * the whole account relation. `blocks` must carry (hash, creationtime),
-    * `events` the ingested events schema. The x-chain lateral is
-    * 'coin'-scoped like the reference's hardcoded `mdName = 'coin'`
-    * (Queries.hs:311,321). */
-  def decorate(scans: DataFrame, blocksSrc: DataFrame, events: DataFrame): DataFrame = {
-    val blocks = blocksSrc
-      .select(col("hash").as("block"), col("creationtime").as("block_time"))
-
+  /** Cross-chain decoration of a transfers relation that already carries
+    * its `block_time` (Queries.hs:278-339 `transferSearchExtras` +
+    * `joinXChainInfo`), factored out so the serving layer can decorate just
+    * the cross-chain legs of a RESULT PAGE ([[decoratePage]]) while
+    * [[transfersOf]] decorates the whole account relation. `events` has the
+    * ingested events schema. The x-chain lateral is 'coin'-scoped like the
+    * reference's hardcoded `mdName = 'coin'` (Queries.hs:311,321). */
+  def decorate(scans: DataFrame, events: DataFrame): DataFrame = {
     // J3 branch 1 (outbound): TRANSFER_XCHAIN at idx-1 of the same tx.
     val outbound = events
       .filter(col("qualname") === "coin.TRANSFER_XCHAIN")
@@ -110,7 +111,6 @@ object AccountHistory {
       .drop("idx", "i_rn")
 
     scans
-      .join(blocks, "block")
       .join(outbound,
             col("block") === col("o_block") && col("requestkey") === col("o_rk") &&
             col("idx") === col("o_idx") && col("to_acct") === "" &&
@@ -146,40 +146,64 @@ object AccountHistory {
     * serving analog of the reference running `transferSearchExtras` only
     * over the page it is about to return (BoundedScan.hs's
     * `boundedScanOffset/Limit` wrap the extras around the winning rows,
-    * not the scanned residue). The page rows become a tiny local relation;
-    * blocks/events are pre-pruned with `isin` on the page's block hashes /
-    * request keys so the decoration joins scan only the touched
-    * files at any corpus size. Returns rows in the page's order with the
-    * [[decorate]] output schema (what [[graft.server.Dto.transferDetail]]
+    * not the scanned residue). Block times come from the driver-side
+    * [[graft.sources.BlockIndex]]; a row whose block is not in the table is
+    * dropped, as by [[transfersOf]]'s join. Only the page's cross-chain
+    * legs (a stored side empty or null) need the events: they become a tiny
+    * local relation that [[decorate]] joins against events pre-pruned with
+    * `isin` on their block hashes and request keys. Every other row's
+    * decoration is its own columns, built here without a Spark job, so a
+    * page without legs runs none. Returns rows in the page's order with the
+    * [[decorate]] output columns (what [[graft.server.Dto.transferDetail]]
     * renders). */
-  def decoratePage(spark: SparkSession, tableDir: String,
-                   page: Seq[org.apache.spark.sql.Row]): Seq[org.apache.spark.sql.Row] = {
+  def decoratePage(spark: SparkSession, tableDir: String, page: Seq[Row]): Seq[Row] = {
     if (page.isEmpty) return Seq.empty
-    val tcols = Seq("block", "requestkey", "chainid", "height", "idx",
-                    "modulename", "modulehash", "from_acct", "to_acct", "amount")
-    val schema = org.apache.spark.sql.types.StructType(
-      tcols.map(n => page.head.schema(n)))
-    val slim = page.map(r => org.apache.spark.sql.Row.fromSeq(
-      tcols.map(n => r.getAs[Any](n))))
-    val pageDf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(slim).asJava, schema)
-    val hashes = page.map(_.getAs[String]("block")).distinct
-    val rks = page.map(_.getAs[String]("requestkey")).distinct
-    val blocks = graft.sources.Snapshots
-      .readPinned(spark, s"$tableDir/blocks")
-      .filter(col("hash").isin(hashes: _*))
-    val events = graft.sources.Snapshots
-      .readPinned(spark, s"$tableDir/events")
-      .filter(col("block").isin(hashes: _*) && col("requestkey").isin(rks: _*) &&
-              col("qualname").isin("coin.TRANSFER_XCHAIN", "pact.X_RESUME"))
-    val decorated = decorate(pageDf, blocks, events).collect()
-    // restore the page's cursor order: (block, requestkey, idx) is the
-    // event PK, so it keys each decorated row back to its input position
-    val pos = page.zipWithIndex.map { case (r, i) =>
-      (r.getAs[String]("block"), r.getAs[String]("requestkey"),
-       r.getAs[Long]("idx")) -> i
-    }.toMap
-    decorated.sortBy(r => pos((r.getAs[String]("block"),
-      r.getAs[String]("requestkey"), r.getAs[Long]("idx")))).toSeq
+    val times = graft.sources.BlockIndex.creationTimes(
+      spark, s"$tableDir/blocks", page.map(_.getAs[String]("block")).distinct)
+    val timed = page.filter(r => times.contains(r.getAs[String]("block")))
+    def stored(r: Row, side: String) =
+      Option(r.getAs[String](side)).filter(_.nonEmpty)
+    def isLeg(r: Row) = stored(r, "from_acct").isEmpty || stored(r, "to_acct").isEmpty
+    // (block, requestkey, idx) is the event PK: it keys a decorated leg
+    // back to its page row
+    def key(r: Row) = (r.getAs[String]("block"), r.getAs[String]("requestkey"), r.getAs[Long]("idx"))
+    val legs = timed.filter(isLeg)
+    val resolved: Map[(String, String, Long), Row] =
+      if (legs.isEmpty) Map.empty
+      else {
+        val schema = StructType(legCols.map(n => page.head.schema(n)))
+          .add("block_time", TimestampType)
+        val rows = legs.map(r => Row.fromSeq(legCols.map(n => r.getAs[Any](n)) :+
+                                             times(r.getAs[String]("block"))))
+        val legDf = spark.createDataFrame(rows.asJava, schema)
+        val events = graft.sources.Snapshots
+          .readPinned(spark, s"$tableDir/events")
+          .filter(col("block").isin(legs.map(_.getAs[String]("block")).distinct: _*) &&
+                  col("requestkey").isin(legs.map(_.getAs[String]("requestkey")).distinct: _*) &&
+                  col("qualname").isin("coin.TRANSFER_XCHAIN", "pact.X_RESUME"))
+        decorate(legDf, events).collect().map(r => key(r) -> r).toMap
+      }
+    timed.map(r => if (isLeg(r)) resolved(key(r)) else plainRow(r, times(r.getAs[String]("block"))))
+  }
+
+  /** The transfer columns a cross-chain leg carries into [[decorate]]. */
+  private val legCols = Seq("block", "requestkey", "chainid", "height", "idx",
+                            "modulename", "modulehash", "from_acct", "to_acct", "amount")
+
+  /** [[decorate]]'s output row for a transfer with both sides stored: the
+    * x-chain joins cannot match it, so every column is its own. */
+  private def plainRow(r: Row, blockTime: Any): Row = {
+    def f(n: String) = r.schema(n)
+    val schema = StructType(Seq(
+      f("requestkey"), f("chainid"), f("height"), f("idx"), f("from_acct"), f("to_acct"),
+      StructField("cross_chain", BooleanType), StructField("target_chainid", LongType),
+      f("amount"), StructField("block_time", TimestampType),
+      f("from_acct").copy(name = "from_stored"), f("to_acct").copy(name = "to_stored"),
+      StructField("xchain_acct", StringType), f("block"), f("modulename").copy(name = "token")))
+    def v(n: String) = r.getAs[Any](n)
+    new GenericRowWithSchema(Array(
+      v("requestkey"), v("chainid"), v("height"), v("idx"), v("from_acct"), v("to_acct"),
+      false, null, v("amount"), blockTime, v("from_acct"), v("to_acct"), null,
+      v("block"), v("modulename")), schema)
   }
 }

@@ -21,17 +21,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * writers only add files and manifests, never mutate them — the
   * copy-on-write discipline every table format at this scale uses.
   *
-  * Scale: a manifest is O(#files) text written once per merge; reads list
-  * nothing (the manifest IS the listing — at 100 TB this also removes the
-  * slow recursive directory listing from the read path, which is the main
-  * reason real lakehouse formats exist). A pin lasts one request: the
-  * bounded-scan continuation token carries no version, so every page
-  * pins the table's latest commit afresh ([[readPinned]]); [[at]] can
-  * re-read an older version by number.
+  * Scale: a manifest is O(#files) text written once per merge. A pin
+  * lists only `_manifests/` (one directory, O(#versions) names, bounded by
+  * [[vacuum]]) to find the latest version; the data files are never listed
+  * (the manifest IS the listing — at 100 TB this removes the slow
+  * recursive directory listing from the read path, which is the main
+  * reason real lakehouse formats exist), and a memo hit opens no manifest.
+  * A pin lasts one request: the bounded-scan continuation token carries no
+  * version, so every page pins the table's latest commit afresh
+  * ([[readPinned]]); [[at]] can re-read an older version by number.
+  *
+  * A table directory that does not exist was never ingested: a pin of it
+  * creates and commits nothing and throws [[NotIngested]].
   */
 object Snapshots {
 
   final case class Snapshot(table: String, version: Long, files: Seq[String])
+
+  /** A read of a table directory that does not exist (nothing ingested). */
+  final class NotIngested(val table: String)
+      extends RuntimeException(s"table not ingested: $table")
 
   private val ManifestDir = "_manifests"
   private[graft] def fs(spark: SparkSession, path: String) =
@@ -158,6 +167,18 @@ object Snapshots {
   private[graft] def cachedHandleCount(table: String, kind: Kind = RawRead): Int =
     handles.keys.count { case (_, k, t, _) => k == kind && t == table }
 
+  /** Drops this application's memo entries of every table under `dir` (a
+    * stopped server's tables). Another reader of those tables only misses
+    * the memo and rebuilds. */
+  private[graft] def release(spark: SparkSession, dir: String): Unit = {
+    val app = spark.sparkContext.applicationId
+    handles.filterInPlace { case ((a, _, t, _), _) => a != app || !under(dir, t) }
+  }
+
+  /** Whether table path `t` is `dir` itself or lies below it. */
+  private[graft] def under(dir: String, t: String): Boolean =
+    t == dir || t.startsWith(dir.stripSuffix("/") + "/")
+
   /** Maintenance: delete all manifests older than the newest `keepLast`
     * versions (the on-disk complement of the handle-memo window above).
     * Writers only ever ADD data files, so old manifests reference subsets
@@ -236,9 +257,11 @@ object Snapshots {
     * cross-process race it proceeds on the winner's manifest. None only
     * for a directory that FAILS an explicit writability probe (the
     * decision is logged and memoized per table) — a transient IO failure
-    * on a writable mount propagates instead of silently losing the pin. */
-  private def pin(spark: SparkSession, path: String): Option[Long] =
+    * on a writable mount propagates instead of silently losing the pin.
+    * Throws [[NotIngested]], creating nothing, for a missing directory. */
+  private[graft] def pin(spark: SparkSession, path: String): Option[Long] =
     latestVersion(spark, path).orElse {
+      if (!fs(spark, path).exists(new Path(path))) throw new NotIngested(path)
       if (readOnlyTables.contains(path)) None
       else bootstrapLock.synchronized {
         latestVersion(spark, path).orElse {

@@ -263,10 +263,136 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
         graft.sources.Snapshots.commit(spark, tx): Unit
         assert(get(s"$base/txs/search?search=coin").statusCode() === 200)
       }
+      val live = graft.sources.Snapshots.cachedHandleCount(tx, graft.sources.Snapshots.TxSearchSource)
+      assert(live >= 1 && live <= graft.sources.Snapshots.HandleWindow, s"$live tx-search sources")
     } finally api.stop()
-    val live = graft.sources.Snapshots.cachedHandleCount(tx, graft.sources.Snapshots.TxSearchSource)
-    assert(live >= 1 && live <= graft.sources.Snapshots.HandleWindow, s"$live tx-search sources")
     assert(graft.operators.TxSearch.source(spark, dir) eq graft.operators.TxSearch.source(spark, dir))
+  }
+
+  test("stop() releases the snapshot memo entries and block index of its tables") {
+    import graft.sources.{BlockIndex, Snapshots}
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      Seq("/txs/search?search=coin", "/txs/events?search=TRANSFER", "/coins")
+        .foreach(u => assert(get(base + u).statusCode() === 200, u))
+      assert(Snapshots.cachedHandleCount(s"$dir/transactions", Snapshots.TxSearchSource) === 1)
+      assert(Snapshots.cachedHandleCount(s"$dir/events") === 1)
+      assert(BlockIndex.isHeld(s"$dir/blocks"))
+    } finally api.stop()
+    for (t <- Seq("blocks", "events", "transactions"); k <- Seq(Snapshots.RawRead, Snapshots.TxSearchSource))
+      assert(Snapshots.cachedHandleCount(s"$dir/$t", k) === 0, s"$t $k")
+    assert(!BlockIndex.isHeld(s"$dir/blocks"))
+  }
+
+  test("reads before the first ingest answer 404 (stats: nulls) and create nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_api_empty").toString
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      for (u <- Seq("/coins", "/txs/recent", "/txs/events?search=x", "/txs/search?search=x",
+                    "/txs/account/alice", "/txs/tx/rk1")) {
+        val r = get(base + u)
+        assert(r.statusCode() === 404, s"$u: ${r.body()}")
+        assert(r.body() === s"""{"error":"${Api.NotIngestedMsg}"}""", u)
+      }
+      val stats = get(s"$base/stats")
+      assert(stats.statusCode() === 200)
+      assert(stats.body() === """{"transactionCount":null,"coinsInCirculation":null}""")
+    } finally api.stop()
+    assert(new java.io.File(dir).list().isEmpty, new java.io.File(dir).list().mkString(","))
+  }
+
+  /** Every object of a JSON array body, as field -> text. */
+  private def objects(body: String): Seq[Map[String, String]] = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(body).elements().asScala.toSeq
+      .map(o => o.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+  }
+
+  /** blocks.creationtime of every block in the tables, rendered as the API does. */
+  private def blockTimes(dir: String): Map[String, String] =
+    spark.read.parquet(s"$dir/blocks").select("hash", "creationtime").collect()
+      .map(r => r.getString(0) -> r.getTimestamp(1).toInstant.toString).toMap
+
+  test("every Spark job of a request runs under its job group; a page whose " +
+       "block times all hit the index is one job, /coins none") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      val urls = Seq("/txs/events?search=TRANSFER", "/txs/account/bob", "/coins")
+      urls.foreach(u => assert(get(base + u).statusCode() === 200, u)) // warm the memo and index
+      def jobsOf(u: String) = {
+        var body = ""
+        val jobs = JobWindow(spark) { body = get(base + u).body() }
+        (jobs, body)
+      }
+      val (ev1, evBody) = jobsOf(urls(0))
+      val (ev2, _) = jobsOf(urls(0))
+      assert(evBody.contains("\"blockHash\":\"blk1\""), evBody)
+      assert(ev1.size === 1, ev1)
+      for ((g, d, i) <- ev1 ++ ev2) {
+        assert(g != null && g.startsWith("graft-request-"), g)
+        assert(d === "GET /txs/events")
+        assert(i === "true")
+      }
+      assert(ev1.head._1 != ev2.head._1, "each request has its own group")
+      // bob's transfers have both sides stored: no cross-chain leg to resolve
+      val (acct, acctBody) = jobsOf(urls(1))
+      assert(acctBody.contains("\"requestKey\":\"rk1\""), acctBody)
+      assert(!acctBody.contains("Account\":\"\""), acctBody)
+      assert(acct.size === 1, acct)
+      assert(acct.forall(_._2 == "GET /txs/account/bob"), acct)
+      assert(jobsOf(urls(2))._1 === Nil)
+    } finally api.stop()
+  }
+
+  test("event pages carry each block's creationtime: orphan twins, a block " +
+       "ingested after the first request, and a hash outside the index") {
+    import spark.implicits._
+    // a twin of block 1 minted 99 s later, so the two copies' times differ
+    def lateTwin(json: String) = twin(json).replace("\"creationTime\":1600000000000000",
+                                                    "\"creationTime\":1600000099000000")
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1,
+      lateTwin(Fixtures.header1) -> twin(Fixtures.payload1))
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      def checkPage(): Seq[String] = {
+        val times = blockTimes(dir)
+        val rows = objects(get(s"$base/txs/events?search=TRANSFER&limit=100").body())
+        rows.foreach(r => assert(r("blockTime") === times(r("blockHash")), r))
+        rows.map(_("blockHash")).distinct
+      }
+      assert(checkPage().toSet === Set("blk1", "blk1t"))
+      assert(blockTimes(dir)("blk1") != blockTimes(dir)("blk1t"))
+
+      // a block committed after the server's first request: the index
+      // follows the new blocks version, and /coins sees its height
+      graft.streaming.Listen.ingestBatch(spark, Seq(
+        s"""{"header":${Fixtures.header2},"payload":${Fixtures.payload2}}""").toDF("value"), dir): Unit
+      assert(checkPage().toSet === Set("blk1", "blk1t", "blk2"))
+      val blocks = s"$dir/blocks"
+      assert(graft.sources.BlockIndex.current(spark, blocks).get.blocks.keySet ===
+        Set("blk1", "blk1t", "blk2"))
+      val asof = graft.operators.Coins.GenesisEpochSec + 86400L * 30
+      assert(get(s"$base/coins?asof=$asof").body() ===
+        graft.operators.Coins.circulatingCoins(101L, asof).toString)
+
+      // an index bounded to the newest block misses height 100: those
+      // times come from the pinned-table lookup, one more job (once the
+      // first lookup has opened the blocks handle)
+      assert(graft.sources.BlockIndex.rebuild(spark, blocks, 1).blocks.keySet === Set("blk2"))
+      assert(checkPage().toSet === Set("blk1", "blk1t", "blk2"))
+      val jobs = JobWindow(spark)(assert(checkPage().toSet === Set("blk1", "blk1t", "blk2")))
+      assert(jobs.count(_._2 == "GET /txs/events") === 2, jobs)
+    } finally api.stop()
   }
 
   /** Status line of a raw request, for targets `java.net.URI` refuses. */
