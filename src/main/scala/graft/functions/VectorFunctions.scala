@@ -302,7 +302,11 @@ object GraftFunctions {
         "Returns NULL when a terms array and its tfs array differ in length.")(
       e => SortedMinMass(e(0), e(1), e(2), e(3))),
     fn("graft_gram", classOf[GramMatrix])(
-      e => GramMatrix(e(0), e(1)).toAggregateExpression()))
+      e => GramMatrix(e(0), e(1)).toAggregateExpression()),
+    fn(graft.plans.BoundLiteral.Name, classOf[graft.plans.BoundLiteral],
+      "_FUNC_(literal) - The literal, with its value read from the plan's " +
+        "references instead of being written into generated code.")(
+      graft.plans.BoundLiteral.build))
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions`: injects every

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
+import graft.plans.BoundLiteral
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
@@ -44,9 +45,10 @@ object AccountHistory {
   }
 
   /** Filter-mark predicate (Queries.hs:252-255 `searchCond`):
-    * `modulename = token [AND chainid = chain]`. */
+    * `modulename = token [AND chainid = chain]`, the chain bound
+    * ([[BoundLiteral]]). */
   def predicate(token: String, chain: Option[Long] = None): Column =
-    chain.foldLeft(col("modulename") === token)((p, c) => p && col("chainid") === c)
+    chain.foldLeft(col("modulename") === token)((p, c) => p && col("chainid") === BoundLiteral(c))
 
   /** History rows for one account, newest first (height DESC, requestkey
     * DESC, idx ASC — Queries.hs:238-242), decorated with block time and

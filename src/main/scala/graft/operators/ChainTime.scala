@@ -2,6 +2,7 @@ package graft.operators
 
 import java.time.Instant
 
+import graft.plans.BoundLiteral
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -22,9 +23,10 @@ object ChainTime {
     math.max(0L, (t.getEpochSecond - Coins.GenesisEpochSec) / Coins.BlockIntervalSec)
 
   /** Optional height-range guard (P2 — Queries.hs:52-60) of every search
-    * source: `minHeight <= height <= maxHeight`, each bound optional. */
+    * source: `minHeight <= height <= maxHeight`, each bound optional and
+    * bound ([[BoundLiteral]]), so another range reuses the compiled plan. */
   def heightRange(df: DataFrame, minHeight: Option[Long], maxHeight: Option[Long]): DataFrame =
-    Seq(minHeight.map(h => col("height") >= h),
-        maxHeight.map(h => col("height") <= h))
+    Seq(minHeight.map(h => col("height") >= BoundLiteral(h)),
+        maxHeight.map(h => col("height") <= BoundLiteral(h)))
       .flatten.foldLeft(df)(_ filter _)
 }

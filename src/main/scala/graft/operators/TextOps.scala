@@ -54,22 +54,35 @@ object TextOps {
     "fr" -> Seq("le", "et", "les"),
     "zh" -> Seq("的", "是"))
 
-  /** q34 — language-ID heuristic: argmax of marker scores with a fixed
-    * priority order tiebreak, 'und' when nothing matches. */
-  def q34LangId(spark: SparkSession, dir: String): DataFrame = {
+  /** `df` plus q34's prediction over its `text`: `pred_lang`, the argmax
+    * of the marker scores with a fixed priority order tiebreak ('und' when
+    * nothing matches), and `lang_score`, the top score. Each score and the
+    * top one are columns of their own projection, computed once per row.
+    * `CollapseProject` leaves the projections apart, because the argmax
+    * reads each of them more than once; inlined, the `CASE` repeated all 14
+    * `regexp_replace` markers per branch, and the whole-stage method grew
+    * beyond Java's 64 KB limit. */
+  private def withLangId(df: DataFrame): DataFrame = {
     val padded = concat(lit(" "), lower(col("text")), lit(" "))
-    val scores: Seq[(String, Column)] = langMarkers.map { case (lg, ws) =>
-      lg -> ws.map(w => length(padded) - length(regexp_replace(padded, s" $w ", "")))
-              .reduce(_ + _)
+    val scores = langMarkers.map { case (lg, ws) =>
+      ws.map(w => length(padded) - length(regexp_replace(padded, s" $w ", "")))
+        .reduce(_ + _).as(s"lang_score_$lg")
     }
-    val maxS = greatest(scores.map(_._2): _*)
-    val pred = scores.foldLeft(when(maxS <= 0, "und")) { case (acc, (lg, s)) =>
-      acc.when(s === maxS, lg)
+    val maxS = col("lang_score")
+    val pred = langMarkers.foldLeft(when(maxS <= 0, "und")) { case (acc, (lg, _)) =>
+      acc.when(col(s"lang_score_$lg") === maxS, lg)
     }
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), pred.as("pred_lang"), maxS.cast("long").as("score"))
-      .orderBy(col("doc_id"))
+    df.select(col("*") +: scores: _*)
+      .withColumn("lang_score", greatest(langMarkers.map(m => col(s"lang_score_${m._1}")): _*))
+      .withColumn("pred_lang", pred)
+      .drop(langMarkers.map(m => s"lang_score_${m._1}"): _*)
   }
+
+  /** q34 — language-ID heuristic (see [[withLangId]]). */
+  def q34LangId(spark: SparkSession, dir: String): DataFrame =
+    withLangId(Tables.documents(spark, dir))
+      .select(col("doc_id"), col("pred_lang"), col("lang_score").cast("long").as("score"))
+      .orderBy(col("doc_id"))
 
   /** DuckDB-side rendering of the same scores (kept next to the Spark
     * columns so the two dialects can't drift). */
@@ -196,17 +209,8 @@ object TextOps {
     * convention; the numerator routes through DECIMAL(38,0) because
     * sum(bpe_tokens)·10^6 overflows int64 at web-corpus scale. */
   def q261TokenFertility(spark: SparkSession, dir: String): DataFrame = {
-    val padded = concat(lit(" "), lower(col("text")), lit(" "))
-    val scores: Seq[(String, Column)] = langMarkers.map { case (lg, ws) =>
-      lg -> ws.map(w => length(padded) - length(regexp_replace(padded, s" $w ", "")))
-              .reduce(_ + _)
-    }
-    val maxS = greatest(scores.map(_._2): _*)
-    val pred = scores.foldLeft(when(maxS <= 0, "und")) { case (acc, (lg, s)) =>
-      acc.when(s === maxS, lg)
-    }
-    Tables.documentsWide(spark, dir)
-      .select(pred.as("pred_lang"),
+    withLangId(Tables.documentsWide(spark, dir))
+      .select(col("pred_lang"),
               size(regexp_extract_all(lower(col("text")), lit(bpePattern), lit(0)))
                 .cast("long").as("bpe"),
               length(col("text")).cast("long").as("chars"))
@@ -913,9 +917,14 @@ object TextOps {
   def q186MetadataKappa(spark: SparkSession, dir: String): DataFrame = {
     val conf = q177LangConfusion(spark, dir)
       .select(col("lang"), col("pred_lang"), col("n"))
+    // `lang = pred_lang` written as a null-safe match of non-null `lang`s:
+    // the plain equality would make the optimizer infer an
+    // `isnotnull(pred_lang)` filter and push it through q34's projections
+    // down to the scan, inlining the whole scorer there again.
     val marg = conf.groupBy(col("lang")).agg(sum(col("n")).as("row_n"))
+      .filter(col("lang").isNotNull)
       .join(conf.groupBy(col("pred_lang")).agg(sum(col("n")).as("col_n")),
-            col("lang") === col("pred_lang"))
+            col("lang") <=> col("pred_lang"))
       .select(sum(col("row_n").cast(org.apache.spark.sql.types.DecimalType(38, 0))
         * col("col_n")).as("chance"))
     conf.agg(sum(col("n")).as("n_docs"),

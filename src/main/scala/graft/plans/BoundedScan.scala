@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Bounded-scan keyset pagination — the reference's signature query-engine
   * feature (chainweb-data haskell-src/lib/ChainwebDb/BoundedScan.hs),
@@ -29,6 +31,12 @@ import org.apache.spark.sql.functions._
   *   3. run the scan/match numbering window on the ≤ scanLimit-row residue —
   *      a bounded single-partition window, identical semantics, bounded cost
   *      regardless of table size.
+  *
+  * The reference sends every page to Postgres as the same prepared query.
+  * The Spark analog: cursor values and the phases' budget comparisons are
+  * [[BoundLiteral]]s, so a new cursor page reuses its endpoint's compiled
+  * whole-stage classes instead of compiling new ones. `LIMIT` counts stay
+  * plain literals.
   */
 object BoundedScan {
 
@@ -103,7 +111,8 @@ object BoundedScan {
                   scanLimit: Int, offset: Long,
                   after: Option[Seq[Column]] = None): DataFrame =
     budgetedScan(src, spec, matchCol, scanLimit, after)
-      .filter(col("scan_num") === scanLimit || col("found_num") === offset)
+      .filter(col("scan_num") === BoundLiteral(scanLimit) ||
+              col("found_num") === BoundLiteral(offset))
       .orderBy(col("scan_num"))
       .limit(1)
       .select((spec.names.map(col) :+ col("scan_num") :+ col("found_num")): _*)
@@ -115,8 +124,8 @@ object BoundedScan {
                  scanLimit: Int, resultLimit: Int,
                  after: Option[Seq[Column]] = None): DataFrame =
     budgetedScan(src, spec, matchCol, scanLimit, after)
-      .filter((col("match") && col("found_num") <= resultLimit) ||
-              col("scan_num") === scanLimit)
+      .filter((col("match") && col("found_num") <= BoundLiteral(resultLimit.toLong)) ||
+              col("scan_num") === BoundLiteral(scanLimit))
       .orderBy(col("scan_num"))
 
   /** Driver control loop (BoundedScan.hs:175-254 `performBoundedScan`):
@@ -226,10 +235,15 @@ object BoundedScan {
     spec.names.map(n => String.valueOf(r.getAs[Any](n)))
 
   /** Cursor values arrive as strings (token codec); re-typed against the
-    * source schema so comparisons stay native (and pushdown-eligible). */
+    * source schema so comparisons stay native (and pushdown-eligible).
+    * Long and int values are cast on the driver and bound: a cast left in
+    * the plan would be folded back into an inlined literal. */
   private def litCursor(src: DataFrame, spec: CursorSpec, vals: Seq[String]): Seq[Column] =
     spec.names.zip(vals).map { case (n, v) =>
-      lit(v).cast(src.schema(n).dataType)
+      src.schema(n).dataType match {
+        case t @ (LongType | IntegerType) => BoundLiteral(Cast(Literal(v), t).eval())
+        case t                            => lit(v).cast(t)
+      }
     }
 
   // --- Continuation token codec (O7 — Server.hs:486-491): url-safe base64

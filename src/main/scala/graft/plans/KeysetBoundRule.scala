@@ -23,9 +23,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * predicate never changes query results; it only enables pushdown.
   *
   * This rule is the only place the bound is made: it serves
-  * [[BoundedScan.resumePredicate]] (whose cursor values arrive as cast
-  * string literals, folded to plain literals by constant folding in the
-  * same optimizer batch) and any user-written keyset filter (`spark.sql`
+  * [[BoundedScan.resumePredicate]] (whose long and int cursor values are
+  * [[BoundLiteral]]s, and whose other values arrive as cast string
+  * literals, folded to plain literals by constant folding in the same
+  * optimizer batch) and any user-written keyset filter (`spark.sql`
   * included) alike. It is a fixpoint: once the bound is present it is
   * never re-added.
   */

@@ -93,7 +93,7 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = Api.httpServer(new InetSocketAddress(port))
   // Concurrent executor so overlapping requests actually overlap (the JDK
   // default is a single-threaded dispatch, which would hide throttling).
   // Its threads are non-daemon: [[stop]] must shut it down or the JVM
@@ -443,6 +443,20 @@ object Api {
 
   /** The 404 body of a table-backed endpoint before the first ingest. */
   val NotIngestedMsg = "tables not ingested yet"
+
+  /** Every JDK HTTP server of the program, this API's and the tests' mock
+    * nodes alike, is made here, so each runs with TCP_NODELAY on its
+    * accepted sockets. Without it a response pays the client's delayed ACK
+    * (~40 ms): the server writes the headers and the body in two writes,
+    * and Nagle holds the second until the first is acknowledged. The JDK
+    * reads `sun.net.httpserver.nodelay` once, when its first server is
+    * made, so the property must be set before that; setting it here on
+    * every call keeps the result independent of which server comes
+    * first. */
+  def httpServer(addr: InetSocketAddress): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(addr, 0)
+  }
 
   /** Source of the per-request Spark job group ids. */
   private val requestIds = new AtomicLong(0)

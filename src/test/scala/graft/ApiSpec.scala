@@ -4,6 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.server.Api
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -659,6 +660,70 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
       assert(r.statusCode() === 500)
       assert(r.body() === """{"error":"internal error"}""")
       assert(!r.body().contains(text) && !r.body().contains(missing))
+    } finally api.stop()
+  }
+
+  /** Janino compiles (whole-stage and expression classes) while `f` runs. */
+  private def compiles(f: => Unit): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  test("a new cursor page, or another minheight, reuses its endpoint's " +
+       "compiled classes") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1,
+                              Fixtures.header2 -> Fixtures.payload2)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      def ok(url: String): HttpResponse[String] = {
+        val r = get(url)
+        assert(r.statusCode() === 200, r.body())
+        r
+      }
+      def next(path: String, r: HttpResponse[String]) =
+        s"$base$path&next=${r.headers().firstValue("Graft-Next").get}"
+      // the second page compiles the cursor-page shape; the third, with a
+      // new cursor, reuses it
+      for (path <- Seq("/txs/search?search=coin.transfer&limit=1",
+                       "/txs/events?search=TRANSFER&limit=1")) {
+        val second = ok(next(path, ok(s"$base$path")))
+        var third: HttpResponse[String] = null
+        val n = compiles { third = ok(next(path, second)) }
+        assert(third.body() !== "[]", path)
+        assert(n === 0, s"the third page of $path compiled $n classes")
+      }
+      val acct = s"$base/txs/account/alice?limit=1"
+      ok(s"$acct&minheight=99")
+      var page: HttpResponse[String] = null
+      val n = compiles { page = ok(s"$acct&minheight=100") }
+      assert(page.body().contains("\"requestKey\":\"rk3\""))
+      assert(n === 0, s"an account page with another minheight compiled $n classes")
+    } finally api.stop()
+  }
+
+  test("keep-alive round trips do not wait for the client's delayed ACK") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    // HTTP/1.1: the client keeps one connection open across the requests
+    val http = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(
+      URI.create(s"http://localhost:${api.boundPort}/coins?asof=1700000000")).build()
+    def roundTrip(): Double = {
+      val t0 = System.nanoTime()
+      assert(http.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() === 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    try {
+      roundTrip(): Unit // opens the connection and builds the block index
+      val ms = Seq.fill(20)(roundTrip()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      info(f"median /coins round trip $median%.1f ms")
+      // Nagle plus a ~40 ms delayed ACK put every response at >= 40 ms
+      assert(median < 20, f"median /coins round trip $median%.1f ms: ${ms.mkString(", ")}")
     } finally api.stop()
   }
 

@@ -30,8 +30,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       Fixtures.mkHeader(0L, h) -> Fixtures.mkPayload(0L, h)): _*)
 
     // Mock node answering the blocksBetween contract (Lookups.hs:102-139).
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("localhost", 0), 0)
+    val server = graft.server.Api.httpServer(new java.net.InetSocketAddress("localhost", 0))
     server.createContext("/chainweb/0.0/test/chain",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         val cid = ex.getRequestURI.getPath.split("/")(5).toLong

@@ -4,9 +4,10 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import graft.ingest.{Fetch, Flatten, Upsert}
 import graft.plans.{Gaps, RangePlan}
+import graft.server.Api
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end batch repair (S2/S3): a mock chainweb node serving
@@ -20,7 +21,7 @@ class FetchSpec extends AnyFunSuite with SparkSpec {
     * can fault-inject leading failures. */
   private def withNode[A](failFirst: Int = 0, failStatus: Int = 429)
                          (body: (String, () => Seq[String]) => A): A = {
-    val server = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
+    val server = Api.httpServer(new InetSocketAddress("localhost", 0))
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val failures = new AtomicInteger(failFirst)
     server.createContext("/chainweb/0.0/test/chain", (ex: HttpExchange) => {

@@ -60,6 +60,39 @@ class KeysetRuleSpec extends AnyFunSuite with SparkSpec {
       s"expected the derived o_orderkey bound once in PushedFilters: $pushed")
   }
 
+  test("with bound cursor values, a bounded-scan page still pushes the " +
+       "derived leading bound to parquet, once") {
+    import graft.plans.BoundedScan
+    import graft.plans.BoundedScan.{Continuation, CursorSpec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1,
+                              Fixtures.header2 -> Fixtures.payload2)
+    val src = graft.sources.Snapshots.readPinned(spark, s"$dir/transactions")
+    val pushed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+          .foreach(pushed.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the tx cursor, resumed after (100, rk3, blk1): the page holds rk2, rk1
+      val (rows, _) = BoundedScan.performBoundedScan(src,
+        CursorSpec(Seq("height" -> true, "requestkey" -> true, "block" -> true)),
+        lit(true), 100, 10, Some(Continuation(Some(Seq("100", "rk3", "blk1")), 0)))
+      assert(rows.map(_.getAs[String]("requestkey")) === Seq("rk2", "rk1"))
+      // listeners hear of the finished query on the listener bus
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (pushed.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally spark.listenerManager.unregister(listener)
+    val all = pushed.toArray.mkString(";")
+    assert("LessThanOrEqual\\(height,100\\)".r.findAllIn(all).length === 1,
+      s"expected the derived height bound once in PushedFilters: $all")
+  }
+
   test("ascending chains derive a >= bound") {
     val asc = Tables.lineitem(spark, dir).filter(
       (col("l_orderkey") > 4000) ||

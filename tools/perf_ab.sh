@@ -11,8 +11,10 @@
 #
 # For each seed it runs `python3 perfbench/run.py` once in each tree,
 # alternating which tree runs first, and keeps every result line in
-# $OUT/results. It then prints, per metric of the run's kind (end-to-end
-# for TRACE=0, per-layer for TRACE=1), the median and quartiles of both
+# $OUT/results, named by pair index (`<side>-<workload>-<pair>-<seed>`), so
+# a seed listed more than once is a pair of its own. It then prints, over
+# every pair, per metric of the run's kind (end-to-end for TRACE=0,
+# per-layer for TRACE=1), the median and quartiles of both
 # sides, the median change, and in how many pairs the change was better
 # (by the metric's `better` direction in BENCHMARK.json). Neither tree's
 # perfbench/ nor BENCHMARK.json is modified.
@@ -40,18 +42,18 @@ B=$(tree change "$CHANGE")
 echo "parent: $A ($PARENT)"
 echo "change: $B ($CHANGE)"
 
-run() { # <label> <dir> <seed>
-  local res="$OUT/results/$1-$WORKLOAD-$3.json"
-  (cd "$2" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$3" \
-     --seconds "$SECS" --trace "$TRACE" 2>"$OUT/results/$1-$WORKLOAD-$3.log" | tail -1 > "$res") \
-    || echo "$1 seed $3 failed; see $OUT/results/$1-$WORKLOAD-$3.log"
-  echo "[$(date +%H:%M:%S)] $1 seed $3: $(head -c 120 "$res")"
+run() { # <label> <dir> <pair> <seed>
+  local base="$OUT/results/$1-$WORKLOAD-$3-$4"
+  (cd "$2" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$4" \
+     --seconds "$SECS" --trace "$TRACE" 2>"$base.log" | tail -1 > "$base.json") \
+    || echo "$1 pair $3 seed $4 failed; see $base.log"
+  echo "[$(date +%H:%M:%S)] $1 pair $3 seed $4: $(head -c 120 "$base.json")"
 }
 
 i=0
 for s in "${SEEDS[@]}"; do
-  if [ $((i % 2)) -eq 0 ]; then run parent "$A" "$s"; run change "$B" "$s"
-  else run change "$B" "$s"; run parent "$A" "$s"; fi
+  if [ $((i % 2)) -eq 0 ]; then run parent "$A" "$i" "$s"; run change "$B" "$i" "$s"
+  else run change "$B" "$i" "$s"; run parent "$A" "$i" "$s"; fi
   i=$((i + 1))
 done
 
@@ -61,13 +63,13 @@ res_dir, workload, bench, seeds = sys.argv[1], sys.argv[2], sys.argv[3], sys.arg
 spec = json.load(open(bench))
 better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
 
-def load(label, seed):
+def load(label, pair, seed):
     try:
-        return json.load(open(f"{res_dir}/{label}-{workload}-{seed}.json"))
+        return json.load(open(f"{res_dir}/{label}-{workload}-{pair}-{seed}.json"))
     except (OSError, ValueError):
         return None
 
-pairs = [(load("parent", s), load("change", s)) for s in seeds]
+pairs = [(load("parent", i, s), load("change", i, s)) for i, s in enumerate(seeds)]
 for label, k in (("parent", 0), ("change", 1)):
     runs = [p[k] for p in pairs]
     ok = sum(1 for r in runs if r and r["correct"] and r["failed"] == 0)
