@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import graft.plans.BoundLiteral
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType, TimestampType}
 
@@ -17,10 +16,10 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * Runs over the six tables produced by [[graft.ingest.Flatten]] /
   * [[graft.ingest.Upsert]]. Scale: the two account scans prune on the
   * account clustering (SURVEY §4 — two sorted projections mirroring the
-  * reference's two indexes); the events joins for x-chain resolution are
-  * equi-joins on the (block, requestkey[, idx]) PK prefix, and blocks
-  * decoration joins on hash — all co-keyed with the transfer row, no
-  * fan-out.
+  * reference's two indexes). Decoration is per result page and on the
+  * driver ([[decoratePage]]): block times from the driver-side block
+  * index, and x-chain resolution from one events read pruned to the
+  * page's cross-chain legs' blocks and request keys.
   */
 object AccountHistory {
 
@@ -51,113 +50,49 @@ object AccountHistory {
     chain.foldLeft(col("modulename") === token)((p, c) => p && col("chainid") === BoundLiteral(c))
 
   /** History rows for one account, newest first (height DESC, requestkey
-    * DESC, idx ASC — Queries.hs:238-242), decorated with block time and
-    * x-chain resolution for empty counterparty accounts, covering BOTH
-    * directions of the reference's lateral (Queries.hs:291-339):
-    *   - outbound send (empty `to_acct`): the adjacent `coin.TRANSFER_XCHAIN`
-    *     event (same block+requestkey, idx-1) carries
-    *     [sender, receiver, amount, targetChain] (Queries.hs:308-317);
-    *   - inbound receive (empty `from_acct`): the `pact.X_RESUME` event of
-    *     the same tx (any idx) carries [sourceChain, 'coin.transfer-crosschain',
-    *     [sender, receiver, amount]] (Queries.hs:318-328).
-    * The reference's `UNION ALL … LIMIT 1` branch priority is reproduced by
-    * the outbound-first `coalesce`; the branches are disjoint in practice
-    * (a row has exactly one empty side).
-    */
+    * DESC, idx ASC — Queries.hs:238-242), decorated like a result page
+    * ([[decoratePage]]): block time, and x-chain resolution of the
+    * cross-chain legs in both directions. The whole account is one page
+    * here, collected and decorated on the driver and returned as a local
+    * relation with the [[decoratePage]] columns; rows whose block is not in
+    * the `blocks` table are dropped. */
   def transfersOf(spark: SparkSession, tableDir: String, account: String,
                   token: String = "coin"): DataFrame = {
-    // Snapshot-pinned + footer-memoized (the serving-path rule, VERDICT r8
-    // item 4): one committed version across the scans and joins below.
-    val blocks = graft.sources.Snapshots
-      .readPinned(spark, s"$tableDir/blocks")
-      .select(col("hash").as("block"), col("creationtime").as("block_time"))
-    val events = graft.sources.Snapshots
-      .readPinned(spark, s"$tableDir/events")
     // U1 — union of the two indexed scans, not one OR predicate.
-    val scans = source(spark, tableDir, account)
-      .filter(col("modulename") === token)
-    decorate(scans.join(blocks, "block"), events)
-      .orderBy(col("height").desc, col("requestkey").desc, col("idx").asc)
+    val scans = source(spark, tableDir, account).filter(col("modulename") === token)
+    val rows = scans.orderBy(col("height").desc, col("requestkey").desc, col("idx").asc).collect()
+    spark.createDataFrame(decoratePage(spark, tableDir, rows.toSeq).asJava, decorated(scans.schema))
   }
 
-  /** Cross-chain decoration of a transfers relation that already carries
-    * its `block_time` (Queries.hs:278-339 `transferSearchExtras` +
-    * `joinXChainInfo`), factored out so the serving layer can decorate just
-    * the cross-chain legs of a RESULT PAGE ([[decoratePage]]) while
-    * [[transfersOf]] decorates the whole account relation. `events` has the
-    * ingested events schema. The x-chain lateral is 'coin'-scoped like the
-    * reference's hardcoded `mdName = 'coin'` (Queries.hs:311,321). */
-  def decorate(scans: DataFrame, events: DataFrame): DataFrame = {
-    // J3 branch 1 (outbound): TRANSFER_XCHAIN at idx-1 of the same tx.
-    val outbound = events
-      .filter(col("qualname") === "coin.TRANSFER_XCHAIN")
-      .select(col("block").as("o_block"), col("requestkey").as("o_rk"),
-              (col("idx") + 1).as("o_idx"),
-              unq(element_at(col("params"), 1)).as("o_from"),
-              unq(element_at(col("params"), 2)).as("o_target"),
-              unq(element_at(col("params"), 4)).cast("long").as("o_chainid"))
-
-    // J3 branch 2 (inbound): the tx's pact.X_RESUME event; params[2] is a
-    // nested JSON array [sender, receiver, amount]. One row per tx (the
-    // reference's LIMIT 1): first by event idx.
-    val iw = Window.partitionBy(col("i_block"), col("i_rk")).orderBy(col("idx"))
-    val inbound = events
-      .filter(col("qualname") === "pact.X_RESUME" &&
-              unq(element_at(col("params"), 2)) === "coin.transfer-crosschain")
-      .select(col("block").as("i_block"), col("requestkey").as("i_rk"), col("idx"),
-              get_json_object(element_at(col("params"), 3), "$[0]").as("i_source"),
-              get_json_object(element_at(col("params"), 3), "$[1]").as("i_target"),
-              unq(element_at(col("params"), 1)).cast("long").as("i_chainid"))
-      .withColumn("i_rn", row_number().over(iw))
-      .filter(col("i_rn") === 1)
-      .drop("idx", "i_rn")
-
-    scans
-      .join(outbound,
-            col("block") === col("o_block") && col("requestkey") === col("o_rk") &&
-            col("idx") === col("o_idx") && col("to_acct") === "" &&
-            col("modulename") === "coin" &&
-            col("o_from") === col("from_acct"), "left")
-      .join(inbound,
-            col("block") === col("i_block") && col("requestkey") === col("i_rk") &&
-            col("from_acct") === "" && col("requestkey") =!= "cb" &&
-            col("modulename") === "coin" &&
-            col("i_target") === col("to_acct"), "left")
-      .select(
-        col("requestkey"), col("chainid"), col("height"), col("idx"),
-        when(col("from_acct") === "" && col("i_source").isNotNull, col("i_source"))
-          .otherwise(col("from_acct")).as("from_acct"),
-        when(col("to_acct") === "" && col("o_target").isNotNull, col("o_target"))
-          .otherwise(col("to_acct")).as("to_acct"),
-        // Flagged from the ORIGINAL columns: either empty side marks the
-        // row as a cross-chain leg (outbound send or inbound receive).
-        (col("to_acct") === "" || col("from_acct") === "").as("cross_chain"),
-        coalesce(col("o_chainid"), col("i_chainid")).as("target_chainid"),
-        col("amount"), col("block_time"),
-        // DTO-parity companions (TransferDetail, Server.hs:534-545): the
-        // STORED ledger sides, the resolved other-chain account on its
-        // own, plus block hash and token for rendering.
-        col("from_acct").as("from_stored"),
-        col("to_acct").as("to_stored"),
-        when(col("to_acct") === "", col("o_target"))
-          .when(col("from_acct") === "", col("i_source")).as("xchain_acct"),
-        col("block"), col("modulename").as("token"))
-  }
+  private val TransferXChain = "coin.TRANSFER_XCHAIN"
+  private val XResume = "pact.X_RESUME"
 
   /** Decorate ONE bounded-scan result page (≤ resultLimit rows) — the
-    * serving analog of the reference running `transferSearchExtras` only
-    * over the page it is about to return (BoundedScan.hs's
-    * `boundedScanOffset/Limit` wrap the extras around the winning rows,
-    * not the scanned residue). Block times come from the driver-side
-    * [[graft.sources.BlockIndex]]; a row whose block is not in the table is
-    * dropped, as by [[transfersOf]]'s join. Only the page's cross-chain
-    * legs (a stored side empty or null) need the events: they become a tiny
-    * local relation that [[decorate]] joins against events pre-pruned with
-    * `isin` on their block hashes and request keys. Every other row's
-    * decoration is its own columns, built here without a Spark job, so a
-    * page without legs runs none. Returns rows in the page's order with the
-    * [[decorate]] output columns (what [[graft.server.Dto.transferDetail]]
-    * renders). */
+    * serving analog of the reference running `transferSearchExtras`
+    * (Queries.hs:278-339) only over the page it is about to return
+    * (BoundedScan.hs's `boundedScanOffset/Limit` wrap the extras around the
+    * winning rows, not the scanned residue). Block times come from the
+    * driver-side [[graft.sources.BlockIndex]]; a row whose block is not in
+    * the table is dropped. Only the page's cross-chain legs (a stored side
+    * empty or null) need the events: one pinned read, pruned with `isin` on
+    * their block hashes and request keys and the two qualnames, projects
+    * what the x-chain lateral reads of each event, and the legs are matched
+    * on the driver like the reference's `joinXChainInfo` (coin-scoped, its
+    * hardcoded `mdName = 'coin'`, Queries.hs:311,321):
+    *   - outbound send (empty `to_acct`): the `coin.TRANSFER_XCHAIN` event
+    *     at idx-1 of the same tx whose sender is `from_acct` carries
+    *     [sender, receiver, amount, targetChain] (Queries.hs:308-317);
+    *   - inbound receive (empty `from_acct`, not a coinbase row): the tx's
+    *     first `pact.X_RESUME` event by idx with
+    *     'coin.transfer-crosschain' carries [sourceChain, _, [sender,
+    *     receiver, amount]] (Queries.hs:318-328, its LIMIT 1); it resolves
+    *     the leg when its receiver is `to_acct`.
+    * A page without legs runs no Spark job, one with legs one. Returns rows
+    * in the page's order with the [[decorated]] columns (what
+    * [[graft.server.Dto.transferDetail]] renders): `from_acct`/`to_acct`
+    * resolved, `cross_chain` (either stored side empty), `target_chainid`,
+    * `amount`, `block_time`, the stored sides as `from_stored`/`to_stored`,
+    * the resolved other-chain account as `xchain_acct`, `block`, `token`. */
   def decoratePage(spark: SparkSession, tableDir: String, page: Seq[Row]): Seq[Row] = {
     if (page.isEmpty) return Seq.empty
     val times = graft.sources.BlockIndex.creationTimes(
@@ -165,47 +100,79 @@ object AccountHistory {
     val timed = page.filter(r => times.contains(r.getAs[String]("block")))
     def stored(r: Row, side: String) =
       Option(r.getAs[String](side)).filter(_.nonEmpty)
-    def isLeg(r: Row) = stored(r, "from_acct").isEmpty || stored(r, "to_acct").isEmpty
-    // (block, requestkey, idx) is the event PK: it keys a decorated leg
-    // back to its page row
-    def key(r: Row) = (r.getAs[String]("block"), r.getAs[String]("requestkey"), r.getAs[Long]("idx"))
-    val legs = timed.filter(isLeg)
-    val resolved: Map[(String, String, Long), Row] =
-      if (legs.isEmpty) Map.empty
-      else {
-        val schema = StructType(legCols.map(n => page.head.schema(n)))
-          .add("block_time", TimestampType)
-        val rows = legs.map(r => Row.fromSeq(legCols.map(n => r.getAs[Any](n)) :+
-                                             times(r.getAs[String]("block"))))
-        val legDf = spark.createDataFrame(rows.asJava, schema)
-        val events = graft.sources.Snapshots
-          .readPinned(spark, s"$tableDir/events")
-          .filter(col("block").isin(legs.map(_.getAs[String]("block")).distinct: _*) &&
-                  col("requestkey").isin(legs.map(_.getAs[String]("requestkey")).distinct: _*) &&
-                  col("qualname").isin("coin.TRANSFER_XCHAIN", "pact.X_RESUME"))
-        decorate(legDf, events).collect().map(r => key(r) -> r).toMap
-      }
-    timed.map(r => if (isLeg(r)) resolved(key(r)) else plainRow(r, times(r.getAs[String]("block"))))
+    val legs = timed.filter(r => stored(r, "from_acct").isEmpty || stored(r, "to_acct").isEmpty)
+    val events = legEvents(spark, tableDir, legs)
+    // the outbound event of the transfer at (block, requestkey, idx)
+    val outbound = events.filter(_.getAs[String]("qualname") == TransferXChain)
+      .map(e => (e.getAs[String]("block"), e.getAs[String]("requestkey"), e.getAs[Long]("idx") + 1) -> e)
+      .toMap
+    // the first inbound event of each (block, requestkey)
+    val inbound = events.filter(_.getAs[String]("qualname") == XResume)
+      .groupBy(e => (e.getAs[String]("block"), e.getAs[String]("requestkey")))
+      .view.mapValues(_.minBy(_.getAs[Long]("idx"))).toMap
+    val schema = decorated(page.head.schema)
+    timed.map { r =>
+      val (block, rk) = (r.getAs[String]("block"), r.getAs[String]("requestkey"))
+      val (from, to) = (r.getAs[String]("from_acct"), r.getAs[String]("to_acct"))
+      val coin = r.getAs[String]("modulename") == "coin"
+      val out = outbound.get((block, rk, r.getAs[Long]("idx")))
+        .filter(o => to == "" && coin && Option(o.getAs[String]("o_from")).contains(from))
+      val in = inbound.get((block, rk))
+        .filter(i => from == "" && rk != "cb" && coin && Option(i.getAs[String]("i_target")).contains(to))
+      def o(c: String): Any = out.map(_.getAs[Any](c)).orNull
+      def i(c: String): Any = in.map(_.getAs[Any](c)).orNull
+      // SQL's three-valued OR over the stored sides being empty
+      val empty = Seq(from, to).map(s => Option(s).map(_.isEmpty))
+      val crossChain =
+        if (empty.contains(Some(true))) true else if (empty.contains(None)) null else false
+      new GenericRowWithSchema(Array(
+        rk, r.getAs[Any]("chainid"), r.getAs[Any]("height"), r.getAs[Any]("idx"),
+        if (from == "" && i("i_source") != null) i("i_source") else from,
+        if (to == "" && o("o_target") != null) o("o_target") else to,
+        // outbound first: the reference's `UNION ALL … LIMIT 1` order
+        crossChain, Option(o("o_chainid")).getOrElse(i("i_chainid")),
+        r.getAs[Any]("amount"), times(block), from, to,
+        if (to == "") o("o_target") else if (from == "") i("i_source") else null,
+        block, r.getAs[Any]("modulename")), schema): Row
+    }
   }
 
-  /** The transfer columns a cross-chain leg carries into [[decorate]]. */
-  private val legCols = Seq("block", "requestkey", "chainid", "height", "idx",
-                            "modulename", "modulehash", "from_acct", "to_acct", "amount")
+  /** The x-chain events of `legs`' txs, one pinned read: every
+    * `coin.TRANSFER_XCHAIN` and every `pact.X_RESUME` of
+    * 'coin.transfer-crosschain' in their blocks and request keys, with the
+    * sides and chain ids the lateral reads of each (`o_*` outbound, `i_*`
+    * inbound). Each projection is guarded by its event kind, so a param is
+    * cast only for the events that carry a chain id there: under ANSI mode
+    * a cast of an account name would fail the read. */
+  private def legEvents(spark: SparkSession, tableDir: String, legs: Seq[Row]): Seq[Row] =
+    if (legs.isEmpty) Seq.empty
+    else {
+      def param(i: Int) = element_at(col("params"), i)
+      val out = col("qualname") === TransferXChain
+      graft.sources.Snapshots.readPinned(spark, s"$tableDir/events")
+        .filter(col("block").isin(legs.map(_.getAs[String]("block")).distinct: _*) &&
+                col("requestkey").isin(legs.map(_.getAs[String]("requestkey")).distinct: _*) &&
+                col("qualname").isin(TransferXChain, XResume) &&
+                (out || unq(param(2)) === "coin.transfer-crosschain"))
+        .select(col("block"), col("requestkey"), col("idx"), col("qualname"),
+                when(out, unq(param(1))).as("o_from"),
+                when(out, unq(param(2))).as("o_target"),
+                when(out, unq(param(4)).cast("long")).as("o_chainid"),
+                when(!out, get_json_object(param(3), "$[0]")).as("i_source"),
+                when(!out, get_json_object(param(3), "$[1]")).as("i_target"),
+                when(!out, unq(param(1)).cast("long")).as("i_chainid"))
+        .collect().toSeq
+    }
 
-  /** [[decorate]]'s output row for a transfer with both sides stored: the
-    * x-chain joins cannot match it, so every column is its own. */
-  private def plainRow(r: Row, blockTime: Any): Row = {
-    def f(n: String) = r.schema(n)
-    val schema = StructType(Seq(
+  /** The columns of a decorated transfer, from those of the transfers
+    * relation. */
+  private def decorated(transfers: StructType): StructType = {
+    def f(n: String) = transfers(n)
+    StructType(Seq(
       f("requestkey"), f("chainid"), f("height"), f("idx"), f("from_acct"), f("to_acct"),
       StructField("cross_chain", BooleanType), StructField("target_chainid", LongType),
       f("amount"), StructField("block_time", TimestampType),
       f("from_acct").copy(name = "from_stored"), f("to_acct").copy(name = "to_stored"),
       StructField("xchain_acct", StringType), f("block"), f("modulename").copy(name = "token")))
-    def v(n: String) = r.getAs[Any](n)
-    new GenericRowWithSchema(Array(
-      v("requestkey"), v("chainid"), v("height"), v("idx"), v("from_acct"), v("to_acct"),
-      false, null, v("amount"), blockTime, v("from_acct"), v("to_acct"), null,
-      v("block"), v("modulename")), schema)
   }
 }

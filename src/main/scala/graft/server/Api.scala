@@ -273,16 +273,20 @@ class Api(spark: SparkSession, dataDir: String, port: Int,
 
   /** The one paging path of every search endpoint (the reference's
     * handlers all call `performBoundedScan`, Server.hs:313/512/592): reads
-    * the throttled budgets, clamps the limit, validates the client's token
-    * BEFORE any source work, runs the `Bounded` or `Unbounded` strategy and
-    * builds the `Graft-Scan-Limit`/`Graft-Next` headers. `source` gives the
+    * the throttled budgets, clamps the limit (one below 1 is a 400),
+    * validates the client's token BEFORE any source work, runs the
+    * `Bounded` or `Unbounded` strategy and builds the
+    * `Graft-Scan-Limit`/`Graft-Next` headers. `source` gives the
     * relation and its filter-mark predicate; `render` turns the result
     * page into JSON values. */
   private def page(p: Map[String, String], bounded: Boolean, spec: CursorSpec)
                   (source: => (DataFrame, Column))
                   (render: Seq[Row] => Seq[String]): (String, Map[String, String]) = {
     val (scanLimit, maxLimit) = budgets()
-    val limit = math.min(intParam(p, "limit").getOrElse(Api.DefaultLimit), maxLimit)
+    val asked = intParam(p, "limit").getOrElse(Api.DefaultLimit)
+    // a page holds at least one row: an empty one has no last row to resume after
+    if (asked < 1) throw Api.ApiError(400, s"invalid limit: $asked")
+    val limit = math.min(asked, maxLimit)
     val cont = continuation(p, spec)
     val (src, pred) = source
     val (rows, next) =

@@ -177,8 +177,10 @@ object Dto {
     "requestKey" -> jsonValue(get(r, "requestkey")),
     "idx"        -> jsonValue(get(r, "idx"))))
 
-  /** TransferDetail from an [[graft.operators.AccountHistory.transfersOf]]
-    * row (Server.hs:534-545): from/to are the STORED ledger values, the
+  /** TransferDetail from a decorated transfer row, as
+    * [[graft.operators.AccountHistory.decoratePage]] and
+    * [[graft.operators.AccountHistory.transfersOf]] return them
+    * (Server.hs:534-545): from/to are the STORED ledger values, the
     * x-chain resolution rides in crossChainAccount/crossChainId, and
     * amount is the reference's StringEncoded scientific — a JSON string. */
   def transferDetail(r: Row): String = obj(Seq(

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.AccountHistory
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end flagship slice (SURVEY §7.1.4): ingest fixture → 6 tables →
@@ -84,6 +85,98 @@ class AccountHistorySpec extends AnyFunSuite with SparkSpec {
     val ph = spark.read.parquet(s"$dir/blocks")
       .filter($"hash" === "blk1").select("powhash").collect().head.getString(0)
     assert(ph === "358ca6")
+  }
+
+  /** blk0t: an orphan twin of blk1 at the same height, with a hash that
+    * sorts before it, carrying the same txs except that rk1 failed there. */
+  private def failedTwin(json: String) = json.replace("\"hash\":\"blk1\"", "\"hash\":\"blk0t\"")
+    .replace("\"payloadHash\":\"ph1\"", "\"payloadHash\":\"ph0t\"")
+    .replace("\"status\":\"success\",\"data\":{\"ok\":true}", "\"status\":\"failure\",\"data\":{\"ok\":true}")
+
+  private val header3 = Fixtures.header2.replace("\"hash\":\"blk2\"", "\"hash\":\"blk3\"")
+    .replace("\"height\":101", "\"height\":102").replace("\"payloadHash\":\"ph2\"", "\"payloadHash\":\"ph3\"")
+
+  /** Block 3: rk5 has no events and no signers; rk6 receives from chain 0
+    * but its first X_RESUME names another receiver; rk7 sends cross-chain
+    * with a TRANSFER_XCHAIN whose sender is not the transfer's. */
+  private val payload3 = {
+    def tx(rk: String, payload: String, signers: String, sigs: String, events: String) =
+      s"""{"requestKey":"$rk","cmd":{"payload":$payload,"signers":[$signers],"nonce":"n-$rk",""" +
+      s""""meta":{"chainId":"3","sender":"eve","gasLimit":500,"gasPrice":1.0e-5,"ttl":600,"creationTime":1600000300}},""" +
+      s""""sigs":[$sigs],"result":{"gas":4,"status":"success","data":"ok","txId":11,"logs":"l-$rk",""" +
+      s""""continuation":null,"events":[$events]}}"""
+    def ev(module: String, name: String, params: String) =
+      s"""{"name":"$name","module":{"namespace":null,"name":"$module"},"moduleHash":"mh","params":$params}"""
+    val signer = """{"pubKey":"pkG","scheme":"ED25519","caps":[]}"""
+    val resume = """{"cont":{"pactId":"rk3","rollback":false,"step":1,"data":{},"proof":"pf3"}}"""
+    val txs = Seq(
+      tx("rk5", """{"exec":{"code":"(free.noop)","data":{}}}""", "", "", ""),
+      tx("rk6", resume, signer, """{"sig":"sigG"}""", Seq(
+        ev("pact", "X_RESUME", """["0","coin.transfer-crosschain",["alice","zed","1.0"]]"""),
+        ev("pact", "X_RESUME", """["0","coin.transfer-crosschain",["alice","eve","2.0"]]"""),
+        ev("coin", "TRANSFER", """["","eve",{"decimal":"2.0"}]""")).mkString(",")),
+      tx("rk7", """{"exec":{"code":"(coin.transfer-crosschain)","data":{}}}""", signer, """{"sig":"sigH"}""", Seq(
+        ev("coin", "TRANSFER_XCHAIN", """["bob","eve",{"decimal":"1.0"},"2"]"""),
+        ev("coin", "TRANSFER", """["alice","",{"decimal":"1.0"}]""")).mkString(",")))
+    s"""{"payloadHash":"ph3","minerData":{"account":"miner2","publicKeys":["k3"]},""" +
+    s""""transactions":[${txs.mkString(",")}],"coinbase":{"gas":0,"status":"success","events":[""" +
+    ev("coin", "TRANSFER", """["","miner3",0.98]""") + "]}}"
+  }
+
+  private def edgeChain(): String = Fixtures.ingest(spark,
+    Fixtures.header1 -> Fixtures.payload1, failedTwin(Fixtures.header1) -> failedTwin(Fixtures.payload1),
+    Fixtures.header2 -> Fixtures.payload2, header3 -> payload3)
+
+  test("TxDetail rows equal the join plan's for every request key: orphan " +
+       "twins, continuations, failed txs, a tx without events or signers, " +
+       "an unknown key") {
+    import graft.operators.TxDetail
+    val dir = edgeChain()
+    val keys = graft.sources.Snapshots.readPinned(spark, s"$dir/transactions")
+      .select("requestkey").distinct().collect().map(_.getString(0)).sorted.toSeq :+ "unknown"
+    assert(keys === Seq("rk1", "rk2", "rk3", "rk4", "rk5", "rk6", "rk7", "unknown"))
+    for (rk <- keys) {
+      val (all, one) = (TxDetail.lookup(spark, dir, rk), TxDetail.lookupOne(spark, dir, rk))
+      assert(all.schema.catalogString === JoinPlanOracles.lookup(spark, dir, rk).schema.catalogString)
+      assert(all.collect().toSeq === JoinPlanOracles.lookup(spark, dir, rk).collect().toSeq, rk)
+      assert(one.collect().toSeq === JoinPlanOracles.lookupOne(spark, dir, rk).collect().toSeq, rk)
+    }
+    def blocks(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getAs[String]("block")).toSeq
+    assert(blocks(TxDetail.lookup(spark, dir, "rk1")) === Seq("blk0t", "blk1"))
+    assert(blocks(TxDetail.lookupOne(spark, dir, "rk1")) === Seq("blk1")) // the successful copy
+    val rk5 = TxDetail.lookup(spark, dir, "rk5").collect().head
+    assert(rk5.isNullAt(rk5.fieldIndex("events")) && rk5.isNullAt(rk5.fieldIndex("signers")))
+    assert(TxDetail.lookup(spark, dir, "unknown").collect().isEmpty)
+  }
+
+  test("decoratePage equals the join plan's decoration on every page of " +
+       "every account with a cross-chain leg") {
+    import graft.plans.BoundedScan
+    val dir = edgeChain()
+    val legs = graft.sources.Snapshots.readPinned(spark, s"$dir/transfers")
+      .filter(col("from_acct") === "" || col("to_acct") === "").collect()
+    val accounts = legs.flatMap(r => Seq(r.getAs[String]("from_acct"), r.getAs[String]("to_acct")))
+      .filter(_.nonEmpty).distinct.sorted.toSeq
+    assert(accounts === Seq("alice", "eve", "miner1", "miner2", "miner3"))
+    val spec = BoundedScan.CursorSpec(
+      Seq("height" -> true, "requestkey" -> true, "idx" -> false, "block" -> true))
+    val resolved = scala.collection.mutable.Set.empty[String]
+    for (acct <- accounts; limit <- Seq(1, 2, 3)) {
+      var cont: Option[BoundedScan.Continuation] = None
+      var pages = 0
+      do {
+        val (page, next) = BoundedScan.performBoundedScan(AccountHistory.source(spark, dir, acct),
+          spec, AccountHistory.predicate("coin"), 1000, limit, cont)
+        val got = AccountHistory.decoratePage(spark, dir, page)
+        assert(got === JoinPlanOracles.decoratePage(spark, dir, page), s"$acct limit=$limit page $pages")
+        got.filter(_.getAs[String]("xchain_acct") != null).foreach(r => resolved += r.getAs[String]("requestkey"))
+        cont = next
+        pages += 1
+      } while (cont.isDefined && pages < 20)
+    }
+    // outbound (rk3) and inbound (rk4) legs resolve; rk6's first X_RESUME
+    // and rk7's TRANSFER_XCHAIN name other accounts, coinbase rows never
+    assert(resolved === Set("rk3", "rk4"))
   }
 
   test("schema check + maintenance pass over ingested tables") {

@@ -353,6 +353,47 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     } finally api.stop()
   }
 
+  test("a tx detail is one Spark job; an account page runs one more for its " +
+       "cross-chain legs") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      val urls = Seq("/txs/tx/rk1", "/txs/txs/rk1", "/txs/account/alice", "/txs/account/bob")
+      urls.foreach(u => assert(get(base + u).statusCode() === 200, u)) // warm the memo and index
+      def jobsOf(u: String): (Int, String) = {
+        var body = ""
+        val jobs = JobWindow(spark) { body = get(base + u).body() }
+        (jobs.size, body)
+      }
+      val (tx, txBody) = jobsOf(urls(0))
+      assert(txBody.contains("\"pubKey\":\"pkA\"") && txBody.contains("\"name\":\"coin.TRANSFER\""), txBody)
+      assert(tx === 1)
+      assert(jobsOf(urls(1))._1 === 1)
+      // alice's rk3 transfer is an outbound leg, resolved to eve
+      val (legs, acctBody) = jobsOf(urls(2))
+      assert(acctBody.contains("\"crossChainAccount\":\"eve\""), acctBody)
+      assert(legs === 2)
+      assert(jobsOf(urls(3))._1 === 1)
+    } finally api.stop()
+  }
+
+  test("a limit below 1 is a 400 on every paging endpoint, under both strategies") {
+    val dir = Fixtures.ingest(spark, Fixtures.header1 -> Fixtures.payload1)
+    val api = new Api(spark, sf, 0, tablesDir = Some(dir))
+    api.start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      for (path <- Seq("/txs/search?search=coin&", "/txs/events?search=TRANSFER&", "/txs/account/alice?");
+           limit <- Seq(0, -1); strategy <- Seq("Bounded", "Unbounded")) {
+        val r = getH(s"$base${path}limit=$limit", "Chainweb-Execution-Strategy" -> strategy)
+        assert(r.statusCode() === 400, s"$strategy $path limit=$limit: ${r.body()}")
+        assert(r.body() === s"""{"error":"invalid limit: $limit"}""")
+      }
+    } finally api.stop()
+  }
+
   test("event pages carry each block's creationtime: orphan twins, a block " +
        "ingested after the first request, and a hash outside the index") {
     import spark.implicits._

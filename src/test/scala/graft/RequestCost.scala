@@ -30,8 +30,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * times in turn for the warm mean. Per page it prints the first visit's
   * jobs started, compiles (`CodegenMetrics.METRIC_COMPILATION_TIME` count)
   * and compile milliseconds (`CodeGenerator.compileTime`), then the same
-  * three as warm means. A job counts for a request when it starts inside
-  * the request's [[JobWindow]], so the count needs no job group. */
+  * three as warm means per request (a path given twice, as a replayed
+  * mix repeats sessions, is averaged over both). A job counts for a
+  * request when it starts inside the request's [[JobWindow]], so the
+  * count needs no job group. */
 object RequestCost {
   /** Pages walked per session: its first page and the next ones. */
   val SessionPages = 4
@@ -78,14 +80,15 @@ object RequestCost {
       }
       val pages = first.map(_._1)
       pages.foreach(measure)
+      // a page listed more than once is measured once per listing and rep
       val warm = (for (_ <- 1 to reps; pg <- pages) yield pg -> measure(pg)._1)
-        .groupMapReduce(_._1)(_._2)(_ + _)
+        .groupMap(_._1)(_._2)
       println("page\tfirst_jobs\tfirst_compiles\tfirst_compile_ms\t" +
               "jobs/request\tcompiles/request\tcompile_ms/request")
       for ((pg, f) <- first) {
-        val w = warm(pg)
+        val (w, n) = (warm(pg).reduce(_ + _), warm(pg).size.toDouble)
         println(f"$pg\t${f.jobs}\t${f.compiles}\t${f.compileNs / 1e6}%.1f\t" +
-                f"${w.jobs.toDouble / reps}%.2f\t${w.compiles.toDouble / reps}%.2f\t${w.compileNs / 1e6 / reps}%.1f")
+                f"${w.jobs / n}%.2f\t${w.compiles / n}%.2f\t${w.compileNs / 1e6 / n}%.1f")
       }
     } finally {
       api.stop()
